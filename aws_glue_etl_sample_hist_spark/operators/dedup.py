@@ -20,9 +20,12 @@ Scale design notes
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from . import _local
 from ._cache import tracked_persist
+from ._local import arrow_local_frame, fetch_bounded
 from .text import tokens, word_shingles
 
 
@@ -169,34 +172,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "size_a", "size_b", "jaccard")
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    num_hashes: int = 12,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_df: int | None = None,
-) -> DataFrame:
-    """MinHash signature rows (doc_id, h(hash index), min_hash value).
-
-    Hash family: h_i(s) = int(md5(i || ':' || s)[:8 hex]) -- seedless,
-    portable (DuckDB: CAST('0x'||substr(md5(..),1,8) AS BIGINT)). The
-    (doc, shingle) set explodes by num_hashes; map-side partial min keeps the
-    shuffle at |docs| x num_hashes rows regardless of document length.
-    """
-    wide = _minhash_wide(docs, num_hashes, shingle_n, text_col, id_col, max_df)
-    sig_structs = F.array(
-        *[
-            F.struct(F.lit(i).cast("int").alias("h"), F.col(f"mh{i}").alias("min_hash"))
-            for i in range(num_hashes)
-        ]
-    )
-    return wide.select("doc_id", F.explode(sig_structs).alias("s")).select(
-        "doc_id", F.col("s.h").alias("h"), F.col("s.min_hash").alias("min_hash")
     )
 
 
@@ -538,27 +513,6 @@ def contamination_flags_bloom(
     )
 
 
-def _exact_id_list(series, name: str) -> list:
-    """Exact-int extraction from a toPandas() id column (ADVICE r11):
-    a NaN-bearing int64 column has no plain-pandas dtype, so pandas
-    silently coerces to float64 and `tolist()` hands back floats --
-    which then fail (or worse, mislabel) against the LongType schema
-    the local-CC result is rebuilt with. Null ids are a broken graph,
-    not a representable input: fail loudly, and re-cast any float64
-    drift back to exact int64 (values are known-integral once nulls
-    are excluded, since the source columns are integer-typed in Spark)."""
-    if series.isna().any():
-        raise ValueError(
-            f"connected-components local dispatch: null {name} id in "
-            "fetched graph frame (ids must be non-null integers)"
-        )
-    import pandas.api.types as ptypes
-
-    if ptypes.is_float_dtype(series):
-        series = series.astype("int64")
-    return series.tolist()
-
-
 def _cc_local_rows(
     seed_ids: list, edge_list: list[tuple]
 ) -> list[tuple]:
@@ -612,7 +566,6 @@ def connected_components(
     node_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
     max_iterations: int = 50,
-    local_threshold: int | None = None,
     dispatch_log: dict | None = None,
 ) -> DataFrame:
     """Min-label connected components over near-dup candidate pairs:
@@ -636,89 +589,53 @@ def connected_components(
     lineage to the materialized blocks; on a real cluster prefer a reliable
     `checkpoint()` dir if executor loss must be survivable mid-loop.
 
-    Adaptive dispatch (``local_threshold``, the unigram trainer's
-    bounded-calibration pattern): when set and the materialized graph is
-    small (<= local_threshold nodes AND <= 8x that many oriented edges),
-    the iterative loop's ~8 sub-second driver-coordinated Spark jobs are
-    replaced by ONE bounded fetch + a driver-local union-find
-    (_cc_local_rows, provably the same fixpoint). Driver-memory honesty
-    (ADVICE r10, second round): the fetch goes through Arrow/pandas
-    (`limit(n+1).toPandas()`), NOT `.collect()` -- PySpark Row objects
-    cost hundreds of bytes each, which silently turned a "few MB of
-    longs" claim into potential hundreds of MB; int64 pandas columns
-    make the real bound ~16 B/row, so the 100k-node default is
-    <= ~15 MB of driver memory including the 800k-edge cap. (A 10k
-    default was tried first and regressed the sf1 incremental merges
-    2x: their contracted graphs run ~50k nodes, which the distributed
-    loop then paid ~8 job rounds for -- SCALING.md round-11 note.)
-    That is the contracted-merge shape of incremental CC maintenance,
-    where the loop's input is |clusters| + |batch| nodes by construction
-    and job-scheduling overhead dominates the wall. Above the threshold
-    the distributed path runs unchanged; counting is free because both
-    frames are already localCheckpoint-materialized."""
+    Local dispatch: when the seed frame fits ``LOCAL_CAP`` rows and the
+    symmetrized edges fit 8x that, the iterative loop's ~8 sub-second
+    driver-coordinated Spark jobs are replaced by ONE bounded fetch per
+    frame + a driver-local union-find (_cc_local_rows, provably the same
+    fixpoint). That is the contracted-merge shape of incremental CC
+    maintenance, where the loop's input is |clusters| + |batch| nodes by
+    construction and job-scheduling overhead dominates the wall. Above the
+    cap the distributed path runs unchanged."""
     a, b = pair_cols
     e1 = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     edges_plan = e1.union(
         pairs.select(F.col(b).alias("src"), F.col(a).alias("dst"))
     )
     seeds = nodes.select(F.col(node_col).alias("node"))
-    if local_threshold is not None:
-        # fused size-probe + fetch: limit(threshold + 1).collect() is ONE
-        # bounded job that either hands back the whole frame (<= threshold
-        # rows, driver memory bounded by construction) or proves it is too
-        # big -- replacing a count job followed by a collect job. Edges go
-        # through a persist so the single pair-generation evaluation is
-        # shared with the distributed fallback; the local path never pays
-        # a checkpoint pass at all.
-        seed_pdf = seeds.limit(local_threshold + 1).toPandas()
-        if len(seed_pdf) <= local_threshold:
-            edge_cap = 8 * local_threshold
-            edges_c = edges_plan.persist()
-            edge_pdf = edges_c.limit(edge_cap + 1).toPandas()
-            if len(edge_pdf) <= edge_cap:
-                from pyspark.sql import types as T
-
-                if dispatch_log is not None:
-                    dispatch_log["cc_path"] = "driver_local"
-                    dispatch_log["cc_nodes"] = len(seed_pdf)
-                    dispatch_log["cc_edges"] = len(edge_pdf)
-                rows = _cc_local_rows(
-                    _exact_id_list(seed_pdf["node"], "node"),
-                    list(
-                        zip(
-                            _exact_id_list(edge_pdf["src"], "src"),
-                            _exact_id_list(edge_pdf["dst"], "dst"),
-                        )
-                    ),
-                )
-                edges_c.unpersist()
-                ntype = nodes.schema[node_col].dataType
-                schema = T.StructType(
+    seed_pdf = fetch_bounded(seeds, _local.LOCAL_CAP, ids=("node",))
+    if seed_pdf is None:
+        edges = edges_plan.localCheckpoint(eager=True)
+    else:
+        # the persist shares the single pair-generation evaluation with the
+        # distributed fallback; the local path never pays a checkpoint pass
+        edges_c = edges_plan.persist()
+        edge_pdf = fetch_bounded(
+            edges_c, 8 * _local.LOCAL_CAP, ids=("src", "dst")
+        )
+        if edge_pdf is not None:
+            if dispatch_log is not None:
+                dispatch_log["cc_path"] = "driver_local"
+                dispatch_log["cc_nodes"] = len(seed_pdf)
+                dispatch_log["cc_edges"] = len(edge_pdf)
+            rows = _cc_local_rows(
+                seed_pdf["node"].tolist(),
+                list(edge_pdf.itertuples(index=False, name=None)),
+            )
+            edges_c.unpersist()
+            ntype = nodes.schema[node_col].dataType
+            return arrow_local_frame(
+                nodes.sparkSession,
+                rows,
+                T.StructType(
                     [
                         T.StructField(node_col, ntype),
                         T.StructField("cluster_id", ntype),
                     ]
-                )
-                # pandas/Arrow conversion + ONE partition (r14, guide §4/§6):
-                # a list-backed createDataFrame is a Python-RDD local
-                # relation -- every downstream action (per-batch label
-                # writes in the streaming merge, the incremental row's
-                # final plan) re-evaluates it through ~defaultParallelism
-                # Python worker launches, measured ~2.6 vs ~0.2 s warm on
-                # the write path; ids on this path are guaranteed exact
-                # int64 (_exact_id_list), so the Arrow path is lossless
-                import pandas as pd
-
-                pdf = pd.DataFrame(rows, columns=[node_col, "cluster_id"])
-                return (
-                    nodes.sparkSession.createDataFrame(pdf, schema).coalesce(1)
-                )
-            edges = edges_c.localCheckpoint(eager=True)
-            edges_c.unpersist()
-        else:
-            edges = edges_plan.localCheckpoint(eager=True)
-    else:
-        edges = edges_plan.localCheckpoint(eager=True)
+                ),
+            )
+        edges = edges_c.localCheckpoint(eager=True)
+        edges_c.unpersist()
     if dispatch_log is not None and "cc_path" not in dispatch_log:
         dispatch_log["cc_path"] = "distributed"
     labels = seeds.withColumn("label", F.col("node")).localCheckpoint(
@@ -846,21 +763,16 @@ def dedup_clusters(
     id_col: str = "doc_id",
     max_df: int | None = None,
     algorithm: str = "minlabel",
-    local_threshold: int | None = 100_000,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Full near-dup resolution: n-gram Jaccard pairs -> connected components
     -> keeper flag (cluster representative = min doc_id). The output one
     would anti-join against the corpus to drop near-duplicates.
 
-    ``local_threshold`` (r14): forwards the minlabel backend's adaptive
-    dispatch -- a materialized graph under the threshold runs ONE bounded
-    Arrow fetch + driver-local union-find instead of ~8 driver-coordinated
-    jobs per loop (same fixpoint, dual-path agreement property-tested; the
-    incremental merge has shipped this dispatch since r10). The decision is
-    data-sized at run time: a 100 TB corpus always exceeds it and takes the
-    distributed loop unchanged. The star backend has no local twin (its
-    value IS the distributed round shape), so the knob is ignored there.
+    The minlabel backend takes connected_components' size-adaptive local
+    dispatch (same fixpoint, dual-path agreement property-tested); the
+    star backend has no local twin (its value IS the distributed round
+    shape).
 
     ``max_df`` forwards to the candidate generation: at scale the composed
     path MUST set it, or one corpus-wide shingle turns candidate generation
@@ -886,7 +798,6 @@ def dedup_clusters(
             docs,
             pairs.select("doc_a", "doc_b"),
             node_col=id_col,
-            local_threshold=local_threshold,
         )
     else:
         cc = connected_components_star(
@@ -1555,7 +1466,6 @@ def connected_components_incremental(
     *,
     node_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
-    local_threshold: int | None = 100_000,
     dispatch_log: dict | None = None,
 ) -> DataFrame:
     """Merge a NEW edge batch into an existing components labeling without
@@ -1609,14 +1519,6 @@ def connected_components_incremental(
         contracted_nodes,
         mapped,
         node_col=node_col,
-        # the contracted graph is |clusters| + |batch| nodes by
-        # construction -- at daily-crawl scale usually thousands, where
-        # the iterative loop's per-round job overhead dominates; under
-        # the threshold ONE collect + driver-local union-find replaces
-        # ~8 driver-coordinated jobs per merge (same fixpoint, dual-path
-        # agreement property-tested). Above it the distributed loop runs
-        # unchanged.
-        local_threshold=local_threshold,
         dispatch_log=dispatch_log,
     )
     lbl_map = merged.select(

@@ -16,9 +16,12 @@ from __future__ import annotations
 from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from . import _local
 from ._cache import tracked_persist
+from ._local import arrow_local_frame, fetch_bounded
 
 
 def _round_half_up(x: float, scale: int) -> float:
@@ -41,37 +44,14 @@ def _round_half_up(x: float, scale: int) -> float:
     )
 
 
-def _fetch_edges_local(
-    edges: DataFrame, cap: int, cols: tuple[str, str, str]
-):
-    """Bounded edge fetch for the adaptive local dispatch (the
-    connected-components pattern): ONE ``limit(cap + 1).toPandas()`` job
-    either hands back the whole (already persisted) edge frame -- driver
-    memory bounded by construction, Arrow path not Row objects -- or
-    proves it is too big (returns None). Null endpoints are a broken
-    graph upstream; raise rather than silently mis-ranking. Weights get
-    the same guard (ADVICE r14): a null weight becomes NaN through
-    pandas and would silently poison every local rank, where the
-    distributed path's F.sum simply drops the null contribution -- a
-    silent local-vs-distributed divergence on exactly the broken input
-    this helper exists to refuse."""
-    import numpy as np
-
-    pdf = edges.select(*cols).limit(cap + 1).toPandas()
-    if len(pdf) > cap:
-        return None
-    if pdf[cols[0]].isna().any() or pdf[cols[1]].isna().any():
-        raise ValueError(
-            "graph local dispatch: null src/dst id in the edge frame"
-        )
-    w = pdf[cols[2]].astype("float64", copy=False)
-    if not np.isfinite(w.to_numpy()).all():
-        raise ValueError(
-            "graph local dispatch: null/NaN/inf weight in the edge frame"
-        )
-    return list(
-        zip(pdf[cols[0]].tolist(), pdf[cols[1]].tolist(), pdf[cols[2]].tolist())
+def _local_edges(edges: DataFrame, src: str, dst: str, weight: str):
+    """The row tuples of the (src, dst, weight) frame ``edges`` when it fits
+    ``LOCAL_CAP`` rows, else None (the caller then runs distributed). Null
+    endpoints or a null/NaN/inf weight raise rather than mis-rank."""
+    pdf = fetch_bounded(
+        edges, _local.LOCAL_CAP, ids=(src, dst), finite=(weight,)
     )
+    return None if pdf is None else list(pdf.itertuples(index=False, name=None))
 
 
 def _pagerank_local_rows(
@@ -85,6 +65,8 @@ def _pagerank_local_rows(
     operator's oracle already rests on."""
     nodes = sorted({u for u, _, _ in edge_list} | {v for _, v, _ in edge_list})
     n = len(nodes)
+    if n == 0:
+        return []
     outw: dict = {}
     for u, _, w in edge_list:
         outw[u] = outw.get(u, 0.0) + float(w)
@@ -119,6 +101,8 @@ def _pagerank_converged_local_rows(
     jobs. Returns (rows, n_rounds)."""
     nodes = sorted({u for u, _, _ in edge_list} | {v for _, v, _ in edge_list})
     n = len(nodes)
+    if n == 0:
+        return [], 0
     outw: dict = {}
     for u, _, w in edge_list:
         outw[u] = outw.get(u, 0.0) + float(w)
@@ -184,23 +168,6 @@ def _label_prop_local_rows(
     return [(u, label[u]) for u in nodes]
 
 
-def _local_graph_result(
-    edges: DataFrame, rows: list[tuple], schema_cols: list[tuple]
-) -> DataFrame:
-    """Arrow-backed single-partition result frame for a local dispatch
-    (the connected-components pattern): a list-backed createDataFrame is a
-    Python-RDD local relation that re-pays Python worker launches on every
-    downstream action; the pandas path is evaluated once."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField(name, dtype) for name, dtype in schema_cols]
-    )
-    pdf = pd.DataFrame(rows, columns=[name for name, _ in schema_cols])
-    return edges.sparkSession.createDataFrame(pdf, schema).coalesce(1)
-
-
 def weighted_pagerank(
     edges: DataFrame,
     *,
@@ -209,7 +176,6 @@ def weighted_pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "weight",
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Weighted PageRank over an edge list: ``n_iter`` rounds of
     r'(v) = (1-d)/n + d * sum over u->v of r(u) * w(u,v) / outw(u),
@@ -236,37 +202,28 @@ def weighted_pagerank(
     that subtree is a fact-scale join+agg, and the plan audit measured it
     recomputed ~5x per call (144 duplicate scans in one plan).
 
-    ``local_threshold`` (r14, the connected-components adaptive-dispatch
-    pattern): when set and the materialized edge frame has <= that many
+    Local dispatch: when the materialized edge frame fits ``LOCAL_CAP``
     rows, the n_iter message-passing rounds -- each otherwise one shuffle
     join + one agg + driver barriers -- are replaced by ONE bounded Arrow
     fetch and a driver-local twin of the identical recurrence
     (_pagerank_local_rows: same 12-dp HALF_UP per-round quantization, so
     the values are the ones the distributed loop and the SQL oracle
-    produce). The fetch is limit(cap+1).toPandas() off the already-
-    persisted edge frame -- ~40 B/edge, and the probe itself proves the
-    bound before anything is pulled. Contracted/aggregated graphs (nation-
-    level trade, cluster summaries) are exactly this shape; above the cap
-    the distributed path runs unchanged."""
+    produce). Contracted/aggregated graphs (nation-level trade, cluster
+    summaries) are exactly this shape; above the cap the distributed path
+    runs unchanged."""
     edges = tracked_persist(edges.select(src, dst, weight))
-    if local_threshold is not None:
-        edge_list = _fetch_edges_local(
-            edges, local_threshold, (src, dst, weight)
-        )
-        if edge_list is not None:
-            rows = _pagerank_local_rows(
-                edge_list, n_iter=n_iter, damping=damping
-            )
-            from pyspark.sql import types as T
-
-            return _local_graph_result(
-                edges,
-                rows,
+    edge_list = _local_edges(edges, src, dst, weight)
+    if edge_list is not None:
+        return arrow_local_frame(
+            edges.sparkSession,
+            _pagerank_local_rows(edge_list, n_iter=n_iter, damping=damping),
+            T.StructType(
                 [
-                    ("node", edges.schema[src].dataType),
-                    ("rank", T.DoubleType()),
-                ],
-            )
+                    T.StructField("node", edges.schema[src].dataType),
+                    T.StructField("rank", T.DoubleType()),
+                ]
+            ),
+        )
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
@@ -312,7 +269,6 @@ def weighted_pagerank_converged(
     src: str = "src",
     dst: str = "dst",
     weight: str = "weight",
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Production-parity weighted PageRank: dangling-node mass is
     REDISTRIBUTED uniformly (the true stochastic-matrix model, so ranks
@@ -363,36 +319,33 @@ def weighted_pagerank_converged(
     # re-execute it otherwise (the registered row's fact-scale join+agg ran
     # ~5x per call -- 74 duplicate scans in the audited plan)
     edges = tracked_persist(edges.select(src, dst, weight))
-    # adaptive local dispatch (r14, the CC pattern -- see weighted_pagerank):
-    # a convergence loop is the job-count-heaviest shape in the engine
-    # (per check: one keyed shuffle round + a bounded collect + periodic
-    # eager checkpoints); when the materialized graph fits the cap, ONE
-    # bounded Arrow fetch + _pagerank_converged_local_rows runs the
-    # IDENTICAL quantized recurrence (including the check_every batching
-    # semantics and the Python-round dangling seed) with zero Spark jobs.
-    if local_threshold is not None:
-        edge_list = _fetch_edges_local(
-            edges, local_threshold, (src, dst, weight)
+    # local dispatch (see weighted_pagerank): a convergence loop is the
+    # job-count-heaviest shape in the engine (per check: one keyed shuffle
+    # round + a bounded collect + periodic eager checkpoints); when the
+    # materialized graph fits the cap, _pagerank_converged_local_rows runs
+    # the IDENTICAL quantized recurrence (including the check_every
+    # batching semantics and the Python-round dangling seed) with zero
+    # Spark jobs after the one bounded fetch.
+    edge_list = _local_edges(edges, src, dst, weight)
+    if edge_list is not None:
+        rows, rounds = _pagerank_converged_local_rows(
+            edge_list,
+            damping=damping,
+            eps=eps,
+            max_iter=max_iter,
+            check_every=check_every,
         )
-        if edge_list is not None:
-            rows, rounds = _pagerank_converged_local_rows(
-                edge_list,
-                damping=damping,
-                eps=eps,
-                max_iter=max_iter,
-                check_every=check_every,
-            )
-            from pyspark.sql import types as T
-
-            return _local_graph_result(
-                edges,
-                [(u, r, rounds) for u, r in rows],
+        return arrow_local_frame(
+            edges.sparkSession,
+            [(u, r, rounds) for u, r in rows],
+            T.StructType(
                 [
-                    ("node", edges.schema[src].dataType),
-                    ("rank", T.DoubleType()),
-                    ("n_rounds", T.LongType()),
-                ],
-            )
+                    T.StructField("node", edges.schema[src].dataType),
+                    T.StructField("rank", T.DoubleType()),
+                    T.StructField("n_rounds", T.LongType()),
+                ]
+            ),
+        )
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
@@ -501,7 +454,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     weight: str = "weight",
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Weighted synchronous label propagation (Raghavan et al. 2007)
     community detection -- the cheap communities primitive beside
@@ -523,22 +475,21 @@ def label_propagation(
     # subtree through it (168 duplicate scans in the audited plan of the
     # registered trade-graph row); nodes joins into every round's output.
     # Both are graph-sized -- the same footprint pagerank already persists.
-    # adaptive local dispatch (r14, the CC pattern -- see weighted_pagerank):
-    # each round is one shuffle join + one agg + one per-node window; a
-    # cap-bounded graph instead runs _label_prop_local_rows, the identical
-    # 6-dp-quantized argmax recurrence, off ONE bounded Arrow fetch.
-    if local_threshold is not None:
-        edges_p = tracked_persist(edges.select(src, dst, weight))
-        edge_list = _fetch_edges_local(
-            edges_p, local_threshold, (src, dst, weight)
+    # local dispatch (see weighted_pagerank): each round is one shuffle
+    # join + one agg + one per-node window; a cap-bounded graph instead
+    # runs _label_prop_local_rows, the identical 6-dp-quantized argmax
+    # recurrence, off ONE bounded Arrow fetch.
+    edges = tracked_persist(edges.select(src, dst, weight))
+    edge_list = _local_edges(edges, src, dst, weight)
+    if edge_list is not None:
+        ntype = edges.schema[src].dataType
+        return arrow_local_frame(
+            edges.sparkSession,
+            _label_prop_local_rows(edge_list, n_iter=n_iter),
+            T.StructType(
+                [T.StructField("node", ntype), T.StructField("label", ntype)]
+            ),
         )
-        if edge_list is not None:
-            rows = _label_prop_local_rows(edge_list, n_iter=n_iter)
-            ntype = edges_p.schema[src].dataType
-            return _local_graph_result(
-                edges_p, rows, [("node", ntype), ("label", ntype)]
-            )
-        edges = edges_p
     sym = tracked_persist(
         edges.select(
             F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")

@@ -112,16 +112,19 @@ def _scaled_quant(table: np.ndarray, quality: int) -> np.ndarray:
 # these were ~10% of per-tile encode time in the batch profile)
 _DC_CODES = _huffman_codes(DC_BITS, DC_VALS)
 _AC_CODES = _huffman_codes(AC_BITS, AC_VALS)
-# quality-scaled quant tables, keyed by quality (callers use one quality
-# for a whole corpus pass)
-_SCALED_QUANT_CACHE: dict[tuple[int, int], np.ndarray] = {}
+# quality-scaled quant tables, keyed by (table name, clamped quality):
+# at most 2 x 100 entries (callers use one quality for a whole corpus pass)
+_BASE_QUANT = {"lum": LUM_QUANT, "chroma": CHROMA_QUANT}
+_SCALED_QUANT_CACHE: dict[tuple[str, int], np.ndarray] = {}
 
 
-def _scaled_quant_cached(table: np.ndarray, quality: int) -> np.ndarray:
-    key = (id(table), int(quality))
+def _scaled_quant_cached(name: str, quality: int) -> np.ndarray:
+    key = (name, min(max(int(quality), 1), 100))
     got = _SCALED_QUANT_CACHE.get(key)
     if got is None:
-        got = _SCALED_QUANT_CACHE.setdefault(key, _scaled_quant(table, quality))
+        got = _SCALED_QUANT_CACHE.setdefault(
+            key, _scaled_quant(_BASE_QUANT[name], key[1])
+        )
     return got
 
 
@@ -195,14 +198,14 @@ def encode_jpeg(pixels, quality: int = 90) -> bytes:
     h, w = arr.shape[:2]
     if grey:
         planes = [arr.astype(np.float64)]
-        quant = [_scaled_quant_cached(LUM_QUANT, quality)]
+        quant = [_scaled_quant_cached("lum", quality)]
         comp_q = [0]
     else:
         ycc = _rgb_to_ycbcr(arr)
         planes = [ycc[..., i] for i in range(3)]
         quant = [
-            _scaled_quant_cached(LUM_QUANT, quality),
-            _scaled_quant_cached(CHROMA_QUANT, quality),
+            _scaled_quant_cached("lum", quality),
+            _scaled_quant_cached("chroma", quality),
         ]
         comp_q = [0, 1, 1]
 
@@ -323,8 +326,10 @@ class _HuffTable:
 
 
 # decoded _HuffTable structures memoized by the DHT segment's raw bytes
-# (guide §4.5); bounded by the number of DISTINCT table definitions a task
-# ever sees (one canonical set for this encoder)
+# (guide §4.5). A corpus from one encoder carries one canonical table set;
+# payloads from outside can carry any number of distinct definitions, so
+# the cache stops admitting new ones at _DHT_CACHE_MAX entries.
+_DHT_CACHE_MAX = 64
 _DHT_CACHE: dict[bytes, _HuffTable] = {}
 
 
@@ -396,17 +401,16 @@ def decode_jpeg(payload: bytes):
                 table = _DHT_CACHE.get(seg)
                 if table is None:
                     vals = list(data[at + 17 : at + 17 + nv])
-                    table = _DHT_CACHE.setdefault(
-                        seg,
-                        _HuffTable(
-                            {
-                                (length, code): sym
-                                for sym, (length, code) in _huffman_codes(
-                                    bits, vals
-                                ).items()
-                            }
-                        ),
+                    table = _HuffTable(
+                        {
+                            (length, code): sym
+                            for sym, (length, code) in _huffman_codes(
+                                bits, vals
+                            ).items()
+                        }
                     )
+                    if len(_DHT_CACHE) < _DHT_CACHE_MAX:
+                        _DHT_CACHE[seg] = table
                 huff[(tc, th)] = table
                 at += 17 + nv
         elif marker == 0xC0:  # SOF0 baseline

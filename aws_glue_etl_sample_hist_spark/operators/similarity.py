@@ -1628,7 +1628,6 @@ def kmeans_parallel_centroids(
     oversample: int | None = None,
     lloyd_iters: int = 10,
     vectorized: bool = False,
-    local_threshold: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     salt: str = "kmpar",
@@ -1662,12 +1661,10 @@ def kmeans_parallel_centroids(
     the default stays fold-exact for the `embedding_kmeans_parallel`
     contract row.
 
-    ``local_threshold`` (r15, guide §5 -- the graph/CC bounded-dispatch
-    pattern): vectorized callers train on a BOUNDED sample by contract
-    (the trained-SemDeDup row caps its training frame at 65 536 rows at
-    ANY corpus scale), so when the training frame fits under the cap --
-    ONE ``limit(cap+1).toPandas()`` probe-and-fetch, ~8 B x d per row
-    through Arrow -- the whole sketch pass runs driver-local
+    Local dispatch (vectorized only): vectorized callers train on a
+    BOUNDED sample by contract, so when the training frame fits
+    ``LOCAL_CAP`` rows -- ONE bounded fetch, ~8 B x d per row through
+    Arrow -- the whole sketch pass runs driver-local
     (_kmeans_parallel_local_frame) instead of ~4 Spark jobs per round
     over a sample-sized frame. Over the cap, or in fold-exact mode
     (whose oracle replays the JVM fold arithmetic the numpy twin cannot
@@ -1684,9 +1681,11 @@ def kmeans_parallel_centroids(
             / F.greatest(norm(F.col(vec_col)), F.lit(1e-12)),
         ).alias("_nv"),
     )
-    if vectorized and local_threshold is not None:
-        pdf = normed_plan.limit(local_threshold + 1).toPandas()
-        if len(pdf) <= local_threshold:
+    if vectorized:
+        from . import _local
+
+        pdf = _local.fetch_bounded(normed_plan, _local.LOCAL_CAP)
+        if pdf is not None:
             return _kmeans_parallel_local_frame(
                 spark, pdf, k, rounds=rounds, l=l,
                 lloyd_iters=lloyd_iters, salt=salt,

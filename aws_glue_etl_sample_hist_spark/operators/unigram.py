@@ -43,6 +43,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import _local
 from .bpe import word_vocab
 
 
@@ -160,8 +161,8 @@ def _estep_counts_local(
 ):
     """Driver-local E-step over an already-collected word-type list --
     the SAME lattice math as _estep_counts without a Spark job per EM
-    round. unigram_train dispatches here when the type table is tiny
-    (see local_em_max_types): at sf0.1 the corpus has ~31 word types, so
+    round. unigram_train dispatches here when the type table fits
+    ``LOCAL_CAP`` rows: at sf0.1 the corpus has ~31 word types, so
     the distributed path's wall was 15 rounds x ~1.2 s of pure
     job-scheduling overhead over a 31-row frame."""
     agg: dict[str, float] = {}
@@ -186,16 +187,15 @@ def unigram_train(
     em_iters: int = 2,
     prune_frac: float = 0.25,
     text_col: str = "text",
-    local_em_max_types: int = 100_000,
 ):
     """Train a unigram-LM tokenizer vocab. Returns (vocab list of (piece,
     prob) sorted by prob desc then piece asc, diagnostics dict with the
     per-round corpus log-likelihoods -- the contract witnesses).
 
     Adaptive E-step dispatch: the corpus is always touched exactly once
-    (the word-type table); when that table holds <= ``local_em_max_types``
-    rows it is collected ONCE (a bounded-calibration collect -- 100k
-    short words is a few MB) and every EM round runs driver-local,
+    (the word-type table); when that table fits ``LOCAL_CAP`` rows it is
+    fetched ONCE (one bounded Arrow job -- 100k short words is a few MB)
+    and every EM round runs driver-local,
     instead of paying one Spark job of scheduling overhead per round
     over a tiny frame. Past the threshold -- the honest 100 TB shape,
     where Heaps' law makes the type table millions of rows -- the
@@ -203,9 +203,10 @@ def unigram_train(
     _word_lattice_into, so the math is identical by construction."""
     words = word_vocab(docs, text_col=text_col).select("word", "freq")
     words = words.persist()
-    local_rows: list[tuple[str, int]] | None = None
-    if words.count() <= local_em_max_types:
-        local_rows = [(r.word, r.freq) for r in words.collect()]
+    pdf = _local.fetch_bounded(words, _local.LOCAL_CAP)
+    local_rows = (
+        None if pdf is None else list(pdf.itertuples(index=False, name=None))
+    )
 
     def estep(lp: dict[str, float]):
         if local_rows is not None:

@@ -1690,15 +1690,8 @@ def q_embedding_semantic_dedup_trained(spark: SparkSession, sf: str) -> DataFram
     # vectorized trainer: the witness contract is quantizer-agnostic, so
     # this row may take the Arrow/BLAS distance passes (~10x on the
     # trainer, which dominated the sf1 wall); the embedding_kmeans_parallel
-    # contract row keeps the fold-exact default. local_threshold (r15,
-    # guide §5): the training frame is <= 65 536 rows BY CONSTRUCTION at
-    # any corpus scale (n_train cap above), so the bounded driver-local
-    # sketch replaces ~4 Spark jobs per k-means|| round; 131 072 = 2x the
-    # cap (hash_sample is binomial around its rate) with the distributed
-    # path as the over-cap fallback.
-    cents = kmeans_parallel_centroids(
-        train, k, vectorized=True, local_threshold=131_072
-    )
+    # contract row keeps the fold-exact default.
+    cents = kmeans_parallel_centroids(train, k, vectorized=True)
     if k > 256:
         import math
 
@@ -4190,12 +4183,6 @@ def q_part_entity_resolution(spark: SparkSession, sf: str) -> DataFrame:
         pairs,
         node_col="p_partkey",
         pair_cols=("id_a", "id_b"),
-        # the size-adaptive dispatch every other CC caller ships (r15 --
-        # this row ran the distributed loop's ~180 driver-coordinated
-        # jobs on a 20k-node graph): under the cap, one bounded Arrow
-        # fetch + driver union-find; a 100 TB part catalog exceeds it
-        # and runs the distributed loop unchanged
-        local_threshold=100_000,
     )
     members = cc.join(
         part.select("p_partkey", "p_retailprice"), "p_partkey"
@@ -4601,13 +4588,7 @@ def q_nations_pagerank(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("weight")
         )
     )
-    # local_threshold (r14): the rank loop runs over the NATION-contracted
-    # graph, <= 25x25 edges by construction at ANY fact scale -- the
-    # fact-scale work is the edge build above, which stays distributed;
-    # the bounded contracted loop dispatches driver-local (the CC pattern)
-    ranks = weighted_pagerank(
-        edges, n_iter=3, damping=0.85, local_threshold=100_000
-    )
+    ranks = weighted_pagerank(edges, n_iter=3, damping=0.85)
     return ranks.select(
         F.col("node").alias("n_name"), F.round("rank", 6).alias("pagerank")
     ).orderBy("n_name")
@@ -4777,13 +4758,7 @@ def q_nations_pagerank_converged(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("weight")
         )
     )
-    # local_threshold (r14): the convergence loop runs over the NATION-
-    # contracted graph (<= 25x25 edges at any fact scale); the fact-scale
-    # edge build stays distributed, the bounded loop dispatches driver-
-    # local -- the job-count-heaviest row drops its per-round barriers
-    ranks = weighted_pagerank_converged(
-        edges, eps=1e-9, max_iter=50, local_threshold=100_000
-    )
+    ranks = weighted_pagerank_converged(edges, eps=1e-9, max_iter=50)
     # node-sized global window (25 nations): the sum-to-one witness
     total = F.sum("rank").over(Window.partitionBy())
     return ranks.select(
@@ -5456,12 +5431,8 @@ def q_dedup_clusters_incremental(spark: SparkSession, sf: str) -> DataFrame:
     new_b = F.col("doc_b") % 10 >= 8
     old_nodes = docs.filter(F.col("doc_id") % 10 < 8).select("doc_id")
     new_nodes = docs.filter(F.col("doc_id") % 10 >= 8).select("doc_id")
-    # the standing build takes the same size-adaptive dispatch the merge
-    # has shipped since r10 (r14): under the threshold, one bounded Arrow
-    # fetch + driver-local union-find replaces ~8 loop jobs; a real corpus
-    # exceeds it and runs the distributed loop unchanged
     old_labels = connected_components(
-        old_nodes, pairs.filter(~new_a & ~new_b), local_threshold=100_000
+        old_nodes, pairs.filter(~new_a & ~new_b)
     )
     inc = connected_components_incremental(
         old_labels, new_nodes, pairs.filter(new_a | new_b)
@@ -5649,11 +5620,7 @@ def q_nations_communities(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("weight")
         )
     )
-    # local_threshold (r14): nation-contracted graph, bounded by
-    # construction -- same adaptive dispatch note as nations_pagerank
-    return label_propagation(
-        edges, n_iter=3, local_threshold=100_000
-    ).select(
+    return label_propagation(edges, n_iter=3).select(
         F.col("node").alias("n_name"), F.col("label").alias("community")
     )
 

@@ -863,7 +863,9 @@ def _stage_slices(df: DataFrame, slice_col, src_dir: str, n: int = 3) -> None:
     exactly n micro-batches; the k=v partition dirs are renamed to the
     readers' s0..s{n-1} layout (a filesystem move, no data pass). The
     partition column is synthetic and dropped by partitionBy, so the
-    staged files carry exactly the input schema."""
+    staged files carry exactly the input schema. A slice value with no
+    rows gets no partition dir; it is staged as one zero-row file with the
+    input schema, so a drain still sees exactly n micro-batches."""
     (
         df.withColumn("_slice", slice_col.cast("int"))
         .repartition(n, "_slice")
@@ -872,9 +874,12 @@ def _stage_slices(df: DataFrame, slice_col, src_dir: str, n: int = 3) -> None:
         .parquet(src_dir)
     )
     for s in range(n):
-        os.rename(
-            os.path.join(src_dir, f"_slice={s}"), os.path.join(src_dir, f"s{s}")
-        )
+        part = os.path.join(src_dir, f"_slice={s}")
+        dest = os.path.join(src_dir, f"s{s}")
+        if os.path.isdir(part):
+            os.rename(part, dest)
+        else:
+            df.limit(0).coalesce(1).write.parquet(dest)
 
 
 def _local_cluster_merge(
@@ -884,8 +889,6 @@ def _local_cluster_merge(
     old_labels: DataFrame | None,
     pairs: DataFrame,
     arr: DataFrame,
-    *,
-    cap: int = 100_000,
 ):
     """Bounded driver-local twin of ``connected_components_incremental``
     for the streaming merge (r15, guide §5/§2.3): the distinct standing
@@ -904,35 +907,36 @@ def _local_cluster_merge(
     row's from-scratch-recompute oracle re-checks the equality end to
     end.
 
-    Caps (driver-memory honesty, the r14 ADVICE arithmetic): ids through
-    Arrow are ~16 B/row -- ``cap`` nodes plus ``4 * cap`` un-symmetrized
-    edges (union-find needs no orientation, so half the distributed
-    dispatch's symmetrized fetch) is <= ~10 MB at the 100k default.
-    Returns (label_frame, new_cluster_ids, remap, new_final) or None
-    when any bound trips -- the caller then runs the distributed merge
-    unchanged and retires both driver mirrors."""
-    from ..operators._local import arrow_local_frame
-    from ..operators.dedup import _cc_local_rows, _exact_id_list
+    Caps: ``LOCAL_CAP`` nodes plus ``4 * LOCAL_CAP`` un-symmetrized edges
+    (union-find needs no orientation, so half the distributed dispatch's
+    symmetrized fetch). Returns (label_frame, new_cluster_ids, remap,
+    new_final) or None when any bound trips -- the caller then runs the
+    distributed merge unchanged and retires both driver mirrors."""
+    from ..operators import _local
+    from ..operators._local import arrow_local_frame, fetch_bounded
+    from ..operators.dedup import _cc_local_rows
 
-    edge_cap = 4 * cap
-    edge_pdf = pairs.select("src_a", "src_b").limit(edge_cap + 1).toPandas()
-    if len(edge_pdf) > edge_cap:
+    edge_pdf = fetch_bounded(
+        pairs.select("src_a", "src_b"),
+        4 * _local.LOCAL_CAP,
+        ids=("src_a", "src_b"),
+    )
+    if edge_pdf is None:
         return None
-    bid_pdf = arr.select("doc_id").limit(cap + 1).toPandas()
-    if len(bid_pdf) > cap:
+    bid_pdf = fetch_bounded(
+        arr.select("doc_id"), _local.LOCAL_CAP, ids=("doc_id",)
+    )
+    if bid_pdf is None:
         return None
-    batch_ids = _exact_id_list(bid_pdf["doc_id"], "doc_id")
+    batch_ids = bid_pdf["doc_id"].tolist()
     seeds = set(cluster_ids) | set(batch_ids)
-    if len(seeds) > cap:
+    if len(seeds) > _local.LOCAL_CAP:
         return None
     rows = _cc_local_rows(
         sorted(seeds),
         [
             (chase.get(u, u), chase.get(v, v))
-            for u, v in zip(
-                _exact_id_list(edge_pdf["src_a"], "src_a"),
-                _exact_id_list(edge_pdf["src_b"], "src_b"),
-            )
+            for u, v in edge_pdf.itertuples(index=False, name=None)
         ],
     )
     lbl = dict(rows)
@@ -1000,6 +1004,7 @@ def stream_dedup_clusters(
     measured split."""
     import time as _time
 
+    from ..operators import _local
     from ..operators.dedup import connected_components_incremental
 
     _t0 = _time.perf_counter()
@@ -1215,7 +1220,7 @@ def stream_dedup_clusters(
                     new_chase[s] = v
             state["chase"] = new_chase
             state["cluster_ids"] = new_clusters
-            if len(new_chase) > 4 * 100_000:
+            if len(new_chase) > 4 * _local.LOCAL_CAP:
                 # chase-map memory cap (same honesty rule as the fetch
                 # caps): labels already written stay valid -- later
                 # merges just run distributed and ignore row labels

@@ -701,7 +701,7 @@ def main() -> None:
     )
     while True:
         line["queries"] = kept
-        # job counts ride the driver line as INTS for the 12 slowest kept
+        # job counts ride the driver line as INTS for the 10 slowest kept
         # rows at >= 2 s only (VERDICT r14 item 2: the full-float
         # all-rows jobs dict ate the line budget and halved the kept rows
         # to 23 -- the kept-ROW count now has priority over jobs

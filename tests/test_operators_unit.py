@@ -409,12 +409,15 @@ def test_dedup_clusters_algorithm_knob_identical_labels(spark, sf_oracle):
         dedup_clusters(docs, algorithm="labelprop")
 
 
-def test_dedup_clusters_local_dispatch_identical_labels(spark, sf_oracle):
-    """The r14 size-adaptive dispatch is a performance knob, not a semantic
-    one: dedup_clusters under the default local_threshold (driver-local
+def test_dedup_clusters_local_dispatch_identical_labels(
+    spark, sf_oracle, monkeypatch
+):
+    """The size-adaptive dispatch is a performance choice, not a semantic
+    one: dedup_clusters under the default LOCAL_CAP (driver-local
     union-find on this corpus's small contracted graph) must emit the same
-    labels as the forced distributed loop (local_threshold=None)."""
+    labels as the forced distributed loop (LOCAL_CAP = 0)."""
     from aws_glue_etl_sample_hist_spark.catalog import load_table
+    from aws_glue_etl_sample_hist_spark.operators import _local
     from aws_glue_etl_sample_hist_spark.operators.dedup import dedup_clusters
 
     docs = load_table(spark, sf_oracle, "documents")
@@ -422,9 +425,10 @@ def test_dedup_clusters_local_dispatch_identical_labels(spark, sf_oracle):
         (r.doc_id, r.cluster_id, r.is_keeper)
         for r in dedup_clusters(docs, max_df=100).collect()
     }
+    monkeypatch.setattr(_local, "LOCAL_CAP", 0)
     dist = {
         (r.doc_id, r.cluster_id, r.is_keeper)
-        for r in dedup_clusters(docs, max_df=100, local_threshold=None).collect()
+        for r in dedup_clusters(docs, max_df=100).collect()
     }
     assert local == dist
 
@@ -1747,6 +1751,29 @@ def test_jpeg_rejects_out_of_scope_streams():
         decode_jpeg(bytes(enc))
 
 
+def test_jpeg_codec_caches_stay_bounded(monkeypatch):
+    """The codec's driver/worker memos are bounded: the quant-table cache
+    is keyed by table name and clamped quality (at most 2 x 100 entries),
+    and decoding more distinct Huffman table definitions than
+    _DHT_CACHE_MAX leaves the DHT memo at the bound with the same pixels."""
+    import numpy as np
+
+    from aws_glue_etl_sample_hist_spark.operators import jpeg
+
+    img = ((np.mgrid[0:16, 0:16, 0:3].sum(axis=0) * 7) % 256).astype(np.uint8)
+    jpeg.encode_jpeg(img, quality=1000)
+    assert ("lum", 100) in jpeg._SCALED_QUANT_CACHE
+    assert ("chroma", 100) in jpeg._SCALED_QUANT_CACHE
+    enc = jpeg.encode_jpeg(img)
+    want = jpeg.decode_jpeg(enc)
+    monkeypatch.setattr(jpeg, "_DHT_CACHE", {})
+    # one DC + one AC table definition per stream: two distinct ones
+    monkeypatch.setattr(jpeg, "_DHT_CACHE_MAX", 1)
+    for _ in range(2):
+        assert (jpeg.decode_jpeg(enc) == want).all()
+        assert len(jpeg._DHT_CACHE) == 1
+
+
 def test_jpeg_decodes_pil_written_baseline_if_available():
     """Interop slot-in (same pattern as the PIL image-decode stub tests):
     when PIL exists, a PIL-written baseline 4:4:4 JPEG must decode with our
@@ -3041,11 +3068,12 @@ def test_lsh_pair_recall_buckets_and_counts(spark):
     assert sum(v[0] for v in got.values()) >= 3
 
 
-def test_unigram_local_and_distributed_estep_agree(spark):
+def test_unigram_local_and_distributed_estep_agree(spark, monkeypatch):
     """unigram_train's adaptive E-step dispatch: the driver-local fast
     path (type table under the bounded threshold) and the distributed
     Arrow path share _word_lattice_into, so vocab, probs, and the
     LL-witness blocks must agree to float noise."""
+    from aws_glue_etl_sample_hist_spark.operators import _local
     from aws_glue_etl_sample_hist_spark.operators.unigram import (
         unigram_train,
     )
@@ -3056,9 +3084,8 @@ def test_unigram_local_and_distributed_estep_agree(spark):
         "doc_id long, text string",
     )
     v_loc, d_loc = unigram_train(docs, vocab_size=8, seed_size=16)
-    v_dist, d_dist = unigram_train(
-        docs, vocab_size=8, seed_size=16, local_em_max_types=0
-    )
+    monkeypatch.setattr(_local, "LOCAL_CAP", 0)
+    v_dist, d_dist = unigram_train(docs, vocab_size=8, seed_size=16)
     assert [p for p, _ in v_loc] == [p for p, _ in v_dist]
     assert all(
         abs(a - b) < 1e-9 for (_, a), (_, b) in zip(v_loc, v_dist)
@@ -3667,19 +3694,37 @@ def test_luhn_checksum_known_vectors(spark):
         assert got[s] == want, (s, got[s], want)
 
 
-def test_graph_local_dispatch_equals_distributed_exactly(spark):
-    """The r14 adaptive driver-local dispatch (the connected-components
-    pattern applied to the rank-propagation family) must return the SAME
-    values as the distributed loop -- same 12/6-dp HALF_UP quantization,
-    same tie rules, same n_rounds -- on graphs with dangling nodes, ties,
-    and multi-component structure. Exact equality, not tolerance: the
+def test_graph_local_dispatch_equals_distributed_exactly(spark, monkeypatch):
+    """The adaptive driver-local dispatch (the connected-components pattern
+    applied to the rank-propagation family) must return the SAME values as
+    the distributed loop -- same 12/6-dp HALF_UP quantization, same tie
+    rules, same n_rounds -- on graphs with dangling nodes, ties, and
+    multi-component structure. Exact equality, not tolerance: the
     quantized recurrence is partitioning-invariant by construction, so a
-    local twin is just one more evaluation order."""
+    local twin is just one more evaluation order. A zero-row edge frame
+    always fits the cap, so it always runs local and must come back as an
+    empty frame with the distributed path's schema."""
+    from aws_glue_etl_sample_hist_spark.operators import _local
     from aws_glue_etl_sample_hist_spark.operators.graph import (
         label_propagation,
         weighted_pagerank,
         weighted_pagerank_converged,
     )
+
+    ops = (
+        (weighted_pagerank, {"n_iter": 3}),
+        (weighted_pagerank_converged, {"eps": 1e-9}),
+        (weighted_pagerank_converged, {"eps": 1e-9, "check_every": 3}),
+        (label_propagation, {"n_iter": 3}),
+    )
+
+    def run(edges, cap, op, kwargs):
+        monkeypatch.setattr(_local, "LOCAL_CAP", cap)
+        out = op(edges, **kwargs)
+        return (
+            [(f.name, f.dataType) for f in out.schema],
+            sorted(tuple(r) for r in out.collect()),
+        )
 
     graphs = [
         [("a", "b", 2.0), ("a", "c", 1.0), ("c", "b", 1.0), ("c", "d", 3.0)],
@@ -3687,33 +3732,22 @@ def test_graph_local_dispatch_equals_distributed_exactly(spark):
         # tie-heavy: equal weights force the label/argmax tie rules
         [("a", "b", 1.0), ("b", "a", 1.0), ("c", "b", 1.0), ("x", "y", 5.0)],
     ]
+    schema = "src string, dst string, weight double"
+    dist_schemas = {}
     for edge_list in graphs:
-        edges = spark.createDataFrame(edge_list, ["src", "dst", "weight"])
-        for op, kwargs in (
-            (weighted_pagerank, {"n_iter": 3}),
-            (weighted_pagerank_converged, {"eps": 1e-9}),
-            (weighted_pagerank_converged, {"eps": 1e-9, "check_every": 3}),
-            (label_propagation, {"n_iter": 3}),
-        ):
-            dist = sorted(
-                tuple(r) for r in op(edges, **kwargs).collect()
-            )
-            local = sorted(
-                tuple(r)
-                for r in op(edges, local_threshold=100, **kwargs).collect()
-            )
+        edges = spark.createDataFrame(edge_list, schema)
+        for i, (op, kwargs) in enumerate(ops):
+            dist_schema, dist = run(edges, 0, op, kwargs)
+            _, local = run(edges, 100, op, kwargs)
             assert dist == local, (op.__name__, kwargs, dist, local)
+            dist_schemas[i] = dist_schema
         # above the cap the distributed path must be taken and still agree
-        over = sorted(
-            tuple(r)
-            for r in weighted_pagerank(
-                edges, n_iter=3, local_threshold=2
-            ).collect()
-        )
-        base = sorted(
-            tuple(r) for r in weighted_pagerank(edges, n_iter=3).collect()
-        )
-        assert over == base
+        assert run(edges, 2, *ops[0]) == run(edges, 0, *ops[0])
+    empty = spark.createDataFrame([], schema)
+    for i, (op, kwargs) in enumerate(ops):
+        got_schema, got = run(empty, 0, op, kwargs)
+        assert got == [], (op.__name__, kwargs, got)
+        assert got_schema == dist_schemas[i], (op.__name__, got_schema)
 
 
 def test_round_half_up_matches_spark_round(spark):

@@ -741,13 +741,14 @@ _cc_graph = st.builds(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(_cc_graph)
-def test_cc_driver_local_matches_distributed(spark, graph):
+def test_cc_driver_local_matches_distributed(spark, monkeypatch, graph):
     """The adaptive driver-local union-find path of connected_components
     must return EXACTLY the distributed min-label-propagation fixpoint on
     randomized graphs -- including the contract corners: edge endpoints
     outside the seed node set (they inherit the component's seed-min
     label but never contribute their own id), duplicate edges,
     self-loops, and seed-free components (which must not appear at all)."""
+    from aws_glue_etl_sample_hist_spark.operators import _local
     from aws_glue_etl_sample_hist_spark.operators.dedup import (
         connected_components,
     )
@@ -760,12 +761,10 @@ def test_cc_driver_local_matches_distributed(spark, graph):
     )
     if not edges:
         pairs_df = pairs_df.filter(F.col("doc_a") != F.col("doc_b"))
-    dist = connected_components(
-        nodes_df, pairs_df, local_threshold=None
-    ).collect()
-    loc = connected_components(
-        nodes_df, pairs_df, local_threshold=10_000
-    ).collect()
+    monkeypatch.setattr(_local, "LOCAL_CAP", 0)
+    dist = connected_components(nodes_df, pairs_df).collect()
+    monkeypatch.setattr(_local, "LOCAL_CAP", 10_000)
+    loc = connected_components(nodes_df, pairs_df).collect()
     assert sorted((r.doc_id, r.cluster_id) for r in dist) == sorted(
         (r.doc_id, r.cluster_id) for r in loc
     )

@@ -228,3 +228,38 @@ def test_stream_dedup_local_merge_paths_agree(spark, sf_small, monkeypatch):
     monkeypatch.setattr(sj, "_local_cluster_merge", trip_after_first)
     assert run() == want
     assert calls["n"] == 2  # batch 1 tripped; batch 2 never re-probed
+
+
+def test_stage_slices_stages_an_empty_slice(spark, tmp_path):
+    """A slice value with no rows still gets its s{i} dir, holding a
+    zero-row file with the input schema, so a one-file-per-trigger drain
+    sees exactly n micro-batches."""
+    from pyspark.sql import functions as F
+
+    from aws_glue_etl_sample_hist_spark.streaming.jobs import _stage_slices
+
+    df = spark.range(12).select(
+        F.col("id").alias("doc_id"), F.lit("x").alias("text")
+    )
+    src = str(tmp_path / "src")
+    # slice value 1 never occurs
+    _stage_slices(df, F.when(F.col("doc_id") % 2 == 0, 0).otherwise(2), src)
+    counts = []
+    for s in range(3):
+        part = spark.read.parquet(os.path.join(src, f"s{s}"))
+        assert part.schema.fieldNames() == ["doc_id", "text"]
+        counts.append(part.count())
+    assert counts == [6, 0, 6]
+
+    batches = []
+    q = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/s*")
+        .writeStream.foreachBatch(lambda b, i: batches.append(b.count()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sorted(batches) == [0, 6, 6]
