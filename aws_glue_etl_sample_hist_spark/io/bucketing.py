@@ -26,20 +26,18 @@ def write_bucketed_table(
     bucket_cols: list[str],
     n_buckets: int,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    pre_partition: bool = True,
 ) -> None:
-    """Persist ``df`` as a bucketed (optionally sorted) external parquet table.
+    """Persist ``df`` as a bucketed (optionally sorted) external parquet
+    table, replacing any table of that name.
 
-    ``pre_partition`` repartitions on the bucket key first: without it every
+    The frame is repartitioned on the bucket key first: without it every
     write task emits its own file for every bucket it sees (tasks x buckets
     small files -- at 1000 executors that is a catastrophic file count and a
     slow write). With it, the layout costs exactly one explicit shuffle and
     each bucket is one file -- the shuffle every later join then skips."""
-    if pre_partition:
-        df = df.repartition(n_buckets, *bucket_cols)
+    df = df.repartition(n_buckets, *bucket_cols)
     writer = (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("path", path)
         .bucketBy(n_buckets, *bucket_cols)
     )

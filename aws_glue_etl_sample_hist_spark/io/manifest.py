@@ -20,9 +20,8 @@ manifest is.
             exactly its file list -- stragglers, orphans from failed
             runs, and files of a concurrent in-flight publish are
             invisible because they are in no manifest.
-  rollback: point readers at version N-1; nothing is deleted (the
-            snapshot-diff machinery in io/snapshots.py audits between
-            versions).
+  rollback: point readers at version N-1; nothing is deleted, so every
+            committed version stays readable.
 
 This is precisely Iceberg's core idea (a metadata file as the atomic
 commit), scoped to the engine's needs; swap in a real table format and
@@ -121,8 +120,11 @@ def read_published(
     """Read exactly the committed file list of ``table`` at ``version``
     (default: latest). Orphan files in the data directories -- failed
     runs, concurrent in-flight publishes, manual droppings -- are
-    invisible: the manifest IS the table."""
+    invisible: the manifest IS the table. A root with no committed
+    manifest raises FileNotFoundError naming the root."""
     v = version if version is not None else latest_version(root)
+    if v == 0:
+        raise FileNotFoundError(f"no committed manifest under {root!r}")
     path = os.path.join(_manifest_dir(root), f"v{v}.json")
     with open(path) as f:
         manifest = json.load(f)

@@ -13,10 +13,9 @@ estimate, falling back to AQE coalescing when it can't know better.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 
 @dataclass(frozen=True)
@@ -50,47 +49,6 @@ class WriterPolicy:
 # facts get size-targeted files
 MART_POLICY = WriterPolicy(max_files=1)
 FACT_POLICY = WriterPolicy(target_file_rows=5_000_000)
-
-
-def compact_dir(
-    spark,
-    path: str,
-    *,
-    target_file_rows: int = 5_000_000,
-    partition_by: list[str] | None = None,
-) -> dict[str, int]:
-    """Small-files compaction: rewrite a parquet directory so each file
-    carries ~``target_file_rows`` rows. The lake-maintenance counterpart of
-    the writer policies above -- incremental loads and streaming sinks
-    accrete small files over time, and at 100 TB the file COUNT (driver
-    listing, task scheduling, S3 requests) becomes the bottleneck before
-    the bytes do.
-
-    Shape: one read -> coalesce to ceil(rows / target) -> write alongside ->
-    atomic directory swap. coalesce (not repartition) -- merging small files
-    needs no shuffle, only fewer tasks. One count action up front is the
-    honest price of sizing the output; Hive-partitioned inputs pass
-    ``partition_by`` so the layout is preserved per partition directory.
-    Returns {files_before, files_after, rows}."""
-    import glob as _glob
-    import math
-    import shutil
-
-    df = spark.read.parquet(path)
-    rows = df.count()
-    files_before = len(_glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    n_files = max(1, math.ceil(rows / target_file_rows))
-    tmp = path.rstrip("/") + "__compact_tmp"
-    writer = df.coalesce(n_files).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    old = path.rstrip("/") + "__compact_old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    files_after = len(_glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    return {"files_before": files_before, "files_after": files_after, "rows": rows}
 
 
 def upsert_partitioned(
@@ -148,35 +106,3 @@ def write_partitioned(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def observed_write(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, Column],
-    *,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> dict:
-    """Partitioned parquet write that collects in-flight metrics via
-    ``df.observe`` -- row counts, null counts, sums ride along INSIDE the
-    write job (accumulator-backed), so the pipeline gets its audit numbers
-    without a second scan-and-count action over the tier it just wrote.
-
-    This is the production ingestion contract at 100 TB: every tier write
-    reports its own volumetrics for free; a separate `count()` would re-read
-    the tier (or recompute the lineage) and double the job's cost.
-
-    ``metrics`` maps name -> aggregate Column (e.g. ``F.count(F.lit(1))``,
-    ``F.sum(F.col('x').isNull().cast('long'))``). Returns the observed
-    values as a plain dict after the write completes.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    writer = observed.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    return dict(obs.get)

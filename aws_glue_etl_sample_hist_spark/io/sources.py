@@ -43,53 +43,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    *,
-    schema: StructType | None = None,
-) -> DataFrame:
-    """JSON-lines source (the interchange format LLM corpora actually ship
-    as -- one document object per line). ALWAYS pass a schema in production:
-    schema inference is a full extra pass over the data, and a permissive
-    explicit schema also gives `_corrupt_record` isolation for free."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    """JSON-lines sink -- the export format for tokenizer/training consumers
-    that do not read parquet. Compresses poorly and loses types; use it at
-    the EDGE of the lake only, never between tiers."""
-    df.write.mode(mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str, *, schema: StructType | None = None) -> DataFrame:
-    """ORC source: the other columnar lake format (Hive-ecosystem tables).
-    Same predicate-pushdown / column-pruning behavior as parquet under
-    Catalyst; supported so a user migrating an ORC lake need not convert
-    first."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,
@@ -126,88 +79,6 @@ def read_jdbc(
     return reader.load()
 
 
-def read_parquet_evolved(
-    spark: SparkSession,
-    path: str,
-    *,
-    target_schema: StructType,
-    fill_missing: bool = True,
-) -> DataFrame:
-    """Schema-evolution-on-read: union parquet written under DIFFERENT
-    schema versions (columns added over time) into one frame with the
-    declared target schema.
-
-    ``mergeSchema`` makes the footer scan union all field sets (off by
-    default in Spark because it reads every file's footer -- a real cost at
-    100k files, which is why the target schema is explicit here, not
-    re-inferred per read); columns the old files lack come back null, and
-    ``fill_missing`` then applies any defaults the target schema's field
-    metadata carries under the key ``default`` -- but ONLY to rows from
-    files that genuinely lack the column (detected from each file's own
-    footer), exactly like a table format's add-column default: a NULL
-    explicitly written by a new-schema file stays NULL (round-3 ADVICE; the
-    old behavior coalesced every null). Columns present on disk but absent
-    from the target are dropped (the read-side contract of a column-pruned
-    lake: readers name what they want, writers may run ahead).
-
-    Scale shape of the presence check: file paths are collected (O(n_files)
-    strings -- metadata-sized, same order as the footer merge Spark already
-    paid), the per-file footer reads run DISTRIBUTED via mapPartitions, and
-    the verdict re-attaches as a row-level `_metadata.file_path` test.
-
-    This is the poor-lake's replacement for a table format's schema
-    evolution (Delta/Iceberg metadata) -- same reader semantics, no
-    transaction log."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    default_fields = {
-        f.name: f.metadata["default"]
-        for f in target_schema.fields
-        if fill_missing and "default" in (f.metadata or {})
-    }
-    # columns with a default that exist in SOME files need per-file presence
-    partial = [c for c in default_fields if c in df.columns]
-    files_missing: dict[str, list[str]] = {c: [] for c in partial}
-    if partial:
-        paths = [
-            r.fp
-            for r in df.select(F.col("_metadata.file_path").alias("fp")).distinct().collect()
-        ]
-
-        def _probe(it):
-            import pyarrow.parquet as pq
-
-            for p in it:
-                local = p.removeprefix("file://") if p.startswith("file:") else p
-                names = set(pq.read_schema(local).names)
-                yield (p, [c for c in partial if c not in names])
-
-        sc = spark.sparkContext
-        n_slices = max(1, min(len(paths), sc.defaultParallelism))
-        for p, miss in sc.parallelize(paths, n_slices).mapPartitions(_probe).collect():
-            for c in miss:
-                files_missing[c].append(p)
-
-    cols = []
-    for field in target_schema.fields:
-        if field.name in df.columns:
-            c = F.col(field.name).cast(field.dataType)
-            miss = files_missing.get(field.name)
-            if miss:
-                c = F.when(
-                    F.col("_metadata.file_path").isin(miss),
-                    F.lit(default_fields[field.name]).cast(field.dataType),
-                ).otherwise(c)
-        elif field.name in default_fields:
-            # absent from every file: pure back-fill
-            c = F.lit(default_fields[field.name]).cast(field.dataType)
-        else:
-            c = F.lit(None).cast(field.dataType)
-        cols.append(c.alias(field.name))
-    return df.select(*cols)
-
-
 def read_xml(
     spark: SparkSession,
     path: str,
@@ -216,72 +87,19 @@ def read_xml(
     schema: StructType | None = None,
 ) -> DataFrame:
     """XML source (built into Spark 4 -- previously the separate spark-xml
-    package): one DataFrame row per ``row_tag`` element. Like JSONL, pass a
-    schema in production: inference is an extra full pass, and an explicit
-    schema keeps malformed elements isolated under the permissive-mode
-    corrupt-record column instead of failing the read. Avro, by contrast,
-    is NOT available here: it remains an external module jar that this
-    container does not ship (documented gap, not a stub)."""
+    package): one DataFrame row per ``row_tag`` element. Pass a schema in
+    production: inference is an extra full pass, and an explicit schema
+    keeps malformed elements isolated under the permissive-mode
+    corrupt-record column instead of failing the read. There is no Avro
+    source: spark-avro is an external module jar that pyspark does not
+    bundle (documented gap, not a stub)."""
     reader = spark.read.format("xml").option("rowTag", row_tag)
     if schema is not None:
         reader = reader.schema(schema)
     return reader.load(path)
 
 
-def write_xml(df: DataFrame, path: str, *, row_tag: str, mode: str = "overwrite") -> None:
-    """XML sink -- interchange with XML-consuming systems. Edge-of-lake
-    only, same caveat as write_jsonl (verbose, loses types)."""
-    df.write.mode(mode).format("xml").option("rowTag", row_tag).save(path)
-
-
-def _is_missing_avro_module(exc: Exception) -> bool:
-    """True only for the SPECIFIC missing-data-source failure (Spark's
-    FAILED_FIND_DATA_SOURCE error class / 'Failed to find ... data source:
-    avro' message). A PATH_NOT_FOUND or permission error on a path that
-    merely CONTAINS 'avro' must re-raise as itself, not be misblamed on
-    the absent jar."""
-    msg = str(exc)
-    return "FAILED_FIND_DATA_SOURCE" in msg or (
-        "Failed to find" in msg and "data source: avro" in msg.lower()
-    )
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro source. ENVIRONMENT GATE (same honesty contract as PIL/PyAV/
-    protobuf): spark-avro is an external module jar
-    (org.apache.spark:spark-avro_2.13) that this container does not ship --
-    verified by attempting the read, which raises FAILED_FIND_AVRO_SOURCE.
-    This wrapper converts that opaque failure into a loud
-    NotImplementedError and lights up UNCHANGED the moment the jar appears
-    on the classpath (tests/test_io_and_lsh_properties.py::
-    test_avro_roundtrip_gated_or_real is the slot-in: gated assertion now,
-    real value-lossless roundtrip then). Last re-probed round 14
-    (2026-08-17): pyspark 4.1.2 jars dir still carries only avro-core
-    ipc/mapred, no spark-avro module jar."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as exc:  # noqa: BLE001
-        if _is_missing_avro_module(exc):
-            raise NotImplementedError(
-                "the avro data source needs the external spark-avro module "
-                "jar (org.apache.spark:spark-avro_2.13), absent from this "
-                "container -- add it via spark.jars.packages and this "
-                "reader works unchanged"
-            ) from exc
-        raise
-
-
-def write_avro(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    """Avro sink -- interchange with Kafka/schema-registry ecosystems.
-    Same environment gate as read_avro."""
-    try:
-        df.write.mode(mode).format("avro").save(path)
-    except Exception as exc:  # noqa: BLE001
-        if _is_missing_avro_module(exc):
-            raise NotImplementedError(
-                "the avro data source needs the external spark-avro module "
-                "jar (org.apache.spark:spark-avro_2.13), absent from this "
-                "container -- add it via spark.jars.packages and this "
-                "writer works unchanged"
-            ) from exc
-        raise
+def write_xml(df: DataFrame, path: str, *, row_tag: str) -> None:
+    """XML sink (overwrites ``path``) -- interchange with XML-consuming
+    systems. Edge-of-lake only: verbose, and it loses types."""
+    df.write.mode("overwrite").format("xml").option("rowTag", row_tag).save(path)

@@ -1,6 +1,6 @@
-"""Persistent vector indexes (IVF and PQ): build once, append batches,
-query many times -- the production shape of similarity search over an
-embedding corpus.
+"""Persistent vector indexes (IVF and PQ): build once, query many times,
+append batches to the IVF -- the production shape of similarity search
+over an embedding corpus.
 
 The in-plan IVF in operators/similarity.py recomputes assignment per query
 job; at 100 TB the index must live AT REST instead (Jegou et al. 2011's
@@ -18,7 +18,7 @@ append -- cell ids must stay stable) and writes new files into the same
 partition dirs.
 
 Probe selection runs driver-side over the collected centroid table (k x dim
-floats -- the same bounded-calibration collect as the z-order bounds): the
+floats -- bounded by the centroid count, not the corpus): the
 serving path needs cell literals BEFORE the scan so the planner can prune.
 """
 
@@ -289,26 +289,6 @@ def _load_codebook(spark: SparkSession, index_dir: str) -> list[list[list[float]
     return [
         [by_sub[s][c] for c in sorted(by_sub[s])] for s in sorted(by_sub)
     ]
-
-
-def append_pq_index(
-    new_emb: DataFrame,
-    index_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Encode a NEW batch with the persisted codebook and append -- the PQ
-    analog of append_ivf_index (codebook never retrains on append)."""
-    from .similarity import pq_codes
-
-    cb = _load_codebook(new_emb.sparkSession, index_dir)
-    (
-        pq_codes(new_emb, len(cb), len(cb[0]), codebook=cb, id_col=id_col, vec_col=vec_col)
-        .select("vec_id", "codes")
-        .write.mode("append")
-        .parquet(os.path.join(index_dir, "codes"))
-    )
 
 
 def query_pq_index(

@@ -11,10 +11,12 @@ Design for 100 TB:
   - all Python stages are ``mapInPandas`` (per-partition Arrow batches, no
     per-row pickling, no shuffle introduced); output schemas are fixed
     ``StructType``s so Catalyst can prune columns through them.
-  - real decoders (PIL / ffmpeg / soundfile) are NOT in this container, so
-    ``decode_image`` is an explicit, clearly-marked stub behind an import-try;
-    the deterministic metadata path below exercises the identical plumbing
-    (binary in Arrow record batches -> pandas bytes -> typed rows out).
+  - image decode needs no image library: ``decode_image`` reads BMP, PNG
+    and baseline JPEG natively and refuses every other format with a named
+    ``NotImplementedError``; audio and video payloads are never decoded --
+    the deterministic metadata and fixed-size-frame paths below exercise
+    the identical plumbing (binary in Arrow record batches -> pandas bytes
+    -> typed rows out).
 
 The synthetic payload is the utf-8 encoding of ``documents.text`` (ASCII in
 the testdata, so byte offsets == char offsets -- which is what makes the
@@ -37,20 +39,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-try:  # real video decoding is stubbed: PyAV/ffmpeg is not in this container
-    import av  # pragma: no cover  # noqa: F401
-
-    HAVE_PYAV = True
-except ImportError:
-    HAVE_PYAV = False
-
-try:  # real image decoding is stubbed: PIL is not shipped in this container
-    from PIL import Image  # pragma: no cover  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
 
 MEDIA_TYPES = ("image", "audio", "video")
 
@@ -101,19 +89,18 @@ def decode_image(payload: bytes):
     zero image libraries for the three formats that matter: 24-bit BMP
     (struct + numpy), truecolor PNG (stdlib zlib inflate + all five row
     filters), and baseline JPEG (our own DCT/Huffman codec in
-    operators.jpeg). Other formats (WebP, TIFF, progressive JPEG...) fall
-    through to PIL when present, else the explicit stub below.
+    operators.jpeg). Other formats (WebP, TIFF, progressive JPEG...) raise
+    NotImplementedError.
 
     THE NATIVE-CODEC SWAP SEAM (PERF.md "codec ceiling"): this dispatch is
     the single point where a production deployment trades our deterministic
     pure-python JPEG path (~1 MB·s⁻¹·core⁻¹ at 256x256 -- fine for
     correctness, the cluster bottleneck at 100 TB of real images) for
-    PIL/libjpeg-turbo (~2 orders of magnitude faster): reorder the
-    ``b"\\xff\\xd8"`` branch below the HAVE_PIL check. We deliberately
-    do NOT auto-prefer PIL for formats we decode natively: IDCT rounding
-    differs between codecs, so flipping on dependency presence would make
-    decoded pixel values environment-dependent and break dual-engine
-    oracle determinism. PNG/BMP are zlib/struct-backed and not a
+    PIL/libjpeg-turbo (~2 orders of magnitude faster) by routing the
+    ``b"\\xff\\xd8"`` branch to it. We deliberately do NOT switch on
+    dependency presence: IDCT rounding differs between codecs, so that
+    would make decoded pixel values environment-dependent and break
+    dual-engine oracle determinism. PNG/BMP are zlib/struct-backed and not a
     bottleneck (PERF.md: PNG decode ~345 MB·s⁻¹·core⁻¹ at 256x256)."""
     if payload[:2] == b"BM":
         return decode_bmp(payload)
@@ -123,36 +110,10 @@ def decode_image(payload: bytes):
         from .jpeg import decode_jpeg
 
         return decode_jpeg(payload)
-    if HAVE_PIL:  # pragma: no cover - dependency absent in this container
-        import io
-
-        return Image.open(io.BytesIO(payload))
     raise NotImplementedError(
-        "only BMP/PNG/baseline-JPEG decode natively; other formats require "
-        "PIL, which this container ships without -- use extract_media_meta "
-        "for the deterministic metadata path on those"
-    )
-
-
-def decode_video_frames(payload: bytes, stride: int = 1):  # pragma: no cover - explicit stub
-    """STUB: real video decode requires PyAV (ffmpeg bindings), not present
-    in this container. Contract when the dependency appears: yield every
-    ``stride``-th decoded frame as an object exposing width/height/
-    to_image() -- the exact per-payload iteration `sample_frames` performs
-    over its fixed-size fake frames, so a real decoder slots into the same
-    mapInPandas batch shape / FRAME_SCHEMA with no plumbing change
-    (tests/test_operators_unit.py::test_decode_video_real_pyav_slot_in)."""
-    if HAVE_PYAV:
-        import io
-
-        with av.open(io.BytesIO(payload)) as container:
-            for i, frame in enumerate(container.decode(video=0)):
-                if i % stride == 0:
-                    yield frame
-        return
-    raise NotImplementedError(
-        "video decoding requires PyAV/ffmpeg; container ships without it -- "
-        "use sample_frames for the deterministic fixed-size-frame path"
+        "only BMP/PNG/baseline-JPEG decode natively -- use "
+        "extract_media_meta for the deterministic metadata path on other "
+        "formats"
     )
 
 
@@ -294,10 +255,9 @@ def sample_frames(
 
 # ------------------------------------------------------------- real BMP path
 #
-# PIL is absent, but 24-bit uncompressed BMP (BITMAPINFOHEADER, BI_RGB) needs
-# no codec library at all -- so the image-decode path is REAL for BMP and
-# stub-only for compressed formats. Pure numpy: header via struct, pixel grid
-# via one frombuffer + reshape (bottom-up rows, BGR order, rows padded to 4).
+# 24-bit uncompressed BMP (BITMAPINFOHEADER, BI_RGB) needs no codec library
+# at all. Pure numpy: header via struct, pixel grid via one frombuffer +
+# reshape (bottom-up rows, BGR order, rows padded to 4).
 
 REAL_IMAGE_SCHEMA = StructType(
     [
@@ -467,9 +427,9 @@ def real_audio_meta(with_payload: DataFrame) -> DataFrame:
 #
 # Video completes the trio: YUV4MPEG2 (.y4m) is raw frames behind a
 # plain-text header -- a real interchange format (mjpegtools lineage) that
-# decodes with zero dependencies, unlike compressed containers (PyAV stub
-# above). C420: per frame, a W*H luma plane then two (W/2)*(H/2) chroma
-# planes.
+# decodes with zero dependencies, unlike compressed containers, which the
+# engine never decodes. C420: per frame, a W*H luma plane then two
+# (W/2)*(H/2) chroma planes.
 
 REAL_VIDEO_SCHEMA = StructType(
     [

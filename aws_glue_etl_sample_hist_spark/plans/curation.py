@@ -177,91 +177,3 @@ def run_curation(
         from ..operators._cache import release_operator_caches
 
         release_operator_caches()
-
-
-def curate_increment(
-    spark: SparkSession,
-    out_dir: str,
-    new_docs: DataFrame,
-    *,
-    quality_min: float = 0.5,
-    dup_threshold: float = 0.5,
-) -> dict[str, int]:
-    """Ingest a NEW crawl batch into an existing curated lake: the
-    incremental shape of `run_curation`, where only the batch flows through
-    and the existing release is touched append-only.
-
-    Stages (all against the materialized tiers, never the original corpus):
-      1. exact idempotency gate: doc_ids already released are skipped
-         (re-delivering a batch is a no-op -- at-least-once ingest repair)
-      2. quality filter with the SAME scoring expressions as the full run
-      3. near-dup check of the batch AGAINST THE RELEASED CORPUS
-         (operators.dedup.incremental_minhash_dedup: the release's band
-         index is the join target; the release never re-pairs with itself)
-      4. benchmark decontamination scrub (same 5-gram rule)
-      5. append survivors to c2/released, rebuild the manifest
-
-    Returns counts per gate so the caller can monitor drop rates. Scale:
-    every stage is batch-sized except the band join against the release's
-    signatures -- exactly the persisted-index lookup a production ingest
-    runs; the append writes only the batch's partitions."""
-    from ..operators.dedup import contamination_flags, incremental_minhash_dedup
-    from ..operators.text import quality_stats, token_count
-
-    p = os.path.join
-    released = spark.read.parquet(p(out_dir, "c2", "released"))
-    bench = spark.read.parquet(p(out_dir, "c0", "benchmark"))
-
-    fresh = new_docs.join(
-        released.select("doc_id"), "doc_id", "left_anti"
-    ).persist()
-    n_fresh = fresh.count()
-
-    stats = quality_stats(fresh).select("doc_id", "quality_score")
-    passing = fresh.join(stats, "doc_id").filter(
-        F.col("quality_score") >= quality_min
-    ).persist()
-    n_passing = passing.count()
-
-    dup_ids = (
-        incremental_minhash_dedup(released, passing, threshold=dup_threshold)
-        .filter(F.col("is_dup"))
-        .select("doc_id")
-    )
-    contaminated = contamination_flags(passing, bench, n=5).filter(
-        F.col("is_contaminated") == 1
-    ).select("doc_id")
-    keep = (
-        passing.join(dup_ids, "doc_id", "left_anti")
-        .join(contaminated, "doc_id", "left_anti")
-        # survivors are, by construction, near-dups of nothing released:
-        # each is its own cluster, exactly like a full-run singleton keeper
-        .withColumn("cluster_id", F.col("doc_id"))
-        .select(*released.columns)
-        .persist()
-    )
-    n_kept = keep.count()
-
-    if n_kept:
-        write_partitioned(
-            keep, p(out_dir, "c2", "released"), partition_by=["lang"], mode="append"
-        )
-        manifest = (
-            spark.read.parquet(p(out_dir, "c2", "released"))
-            .groupBy("lang", "source")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(token_count(F.col("text"))).alias("n_tokens"),
-            )
-        )
-        write_partitioned(manifest, p(out_dir, "c3", "manifest"))
-    # counts/writes above consumed every persisted frame eagerly, so release
-    # them (and the band frames incremental_minhash_dedup tracked) before
-    # returning -- a long-lived ingest session runs this per batch and must
-    # not accumulate cached blocks (round-3 ADVICE)
-    from ..operators._cache import release_operator_caches
-
-    for df in (fresh, passing, keep):
-        df.unpersist()
-    release_operator_caches()
-    return {"fresh": n_fresh, "quality_pass": n_passing, "kept": n_kept}

@@ -164,7 +164,6 @@ def silver_join_bucketed(
     spark: SparkSession,
     out_dir: str,
     *,
-    slices_per_month: int | None = None,
     rows_per_slice: int | None = None,
 ) -> None:
     """T1 full join over bucketed bronze: same logical plan as silver_join,
@@ -181,36 +180,32 @@ def silver_join_bucketed(
     # A bucketed scan has no exchange for AQE to coalesce, so without this
     # every one of the 32 bucket tasks would write a file into every month
     # partition (tasks x months small files). One explicit repartition on the
-    # Hive partition key fixes the layout. ``slices_per_month`` > 1 adds a
-    # hash sub-slice so a big month spreads over several write tasks; 1
-    # keeps exactly one task/file per month, which wins while months are
-    # small. Default (None) sizes itself from the data instead of guessing:
-    # one count-shaped job over the bucketed bronze yields per-month row
-    # counts (one result row per month), and the BIGGEST month -- sizing on
-    # the max, not the mean, is what survives skew -- is divided by the
-    # FACT_POLICY file-size target. At sf0.1 every month fits one slice
-    # (today's behavior); at 100x the same code fans a month out over
-    # however many tasks the policy implies, so no single-task straggler
-    # month appears as data grows. The left joins in _silver_wide are on
-    # unique dim keys, so fact rows/month == silver rows/month.
-    n_months: int | None = None
-    if slices_per_month is None:
-        per_slice = rows_per_slice or FACT_POLICY.target_file_rows
-        month_rows = fact.groupBy(*PARTITION_COLS).count().collect()
-        biggest = max((r["count"] for r in month_rows), default=0)
-        n_months = max(1, len(month_rows))
-        slices_per_month = max(1, math.ceil(biggest / per_slice))
-    if slices_per_month > 1:
+    # Hive partition key fixes the layout; more than one slice per month adds
+    # a hash sub-slice so a big month spreads over several write tasks, and
+    # one slice keeps exactly one task/file per month, which wins while
+    # months are small. The slice count sizes itself from the data: one
+    # count-shaped job over the bucketed bronze yields per-month row counts
+    # (one result row per month), and the BIGGEST month -- sizing on the
+    # max, not the mean, is what survives skew -- is divided by the
+    # FACT_POLICY file-size target (``rows_per_slice`` overrides it). At
+    # sf0.1 every month fits one slice; at 100x the same code fans a month
+    # out over however many tasks the policy implies, so no single-task
+    # straggler month appears as data grows. The left joins in _silver_wide
+    # are on unique dim keys, so fact rows/month == silver rows/month.
+    per_slice = rows_per_slice or FACT_POLICY.target_file_rows
+    month_rows = fact.groupBy(*PARTITION_COLS).count().collect()
+    biggest = max((r["count"] for r in month_rows), default=0)
+    n_months = max(1, len(month_rows))
+    n_slices = max(1, math.ceil(biggest / per_slice))
+    if n_slices > 1:
         # the partition COUNT must be explicit: a column-only repartition is
         # an AQE-coalescible exchange, and AQE would merge the slices right
         # back into one task per (small-looking) month -- exactly the
         # straggler this exists to prevent
-        if n_months is None:
-            n_months = max(1, fact.select(*PARTITION_COLS).distinct().count())
         wide = wide.repartition(
-            n_months * slices_per_month,
+            n_months * n_slices,
             *PARTITION_COLS,
-            F.pmod(F.hash("l_orderkey"), F.lit(slices_per_month)),
+            F.pmod(F.hash("l_orderkey"), F.lit(n_slices)),
         )
     else:
         wide = wide.repartition(*PARTITION_COLS)

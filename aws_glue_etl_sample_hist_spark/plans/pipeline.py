@@ -25,45 +25,41 @@ class Stage:
     tasks: list[tuple[str, Callable[[], object]]]
 
 
+# tasks of one stage that run at once; the widest stage of any pipeline
+# (medallion T2's four marts, retrieval r1's four indexes) runs in one round
+MAX_WORKERS = 8
+
+
 @dataclass
 class Pipeline:
     """Ordered stages; tasks within a stage run in parallel, stages barrier.
 
-    ``retries``/``retry_backoff_s`` mirror the reference state machine's
-    per-state Retry blocks: a failing task is re-attempted in place before
-    the failure propagates and aborts the stage barrier.
+    A failing task runs once: its exception propagates and aborts the
+    stage barrier, so no later stage runs. There is no retry -- every task
+    is a deterministic Spark job over local files, and re-running a
+    deterministic failure only repeats it.
     """
 
     stages: list[Stage] = field(default_factory=list)
-    max_workers: int = 8
-    retries: int = 0
-    retry_backoff_s: float = 1.0
 
     def add_stage(self, name: str, **tasks: Callable[[], object]) -> "Pipeline":
         self.stages.append(Stage(name, list(tasks.items())))
         return self
 
-    def _run_task(self, fn: Callable[[], object]) -> float:
-        """Run with retries; returns the task's OWN wall seconds -- timed
-        around fn() inside the worker, so queue wait (tasks > max_workers)
-        and completion-observation delay are never charged to the task."""
-        attempt = 0
-        while True:
-            start = time.perf_counter()
-            try:
-                fn()
-                return time.perf_counter() - start
-            except Exception:
-                attempt += 1
-                if attempt > self.retries:
-                    raise
-                time.sleep(self.retry_backoff_s * (2 ** (attempt - 1)))
+    @staticmethod
+    def _run_task(fn: Callable[[], object]) -> float:
+        """Returns the task's OWN wall seconds -- timed around fn() inside
+        the worker, so queue wait (tasks > MAX_WORKERS) and
+        completion-observation delay are never charged to the task."""
+        start = time.perf_counter()
+        fn()
+        return time.perf_counter() - start
 
     def run(self) -> dict[str, float]:
         """Execute; returns per-task wall seconds (keys 'stage.task')."""
         timings: dict[str, float] = {}
         for stage in self.stages:
-            with ThreadPoolExecutor(max_workers=self.max_workers) as pool:
+            with ThreadPoolExecutor(max_workers=MAX_WORKERS) as pool:
                 futs = {
                     pool.submit(self._run_task, fn): f"{stage.name}.{task_name}"
                     for task_name, fn in stage.tasks

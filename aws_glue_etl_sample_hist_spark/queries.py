@@ -321,20 +321,10 @@ def q_customer_base_stats(spark: SparkSession, sf: str) -> DataFrame:
     counts, per-customer ratios. Exact count_distinct here (oracle-checkable);
     operators.aggregates.customer_base_stats(approx=True) is the HLL path for
     100 TB (one shuffle instead of two)."""
+    from .operators.aggregates import customer_base_stats
+
     orders = load_table(spark, sf, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.count_distinct("o_custkey").alias("count_of_customers"),
-        F.count("o_custkey").alias("count_of_purchase"),
-        F.round(F.count("o_custkey") / F.count_distinct("o_custkey"), 2).alias(
-            "purchase_per_customer"
-        ),
-        F.round(F.sum("o_totalprice") / F.count("o_custkey") / 10000, 2).alias(
-            "amount_per_purchase_10k"
-        ),
-        F.round(F.sum("o_totalprice") / F.count_distinct("o_custkey") / 10000, 2).alias(
-            "amount_per_customer_10k"
-        ),
-    )
+    return customer_base_stats(orders, "o_orderpriority", "o_custkey", "o_totalprice")
 
 
 def q_customer_monthly_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -2204,8 +2194,8 @@ def q_events_daily_gapfill(spark: SparkSession, sf: str) -> DataFrame:
     frame).
 
     Scale shape: the spine is built from two collected scalars (global
-    min/max day -- a tiny all-column-pruned agg, same pattern as the
-    z-order calibration collect) exploded per event_type: map-only, no
+    min/max day -- a tiny all-column-pruned agg) exploded per
+    event_type: map-only, no
     cross join enters the plan. The daily agg shuffles on (type, day); the
     forward-fill window shuffles on type only -- with a handful of types
     that window would skew at petabyte scale, but its input is the
@@ -6236,71 +6226,10 @@ def q_stream_quality_quantiles(spark: SparkSession, sf: str) -> DataFrame:
 
 # ---------------------------------------------------------------- registry
 
-_QUERIES_LITERAL = {
-    # registry order (after the round-15 rotation below) IS driver
-    # recording order; the driver records exactly the FIRST 50 entries.
-    # Round-14 rotation (VERDICT r13 item 2): slot 1 the round-14
-    # composition addition (corpus-refresh DAG, never-checked), slots 2-9
-    # the eight remaining r8-stale rows (the whole Athena-SQL-twin
-    # surface first), slots 10-50 the 41 oldest r9-stale rows. Past slot
-    # 50, blocks stay ordered oldest-evidence-first (the 9 remaining
-    # r9-stale rows queued FIRST for r15, then the r10, r11, r12, r13
-    # blocks). Everything past slot 50 stays oracle-checked every round
-    # via tests/test_oracle_parity.py.
-    # --- round-14 addition: composed incremental corpus-refresh DAG (1) ---
-    "corpus_refresh_pipeline": q_corpus_refresh_pipeline,
-    # --- r8-stale rows, the last of their class (8) ---
-    "sql_weekday_hour_revenue": q_sql_weekday_hour_revenue,
-    "sql_region_revenue": q_sql_region_revenue,
-    "sql_customer_base_stats": q_sql_customer_base_stats,
-    "sql_product_category_revenue": q_sql_product_category_revenue,
-    "sql_segment_category_revenue": q_sql_segment_category_revenue,
-    "sql_customer_monthly_stats": q_sql_customer_monthly_stats,
-    "corpus_lang_source_chi2": q_corpus_lang_source_chi2,
-    "local_supplier_volume": q_local_supplier_volume,
-    # --- r9-stale, oldest-first (41) ---
-    "dedup_lsh_recall": q_dedup_lsh_recall,
-    "corpus_mixture_temperature": q_corpus_mixture_temperature,
-    "dedup_lsh_precision": q_dedup_lsh_precision,
-    "stream_events_ab": q_stream_events_ab,
-    "corpus_ccnet_buckets_cuts": q_corpus_ccnet_buckets_cuts,
-    "dedup_lsh_recall_sampled": q_dedup_lsh_recall_sampled,
-    "customer_spend_deciles": q_customer_spend_deciles,
-    "events_grouping_sets": q_events_grouping_sets,
-    "part_fuzzy_matches": q_part_fuzzy_matches,
-    "events_value_trend": q_events_value_trend,
-    "corpus_zipf": q_corpus_zipf,
-    "corpus_source_budget": q_corpus_source_budget,
-    "dq_audit": q_dq_audit,
-    "dq_profile_orders": q_dq_profile_orders,
-    "embedding_random_projection": q_embedding_random_projection,
-    "embedding_centroid_outliers": q_embedding_centroid_outliers,
-    "orders_with_returns": q_orders_with_returns,
-    "customer_order_histogram": q_customer_order_histogram,
-    "top_supplier_revenue": q_top_supplier_revenue,
-    "rich_idle_customers": q_rich_idle_customers,
-    "part_small_qty_revenue": q_part_small_qty_revenue,
-    "embedding_pq_codes": q_embedding_pq_codes,
-    "quality_quantiles_by_lang_approx": q_quality_quantiles_by_lang_approx,
-    "embedding_ivf_ann_trained": q_embedding_ivf_ann_trained,
-    "customer_base_stats_approx": q_customer_base_stats_approx,
-    "documents_bm25_topk": q_documents_bm25_topk,
-    "corpus_bigram_pmi": q_corpus_bigram_pmi,
-    "text_word_entropy": q_text_word_entropy,
-    "mart_incremental_update": q_mart_incremental_update,
-    "events_distinct_rolling7": q_events_distinct_rolling7,
-    "part_set_similarity_join": q_part_set_similarity_join,
-    "supplier_pareto": q_supplier_pareto,
-    "events_heavy_hitters": q_events_heavy_hitters,
-    "events_hopping_window": q_events_hopping_window,
-    "customer_order_value_window": q_customer_order_value_window,
-    "corpus_bpe_merges": q_corpus_bpe_merges,
-    "part_entity_resolution": q_part_entity_resolution,
-    "multimodal_bmp_decode": q_multimodal_bmp_decode,
-    "hybrid_retrieval_rrf": q_hybrid_retrieval_rrf,
-    "text_repetition": q_text_repetition,
-    "orders_median_mode": q_orders_median_mode,
-    # --- past slot 50: remaining r9-stale rows (9), queued FIRST for r15 ---
+QUERIES = {
+    # registry order is the driver's recording order: it records exactly
+    # the first 50 entries. tests/test_oracle_parity.py checks every entry
+    # that has an oracle, wherever it sits.
     "corpus_winsorized_length": q_corpus_winsorized_length,
     "corpus_tokens_hof": q_corpus_tokens_hof,
     "events_ohlc": q_events_ohlc,
@@ -6310,7 +6239,6 @@ _QUERIES_LITERAL = {
     "multimodal_wav_decode": q_multimodal_wav_decode,
     "multimodal_y4m_decode": q_multimodal_y4m_decode,
     "orders_price_histogram": q_orders_price_histogram,
-    # --- r10-evidence block ---
     "dedup_cluster_keeper": q_dedup_cluster_keeper,
     "embedding_kcenter_coreset": q_embedding_kcenter_coreset,
     "corpus_epoch_plan": q_corpus_epoch_plan,
@@ -6360,7 +6288,6 @@ _QUERIES_LITERAL = {
     "events_markov_transitions": q_events_markov_transitions,
     "stream_events_enriched": q_stream_events_enriched,
     "events_user_trend_pandas": q_events_user_trend_pandas,
-    # --- r11-evidence block ---
     "embedding_bitext_mine": q_embedding_bitext_mine,
     "customer_id_luhn_audit": q_customer_id_luhn_audit,
     "embedding_two_level_agreement": q_embedding_two_level_agreement,
@@ -6411,7 +6338,6 @@ _QUERIES_LITERAL = {
     "events_session_window": q_events_session_window,
     "stream_events_sessionize": q_stream_events_sessionize,
     "stream_events_windowed": q_stream_events_windowed,
-    # --- r12-evidence block ---
     "embedding_two_level_pair_recall": q_embedding_two_level_pair_recall,
     "embedding_assign_arrow_agreement": q_embedding_assign_arrow_agreement,
     "events_json_extract": q_events_json_extract,
@@ -6462,7 +6388,6 @@ _QUERIES_LITERAL = {
     "text_pii_redact": q_text_pii_redact,
     "corpus_chunk": q_corpus_chunk,
     "text_token_dedup": q_text_token_dedup,
-    # --- r13-evidence block (the round-13 window, newest evidence) ---
     "embedding_two_level_nprobe_curve": q_embedding_two_level_nprobe_curve,
     "text_perplexity": q_text_perplexity,
     "corpus_shuffle": q_corpus_shuffle,
@@ -6513,23 +6438,54 @@ _QUERIES_LITERAL = {
     "multimodal_thumbnail": q_multimodal_thumbnail,
     "embedding_quantize_int8": q_embedding_quantize_int8,
     "sql_monthly_revenue": q_sql_monthly_revenue,
+    "corpus_refresh_pipeline": q_corpus_refresh_pipeline,
+    "sql_weekday_hour_revenue": q_sql_weekday_hour_revenue,
+    "sql_region_revenue": q_sql_region_revenue,
+    "sql_customer_base_stats": q_sql_customer_base_stats,
+    "sql_product_category_revenue": q_sql_product_category_revenue,
+    "sql_segment_category_revenue": q_sql_segment_category_revenue,
+    "sql_customer_monthly_stats": q_sql_customer_monthly_stats,
+    "corpus_lang_source_chi2": q_corpus_lang_source_chi2,
+    "local_supplier_volume": q_local_supplier_volume,
+    "dedup_lsh_recall": q_dedup_lsh_recall,
+    "corpus_mixture_temperature": q_corpus_mixture_temperature,
+    "dedup_lsh_precision": q_dedup_lsh_precision,
+    "stream_events_ab": q_stream_events_ab,
+    "corpus_ccnet_buckets_cuts": q_corpus_ccnet_buckets_cuts,
+    "dedup_lsh_recall_sampled": q_dedup_lsh_recall_sampled,
+    "customer_spend_deciles": q_customer_spend_deciles,
+    "events_grouping_sets": q_events_grouping_sets,
+    "part_fuzzy_matches": q_part_fuzzy_matches,
+    "events_value_trend": q_events_value_trend,
+    "corpus_zipf": q_corpus_zipf,
+    "corpus_source_budget": q_corpus_source_budget,
+    "dq_audit": q_dq_audit,
+    "dq_profile_orders": q_dq_profile_orders,
+    "embedding_random_projection": q_embedding_random_projection,
+    "embedding_centroid_outliers": q_embedding_centroid_outliers,
+    "orders_with_returns": q_orders_with_returns,
+    "customer_order_histogram": q_customer_order_histogram,
+    "top_supplier_revenue": q_top_supplier_revenue,
+    "rich_idle_customers": q_rich_idle_customers,
+    "part_small_qty_revenue": q_part_small_qty_revenue,
+    "embedding_pq_codes": q_embedding_pq_codes,
+    "quality_quantiles_by_lang_approx": q_quality_quantiles_by_lang_approx,
+    "embedding_ivf_ann_trained": q_embedding_ivf_ann_trained,
+    "customer_base_stats_approx": q_customer_base_stats_approx,
+    "documents_bm25_topk": q_documents_bm25_topk,
+    "corpus_bigram_pmi": q_corpus_bigram_pmi,
+    "text_word_entropy": q_text_word_entropy,
+    "mart_incremental_update": q_mart_incremental_update,
+    "events_distinct_rolling7": q_events_distinct_rolling7,
+    "part_set_similarity_join": q_part_set_similarity_join,
+    "supplier_pareto": q_supplier_pareto,
+    "events_heavy_hitters": q_events_heavy_hitters,
+    "events_hopping_window": q_events_hopping_window,
+    "customer_order_value_window": q_customer_order_value_window,
+    "corpus_bpe_merges": q_corpus_bpe_merges,
+    "part_entity_resolution": q_part_entity_resolution,
+    "multimodal_bmp_decode": q_multimodal_bmp_decode,
+    "hybrid_retrieval_rrf": q_hybrid_retrieval_rrf,
+    "text_repetition": q_text_repetition,
+    "orders_median_mode": q_orders_median_mode,
 }
-
-# Round-15 window rotation (VERDICT r14 item 9): the r14-verified head
-# block (the literal's first 50 entries) rotates to the TAIL, promoting
-# the next-oldest 50 (the r9-stale remainder + the r9-late block) into
-# the driver's recording window. The rotation is a rotation, not a
-# re-sort, so the "oldest-evidence-first past slot 50" invariant is
-# preserved for every future round: after the r15 driver run the
-# registry reads r10-stale ... r13 blocks, then the r14-verified block
-# (newest evidence) last. Every entry stays oracle-checked every round
-# via tests/test_oracle_parity.py regardless of window position.
-_R14_WINDOW = 50
-_names = list(_QUERIES_LITERAL)
-QUERIES = {
-    k: _QUERIES_LITERAL[k]
-    for k in _names[_R14_WINDOW:] + _names[:_R14_WINDOW]
-}
-
-
-

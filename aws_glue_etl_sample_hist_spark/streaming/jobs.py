@@ -125,8 +125,7 @@ def _state_provider_override() -> str | None:
     instead of the default HDFS-backed provider's heap-resident maps +
     per-micro-batch delta fsyncs. The default (unset) keeps the
     HDFS-backed provider for round-over-round bench comparability;
-    RocksDB is the provider a 100 TB-state deployment would run (and the
-    one the transformWithState path already requires), so PERF.md
+    RocksDB is the provider a 100 TB-state deployment would run, so PERF.md
     records the dedup drain's wall under both. Any other value is passed
     through as a provider class name."""
     v = os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER")
@@ -558,100 +557,6 @@ def stream_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return _run_to_memory(agg, "complete")
-
-
-def stream_events_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary stateful processing via transformWithStateInPandas (the
-    Spark 4 successor to applyInPandasWithState): a StatefulProcessor keeps
-    one ValueState row per user (count / sum / max of event values) and
-    emits the running totals each micro-batch. Totals are monotone in
-    n_events, so the drained sink reduces to the final row per user with
-    max_by -- robust to however many micro-batches availableNow splits the
-    replay into. Requires the RocksDB state store provider (the only one
-    implementing the column-family layout TWS state uses); the conf is set
-    for this query's session and restored after the drain.
-
-    Versus applyInPandasWithState: typed named state slots (value/list/map)
-    with per-state TTL, timers decoupled from input, and initial-state
-    bootstrap -- the API a production restartable aggregator wants.
-
-    ENVIRONMENT GATE: the TWS driver worker speaks protobuf to the state
-    server (pyspark.sql.streaming.proto.StateMessage_pb2), and this
-    container ships no `protobuf` package -- verified by running this very
-    job: the worker dies in _handle_pre_init on `from google.protobuf
-    import descriptor`. Same honesty contract as the PIL/PyAV decoders:
-    guarded NotImplementedError now, slot-in test pins the integration so
-    the job lights up unchanged when the dependency appears
-    (tests/test_streaming.py::test_transform_with_state_slot_in)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(its driver worker speaks protobuf to the JVM state server); "
-            "this container ships without it -- applyInPandasWithState "
-            "(stream_events_sessionize) covers custom stateful operators"
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n BIGINT, s DOUBLE, mx DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._state.exists():
-                n, s, mx = self._state.get()
-            else:
-                n, s, mx = 0, 0.0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-                mx = max(mx, float(pdf["value"].max()))
-            self._state.update((n, s, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [s],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    ev = _read_events_stream(spark, sf_dir).select("user_id", "value")
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserStats(),
-        outputStructType=(
-            "user_id BIGINT, n_events BIGINT, sum_value DOUBLE, max_value DOUBLE"
-        ),
-        outputMode="Append",
-        timeMode="None",
-    )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        raw = _run_to_memory(out, "append")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    return raw.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.round(F.max_by("sum_value", "n_events"), 4).alias("sum_value"),
-        F.round(F.max("max_value"), 4).alias("max_value"),
-    )
 
 
 def stream_pca_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:

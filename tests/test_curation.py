@@ -58,60 +58,3 @@ def test_curation_dag_materializes_exact_composition(spark, sf_small, tmp_path):
     # idempotent re-run: same release
     run_curation(spark, sf_small, out)
     assert {r.doc_id for r in spark.read.parquet(out + "/c2/released").collect()} == want
-
-
-def test_curate_increment_gates_and_idempotency(spark, sf_small, tmp_path):
-    """A new batch flows through the incremental gates: already-released
-    ids skipped, low-quality dropped, near-dups of the RELEASED corpus
-    dropped, survivors appended with their own cluster_id -- and
-    re-delivering the same batch is a no-op."""
-    from aws_glue_etl_sample_hist_spark.catalog import load_table
-    from aws_glue_etl_sample_hist_spark.plans.curation import (
-        curate_increment,
-        run_curation,
-    )
-
-    out = str(tmp_path / "curation")
-    run_curation(spark, sf_small, out)
-    released0 = {r.doc_id for r in spark.read.parquet(out + "/c2/released").collect()}
-    some_released = next(iter(released0))
-
-    # batch: one re-delivered doc + one near-dup of a released doc (same
-    # text, new id) + one garbage doc + one genuinely new good doc
-    released_row = (
-        spark.read.parquet(out + "/c2/released")
-        .filter(F.col("doc_id") == some_released)
-        .collect()[0]
-    )
-    good_text = (
-        "fresh unseen words about partitions exchanges catalysts windows "
-        "aggregates joins buckets shards manifests tiers quality tokens "
-        "metrics relations columns rows schemas formats codecs readers"
-    )
-    batch = spark.createDataFrame(
-        [
-            (some_released, released_row.text, "en", "crawl", len(released_row.text)),
-            (900001, released_row.text, "en", "crawl", len(released_row.text)),
-            (900002, "a a a", "en", "crawl", 5),
-            (900003, good_text, "en", "crawl", len(good_text)),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    counts = curate_increment(spark, out, batch)
-    assert counts["fresh"] == 3  # re-delivered id gated out
-    assert counts["kept"] == 1  # dup + garbage dropped, good doc kept
-
-    released1 = {r.doc_id for r in spark.read.parquet(out + "/c2/released").collect()}
-    assert released1 == released0 | {900003}
-    row = (
-        spark.read.parquet(out + "/c2/released")
-        .filter(F.col("doc_id") == 900003)
-        .collect()[0]
-    )
-    assert row.cluster_id == 900003
-
-    # re-delivery of the identical batch: nothing fresh survives the id gate
-    counts2 = curate_increment(spark, out, batch)
-    assert counts2["kept"] == 0
-    released2 = {r.doc_id for r in spark.read.parquet(out + "/c2/released").collect()}
-    assert released2 == released1

@@ -112,271 +112,6 @@ def test_minhash_lsh_cross_checks_spark_ml(spark, sf_oracle):
     assert len(ml & truth) / len(truth) >= 0.85
 
 
-def test_compact_dir_merges_small_files_preserving_data(spark, sf_small, tmp_path):
-    """Compaction: a 64-small-file directory collapses to the target file
-    count with identical rows; partitioned layout variant keeps its dirs."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from aws_glue_etl_sample_hist_spark.catalog import load_table
-    from aws_glue_etl_sample_hist_spark.io.sinks import compact_dir
-
-    path = str(tmp_path / "events_frag")
-    ev = load_table(spark, sf_small, "events")
-    checksum = ev.agg(F.count("*"), F.round(F.sum("value"), 4)).collect()[0]
-    ev.repartition(64).write.parquet(path)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 64
-
-    stats = compact_dir(spark, path, target_file_rows=10_000_000)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == 1
-    after = spark.read.parquet(path)
-    assert after.agg(F.count("*"), F.round(F.sum("value"), 4)).collect()[0] == checksum
-
-    # partitioned variant: one file per partition dir afterwards
-    ppath = str(tmp_path / "events_part")
-    ev.withColumn("d", F.date_format("ts", "yyyy-MM-dd")).repartition(16).write.partitionBy(
-        "d"
-    ).parquet(ppath)
-    before = len(glob.glob(os.path.join(ppath, "**", "*.parquet"), recursive=True))
-    stats2 = compact_dir(spark, ppath, target_file_rows=10_000_000, partition_by=["d"])
-    assert stats2["files_after"] < before
-    assert spark.read.parquet(ppath).count() == checksum[0]
-
-
-def test_jsonl_round_trip_with_schema(spark, sf_small, tmp_path):
-    """JSON-lines edge-of-lake export: write documents as jsonl, read back
-    with an explicit schema -- rows and values survive byte-for-byte."""
-    from aws_glue_etl_sample_hist_spark.io.sources import read_jsonl, write_jsonl
-
-    docs = load_table(spark, sf_small, "documents")
-    out = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, out)
-    back = read_jsonl(spark, out, schema=docs.schema)
-    assert back.schema == docs.schema
-    a = sorted(map(tuple, docs.collect()))
-    b = sorted(map(tuple, back.collect()))
-    assert a == b
-
-
-def test_orc_round_trip_partitioned_with_pushdown(spark, sf_small, tmp_path):
-    """ORC lake support: Hive-partitioned write, identical data back, and a
-    partition filter prunes to one directory at the scan (the same
-    PartitionFilters machinery as parquet)."""
-    from aws_glue_etl_sample_hist_spark.io.sources import read_orc, write_orc
-
-    docs = load_table(spark, sf_small, "documents")
-    out = str(tmp_path / "docs_orc")
-    write_orc(docs, out, partition_by=["lang"])
-    back = read_orc(spark, out)
-    assert back.count() == docs.count()
-    a = sorted((r.doc_id, r.text) for r in docs.collect())
-    b = sorted((r.doc_id, r.text) for r in back.collect())
-    assert a == b
-    one = back.filter(F.col("lang") == "en")
-    plan = one._sc._jvm.PythonSQLUtils.explainString(
-        one._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: [isnotnull(lang" in plan, plan
-
-
-def test_read_parquet_evolved_unions_schema_versions(spark, tmp_path):
-    """Files written under v1 (no `lang`, no `score`) and v2 (both added)
-    read back as ONE frame with the target schema: v1 rows get null lang,
-    defaulted score, and writer-ahead columns absent from the target are
-    dropped."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from aws_glue_etl_sample_hist_spark.io.sources import read_parquet_evolved
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a"), (2, "b")], "id long, text string").write.parquet(path)
-    spark.createDataFrame(
-        [(3, "c", "en", 0.9, "extra")],
-        "id long, text string, lang string, score double, writer_ahead string",
-    ).write.mode("append").parquet(path)
-
-    target = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("score", DoubleType(), metadata={"default": 0.0}),
-        ]
-    )
-    out = read_parquet_evolved(spark, path, target_schema=target)
-    assert [f.name for f in out.schema.fields] == ["id", "text", "lang", "score"]
-    rows = {r.id: r for r in out.collect()}
-    assert len(rows) == 3
-    assert rows[1].lang is None and rows[1].score == 0.0  # v1 defaults
-    assert rows[3].lang == "en" and rows[3].score == 0.9  # v2 passthrough
-    assert "writer_ahead" not in out.columns
-
-
-def test_snapshot_time_travel_and_vacuum(spark, tmp_path):
-    """write -> write -> read(latest) == v2, read(version=1) == v1; a
-    half-published dir without a pointer flip stays invisible; vacuum
-    removes old versions but never the committed latest."""
-    from aws_glue_etl_sample_hist_spark.io.snapshots import (
-        latest_version,
-        list_versions,
-        read_snapshot,
-        vacuum,
-        write_snapshot,
-    )
-
-    base = str(tmp_path / "snap")
-    v1 = write_snapshot(spark.createDataFrame([(1, "a")], "id long, s string"), base)
-    v2 = write_snapshot(spark.createDataFrame([(2, "b"), (3, "c")], "id long, s string"), base)
-    assert (v1, v2) == (1, 2)
-    assert latest_version(base) == 2
-    assert read_snapshot(spark, base).count() == 2
-    assert [r.id for r in read_snapshot(spark, base, version=1).collect()] == [1]
-
-    # simulate a crashed publish: directory exists, pointer never flipped
-    spark.createDataFrame([(9, "x")], "id long, s string").write.parquet(base + "/v=3")
-    assert list_versions(base) == [1, 2, 3]
-    assert latest_version(base) == 2  # crash invisible to readers
-    assert read_snapshot(spark, base).count() == 2
-
-    removed = vacuum(base, keep=1)
-    # v=2 is the committed latest (kept); v=1 ages out of the keep window;
-    # v=3 is newer than the committed latest => an uncommitted orphan, so
-    # vacuum reclaims it instead of letting it camp in a keep slot forever
-    assert removed == [1, 3]
-    assert list_versions(base) == [2]
-    assert read_snapshot(spark, base).count() == 2
-    # the next publish reuses the reclaimed number and commits it
-    assert write_snapshot(
-        spark.createDataFrame([(4, "d")], "id long, s string"), base
-    ) == 3
-    assert latest_version(base) == 3
-
-
-# ------------------------------------------------- python data source API
-
-
-def test_synthetic_docs_source_deterministic_and_partitioned(spark):
-    """The custom Python Data Source plans real partitions and generates a
-    byte-identical corpus on every read regardless of partitioning --
-    the reproducibility contract a generated load test depends on."""
-    from aws_glue_etl_sample_hist_spark.io.pydatasource import (
-        SYNTH_SCHEMA,
-        _synth_doc,
-        register_synthetic_docs,
-    )
-
-    register_synthetic_docs(spark)
-    df = (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 100)
-        .option("n_partitions", 5)
-        .option("seed", 7)
-        .load()
-    )
-    assert df.columns == ["doc_id", "text", "lang", "n_tokens"]
-    assert df.rdd.getNumPartitions() == 5
-    rows = {r.doc_id: (r.text, r.lang, r.n_tokens) for r in df.collect()}
-    assert len(rows) == 100
-    # pure-python reference: identical content, any partitioning
-    for doc_id in (0, 13, 99):
-        _, text, lang, n = _synth_doc(doc_id, 7)
-        assert rows[doc_id] == (text, lang, n)
-    # re-read with DIFFERENT partitioning -> same corpus
-    df2 = (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 100)
-        .option("n_partitions", 2)
-        .option("seed", 7)
-        .load()
-    )
-    assert {tuple(r) for r in df2.collect()} == {
-        (k, *v) for k, v in rows.items()
-    }
-    # and a different seed -> a different corpus
-    df3 = (
-        spark.read.format("synthetic_docs")
-        .option("n_docs", 100)
-        .option("seed", 8)
-        .load()
-    )
-    assert {tuple(r) for r in df3.collect()} != {(k, *v) for k, v in rows.items()}
-    # empty corpus -> zero rows, not a range(0, 0, 0) crash in partitions()
-    df4 = spark.read.format("synthetic_docs").option("n_docs", 0).load()
-    assert df4.count() == 0
-
-
-def test_jsonl_corrupt_record_isolation(spark, tmp_path):
-    """Malformed lines in a JSONL corpus land in _corrupt_record under an
-    explicit permissive schema; good rows parse, nothing throws, and the
-    bad-line quarantine filter is a plain column predicate -- the ingest
-    contract for crawl dumps that always contain garbage."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from aws_glue_etl_sample_hist_spark.io.sources import read_jsonl
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "good row"}\n'
-        "THIS IS NOT JSON\n"
-        '{"doc_id": 2, "text": "another good row"}\n'
-        '{"doc_id": "not-a-number", "text": "type mismatch"}\n'
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("_corrupt_record", StringType()),
-        ]
-    )
-    df = read_jsonl(spark, str(p), schema=schema).cache()
-    good = df.filter(df._corrupt_record.isNull())
-    bad = df.filter(df._corrupt_record.isNotNull())
-    assert {r.doc_id for r in good.collect()} == {1, 2}
-    assert bad.count() == 2  # the non-JSON line and the type-mismatch line
-    df.unpersist()
-
-
-def test_avro_roundtrip_gated_or_real(spark, tmp_path):
-    """Avro slot-in (the PIL/protobuf detection pattern): with the external
-    spark-avro jar absent the wrappers must raise a LOUD
-    NotImplementedError naming the missing module; the moment the jar is
-    on the classpath this same test becomes the real check -- a
-    value-lossless write->read roundtrip."""
-    import pytest as _pytest
-
-    from aws_glue_etl_sample_hist_spark.io.sources import read_avro, write_avro
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", -0.25), (3, None, 0.0)],
-        "id long, s string, x double",
-    )
-    path = str(tmp_path / "avro_roundtrip")
-    try:
-        write_avro(df, path)
-        have_avro = True
-    except NotImplementedError as exc:
-        have_avro = False
-        assert "spark-avro" in str(exc)
-
-    if not have_avro:
-        with _pytest.raises(NotImplementedError, match="spark-avro"):
-            read_avro(spark, path)
-        return
-
-    got = read_avro(spark, path)  # pragma: no cover (jar absent here)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
-    assert dict(got.dtypes) == dict(df.dtypes)
-
-
 def test_manifest_publish_atomic_and_orphan_proof(spark, tmp_path):
     """Manifest publish: (1) readers see exactly the committed file list
     -- an orphan parquet dropped into the data dir is invisible; (2) a
@@ -493,3 +228,16 @@ def test_manifest_empty_table_roundtrip(spark, tmp_path):
     got = read_published(spark, root, "void", version=v)
     assert got.count() == 0
     assert [f.name for f in got.schema.fields] == ["k", "tag"]
+
+
+def test_manifest_read_without_commit_names_the_root(spark, tmp_path):
+    """A root with no committed manifest raises FileNotFoundError naming
+    the root, not an open() error on a v0 manifest that never exists."""
+    import pytest as _pytest
+
+    from aws_glue_etl_sample_hist_spark.io.manifest import read_published
+
+    root = str(tmp_path / "never_published")
+    with _pytest.raises(FileNotFoundError, match="no committed manifest") as exc:
+        read_published(spark, root, "a")
+    assert root in str(exc.value)

@@ -93,53 +93,6 @@ def test_stream_dedup_collapses_doubled_source_to_batch_answer(spark, sf_small):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_transform_with_state_gated_or_real(spark, sf_small):
-    """transformWithStateInPandas (Spark 4's arbitrary-stateful successor
-    to applyInPandasWithState) needs the protobuf package for its driver
-    worker's state-server protocol; the container ships without it. With
-    protobuf absent the job must fail LOUDLY as NotImplementedError (not a
-    crashed opaque stream); when the dependency appears this same test
-    becomes the real integration check: per-user running stats from
-    ValueState must equal the batch aggregate."""
-    import pytest as _pytest
-
-    from aws_glue_etl_sample_hist_spark.catalog import load_table
-    from aws_glue_etl_sample_hist_spark.streaming.jobs import (
-        stream_events_user_stats_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    if not have_protobuf:
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            stream_events_user_stats_tws(spark, sf_small)
-        return
-
-    from pyspark.sql import functions as F  # pragma: no cover (dep absent)
-
-    got = {
-        r.user_id: (r.n_events, r.sum_value, r.max_value)
-        for r in stream_events_user_stats_tws(spark, sf_small).collect()
-    }
-    want = {
-        r.user_id: (r.n, r.s, r.mx)
-        for r in load_table(spark, sf_small, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(F.sum("value"), 4).alias("s"),
-            F.round(F.max("value"), 4).alias("mx"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_stream_quality_quantiles_replay_idempotent(spark, sf_small):
     """The quantile monitor's replay contract: additive histogram state is
     keyed by batch id and written with OVERWRITE, so re-delivering a batch
