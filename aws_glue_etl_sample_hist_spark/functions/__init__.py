@@ -5,4 +5,3 @@ from .datetime_fns import (  # noqa: F401
     with_date_parts,
     ymd,
 )
-from .numeric import round_scaled, safe_ratio  # noqa: F401

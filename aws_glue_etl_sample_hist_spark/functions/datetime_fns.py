@@ -51,7 +51,10 @@ def presto_day_of_week(col: Column | str) -> Column:
 INVALID_DATE_SENTINEL = "Invalid date format. Please"
 
 
-@F.udf(returnType=StringType())
+# useArrow=False pins the row-at-a-time pickled UDF the reference runs and
+# skips pyspark's eval-type inference, which cannot read the (postponed,
+# string) type hints and warns at import
+@F.udf(returnType=StringType(), useArrow=False)
 def change_day_of_week(year: str, month: str, day: str) -> str:
     """Row-at-a-time Python UDF exemplar, semantics pinned to the reference
     (jb_de_enhancement_t2_salesbydatetime_s2s.py:63-80): three string args ->

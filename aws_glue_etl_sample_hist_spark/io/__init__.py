@@ -1,2 +1,2 @@
 from .sinks import WriterPolicy, write_partitioned  # noqa: F401
-from .sources import read_csv, read_jdbc, read_parquet  # noqa: F401
+from .sources import read_jdbc  # noqa: F401

@@ -5,9 +5,10 @@ dimensions (jb_de_dehancement_t0_dimension_d2s.py:66-71) and a pushdown SQL
 query for the date-bounded fact extract (jb_de_enhancement_t0_fact_d2s.py:69-82,
 noted single-connection in document/glue_t0.md:144). Spark-first rebuild:
 
-  - file sources (parquet/CSV) are the primary path; Catalyst pushes filters
-    and prunes columns/partitions at the scan, so the reference's hand-built
-    pushdown query becomes a plain ``.filter``;
+  - file sources are the primary path, read with ``spark.read`` directly
+    (catalog.load_table); Catalyst pushes filters and prunes
+    columns/partitions at the scan, so the reference's hand-built pushdown
+    query becomes a plain ``.filter``;
   - JDBC stays available, but ALWAYS with partitioned-read options
     (partitionColumn/lowerBound/upperBound/numPartitions) -- the reference's
     single-connection read followed by ``repartition(4)`` is exactly the
@@ -18,29 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-
-def read_parquet(spark: SparkSession, path: str, *, schema: StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    *,
-    schema: StructType | None = None,
-    header: bool = True,
-) -> DataFrame:
-    """CSV dimension source (reference ships dims as header CSVs, data/*.csv)."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "false")  # strings, like the reference DDL
-    return reader.csv(path)
 
 
 def read_jdbc(

@@ -1,3 +1,2 @@
 from .aggregates import grouped_sales_agg  # noqa: F401
-from .joins import left_join_drop_keys, star_denormalize  # noqa: F401
-from .sort import multi_sort, topk  # noqa: F401
+from .joins import left_join_drop_keys  # noqa: F401

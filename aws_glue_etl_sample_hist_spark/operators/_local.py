@@ -38,14 +38,10 @@ LOCAL_CAP = 100_000
 
 
 def arrow_local_frame(
-    spark: SparkSession,
-    rows: list,
-    schema: str | T.StructType,
-    *,
-    single_partition: bool = True,
+    spark: SparkSession, rows: list, schema: str | T.StructType
 ) -> DataFrame:
     """``createDataFrame`` through the pandas/Arrow path with an explicit
-    schema. ``single_partition`` coalesces to 1 (these frames are
+    schema, coalesced to one partition (these frames are
     broadcast-or-result-sized by contract)."""
     import pandas as pd
 
@@ -55,7 +51,7 @@ def arrow_local_frame(
         schema = T.StructType.fromDDL(schema)
     pdf = pd.DataFrame(rows, columns=schema.fieldNames())
     df = spark.createDataFrame(pdf, schema)
-    return df.coalesce(1) if single_partition else df
+    return df.coalesce(1)
 
 
 def fetch_bounded(

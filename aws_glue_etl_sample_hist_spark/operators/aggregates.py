@@ -17,23 +17,14 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 
 def grouped_sales_agg(
-    df: DataFrame,
-    keys: list[str | Column],
-    amount_col: str = "amount",
-    *,
-    sum_alias: str = "total_purchase_amount",
-    count_alias: str = "count_of_purchase",
-    extra: list[Column] | None = None,
+    df: DataFrame, keys: list[str | Column], amount_col: str
 ) -> DataFrame:
     """The reference's mart kernel: groupBy(keys).agg(sum, count) with the
     reference's output aliases (jb_de_enhancement_t2_salesbyageproducts_s2s.py:55-56)."""
-    aggs = [
-        F.sum(amount_col).alias(sum_alias),
-        F.count(amount_col).alias(count_alias),
-    ]
-    if extra:
-        aggs.extend(extra)
-    return df.groupBy(*keys).agg(*aggs)
+    return df.groupBy(*keys).agg(
+        F.sum(amount_col).alias("total_purchase_amount"),
+        F.count(amount_col).alias("count_of_purchase"),
+    )
 
 
 def customer_base_stats(

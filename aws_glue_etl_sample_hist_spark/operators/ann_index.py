@@ -32,71 +32,29 @@ from pyspark.sql.window import Window
 from .similarity import auto_centroids, cosine, ivf_assign, seeded_centroids
 
 
-def _assign_for_index(
-    emb: DataFrame,
-    cent: DataFrame,
-    *,
-    vectorized: bool,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Build/append-side assignment dispatch (VERDICT r11 item 7).
-
-    ``vectorized=False`` (default): the fold-exact `ivf_assign` -- the
-    registered index queries keep EXACT brute-force-equality oracles
-    (`embedding_ivf_index_search` == `embedding_cosine_topk`), and a
-    last-ulp argmax flip on a cell boundary could move a vector between
-    cells and change which candidates a probe sees, so exactness is the
-    contract there. ``vectorized=True``: the Arrow/BLAS
-    `assign_cells_arrow` twin for trained-k-scale builds (k toward
-    n/64), where the fold is the bottleneck and the caller's contract
-    is recall-measured rather than fold-replayed; its argmax agreement
-    vs fold-exact is measured by the `embedding_assign_arrow_agreement`
-    row, and keep_vec carries vectors through map-only (no re-join)."""
-    if vectorized:
-        from .similarity import assign_cells_arrow
-
-        return assign_cells_arrow(
-            emb, cent, id_col=id_col, vec_col=vec_col, keep_vec=True
-        )
-    return ivf_assign(emb, 0, centroids=cent, id_col=id_col, vec_col=vec_col)
-
-
 def build_ivf_index(
     emb: DataFrame,
     index_dir: str,
     *,
     n_centroids: int | str = 8,
     centroids: DataFrame | None = None,
-    vectorized: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize centroids + cell-partitioned vectors under index_dir."""
+    """Materialize centroids + cell-partitioned vectors under index_dir.
+
+    Assignment is the fold-exact `ivf_assign`: the registered index queries
+    keep EXACT brute-force-equality oracles, and a last-ulp argmax flip on
+    a cell boundary would move a vector between cells and change which
+    candidates a probe sees."""
     if centroids is None:
         if n_centroids == "auto":
             centroids = auto_centroids(emb, id_col=id_col, vec_col=vec_col)
         else:
             centroids = seeded_centroids(emb, n_centroids, id_col=id_col, vec_col=vec_col)
     centroids.write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
-    spark = emb.sparkSession
-    # record which argmax convention built this index (ADVICE r12): a
-    # fold-exact build appended with vectorized=True (or vice versa) can
-    # place ulp-tie boundary vectors of ONE index under different cells,
-    # quietly weakening nprobe=1 recall. One-row Spark-written dataset
-    # (not a driver-local open()) so the meta lands on the same
-    # filesystem as the index -- object stores included.
-    # JVM-built one-row frame (r14, guide §4): a createDataFrame-backed
-    # local relation pays the Python-RDD evaluation path on write -- the
-    # JSON sink of that shape measured ~5 s flat per call (vs 0.25 s for
-    # this literal form); same single row, same file, zero Python workers
-    spark.range(1).select(
-        F.lit("arrow" if vectorized else "fold_exact").alias("assign_mode")
-    ).coalesce(1).write.mode("overwrite").json(os.path.join(index_dir, "meta"))
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    assigned = _assign_for_index(
-        emb, cent, vectorized=vectorized, id_col=id_col, vec_col=vec_col
-    )
+    cent = emb.sparkSession.read.parquet(os.path.join(index_dir, "centroids"))
+    assigned = ivf_assign(emb, 0, centroids=cent, id_col=id_col, vec_col=vec_col)
     (
         assigned.write.mode("overwrite")
         .partitionBy("cell")
@@ -104,60 +62,20 @@ def build_ivf_index(
     )
 
 
-def recorded_assign_mode(spark: SparkSession, index_dir: str) -> str | None:
-    """The assignment convention an on-disk index was built with
-    ('fold_exact' | 'arrow'), or None for a pre-meta index.
-
-    Only a MISSING meta path means "pre-meta index" (ADVICE r13): any
-    other read failure (IO/permission/corruption) re-raises, because
-    silently defaulting an arrow-built index to fold_exact is exactly
-    the mixed-convention cell-split hazard the record exists to stop."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.json(os.path.join(index_dir, "meta")).collect()
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None  # pre-meta index: no recorded mode
-        raise
-    return rows[0].assign_mode if rows else None
-
-
 def append_ivf_index(
     new_emb: DataFrame,
     index_dir: str,
     *,
-    vectorized: bool | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
     """Assign a NEW batch with the persisted centroids and append its files
     into the existing cell partitions. Centroids are never retrained here:
     cell ids must stay stable or every existing inverted list is wrong.
-
-    ``vectorized=None`` (default) appends with the RECORDED build mode
-    (ADVICE r12) so one index never mixes argmax conventions; passing an
-    explicit mode that contradicts the record warns but is honored (the
-    operator may be deliberately migrating an index)."""
-    import warnings
-
-    spark = new_emb.sparkSession
-    recorded = recorded_assign_mode(spark, index_dir)
-    if vectorized is None:
-        vectorized = recorded == "arrow"
-    elif recorded is not None and vectorized != (recorded == "arrow"):
-        warnings.warn(
-            f"append_ivf_index: index at {index_dir} was built with "
-            f"assign_mode={recorded!r} but this append uses "
-            f"vectorized={vectorized}; ulp-tie boundary vectors may land "
-            "in different cells than the build pass placed them",
-            stacklevel=2,
-        )
-    cent = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    assigned = _assign_for_index(
-        new_emb, cent, vectorized=vectorized, id_col=id_col, vec_col=vec_col
-    )
+    Same fold-exact assignment as the build, so boundary vectors land in
+    the cells the build would have placed them in."""
+    cent = new_emb.sparkSession.read.parquet(os.path.join(index_dir, "centroids"))
+    assigned = ivf_assign(new_emb, 0, centroids=cent, id_col=id_col, vec_col=vec_col)
     (
         assigned.write.mode("append")
         .partitionBy("cell")

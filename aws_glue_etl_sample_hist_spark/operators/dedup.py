@@ -559,14 +559,18 @@ def _cc_local_rows(
     return out
 
 
+# label-propagation round bound of the distributed CC loop: near-dup graphs
+# converge in 2-4 rounds; a chain needs one round per hop plus one to see
+# the fixpoint, so exhausting this raises instead of returning wrong labels
+CC_MAX_ROUNDS = 50
+
+
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
     *,
     node_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
-    max_iterations: int = 50,
-    dispatch_log: dict | None = None,
 ) -> DataFrame:
     """Min-label connected components over near-dup candidate pairs:
     (node, cluster_id) where cluster_id = smallest node id in the component.
@@ -578,9 +582,8 @@ def connected_components(
     2-4 rounds in practice). Each round is one shuffle join + one hash agg;
     intermediate labels are localCheckpoint'ed and the loop is driven by a
     changed-count action -- the standard Pregel-shaped DataFrame iteration.
-    For adversarial long-chain graphs at 100 TB, swap in
-    large-star/small-star (alternating min-propagation that halves path
-    lengths per round).
+    A graph whose diameter needs more than ``CC_MAX_ROUNDS`` rounds raises
+    ``RuntimeError`` rather than return unconverged labels.
 
     Why checkpoint, not cache: with cache() round N's LOGICAL plan still
     embeds rounds 1..N-1, so every round re-pays analysis + codegen for the
@@ -614,10 +617,6 @@ def connected_components(
             edges_c, 8 * _local.LOCAL_CAP, ids=("src", "dst")
         )
         if edge_pdf is not None:
-            if dispatch_log is not None:
-                dispatch_log["cc_path"] = "driver_local"
-                dispatch_log["cc_nodes"] = len(seed_pdf)
-                dispatch_log["cc_edges"] = len(edge_pdf)
             rows = _cc_local_rows(
                 seed_pdf["node"].tolist(),
                 list(edge_pdf.itertuples(index=False, name=None)),
@@ -636,8 +635,6 @@ def connected_components(
             )
         edges = edges_c.localCheckpoint(eager=True)
         edges_c.unpersist()
-    if dispatch_log is not None and "cc_path" not in dispatch_log:
-        dispatch_log["cc_path"] = "distributed"
     labels = seeds.withColumn("label", F.col("node")).localCheckpoint(
         eager=True
     )
@@ -645,7 +642,7 @@ def connected_components(
     # label changed: convergence needs ONE aggregate action per round, not a
     # join-and-count against the previous labels
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ROUNDS):
         msgs = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("node"), "label"
         )
@@ -662,96 +659,15 @@ def connected_components(
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in CC_MAX_ROUNDS="
+            f"{CC_MAX_ROUNDS} label-propagation rounds (graph diameter too "
+            "large for the distributed loop)"
+        )
     return labels.select(
         F.col("node").alias(node_col), F.col("label").alias("cluster_id")
     )
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    *,
-    node_col: str = "doc_id",
-    pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
-    max_iterations: int = 50,
-    return_rounds: bool = False,
-) -> DataFrame | tuple[DataFrame, int]:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") -- the
-    adversarial-graph path: path lengths roughly halve every round, so a
-    diameter-D chain converges in O(log D) rounds where plain min-label
-    propagation needs O(D). Same output contract as `connected_components`:
-    (node, cluster_id = component min); use this when near-dup graphs can
-    chain (A~B~C~... without A~C), e.g. templated spam corpora.
-
-    large-star: every node hooks its LARGER neighbors onto the minimum of
-    its neighborhood (incl. itself) -- long tails fold toward minima without
-    ever disconnecting the graph. small-star: every node and its smaller
-    neighbors all hook onto the neighborhood minimum -- flattens what
-    large-star folded. Both are one groupBy-min + one join per round, all
-    JVM; at fixpoint the edge set is exactly node -> component-min stars.
-    Convergence probe = (edge count, sum(src), sum(dst)) triple, one tiny
-    aggregate action per round like `connected_components`'s label-sum."""
-    a, b = pair_cols
-    # each round references the previous edge set several times (sym = e ∪
-    # reverse(e), then two joins), so lineage grows EXPONENTIALLY with
-    # rounds if only cached -- localCheckpoint truncates the plan per round,
-    # which is what makes O(log n) rounds on a long chain feasible at all
-    e = (
-        pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    probe = e.agg(
-        F.count(F.lit(1)), F.coalesce(F.sum("u"), F.lit(0)), F.coalesce(F.sum("v"), F.lit(0))
-    ).collect()[0]
-    prev = tuple(probe)
-    rounds = 0
-    for _ in range(max_iterations):
-        rounds += 1
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star: m(u) = min(neighborhood(u) ∪ {u}); larger neighbors -> m
-        mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-        ls = (
-            sym.join(mins, "u")
-            .select("u", "v", F.least("u", "mv").alias("m"))
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: every edge now points downward (v < u), so the group is
-        # exactly the smaller-neighborhood; u and all its parents -> min
-        mins2 = ls.groupBy("u").agg(F.min("v").alias("mv"))
-        hooked = (
-            ls.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("mv").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        new_e = (
-            hooked.union(mins2.select("u", F.col("mv").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        probe = new_e.agg(
-            F.count(F.lit(1)), F.coalesce(F.sum("u"), F.lit(0)), F.coalesce(F.sum("v"), F.lit(0))
-        ).collect()[0]
-        cur = tuple(probe)
-        e = new_e
-        if cur == prev:
-            break
-        prev = cur
-    labels = (
-        nodes.select(F.col(node_col).alias("node"))
-        .join(e.groupBy("u").agg(F.min("v").alias("label")).withColumnRenamed("u", "node"),
-              "node", "left")
-        .select(
-            F.col("node").alias(node_col),
-            F.coalesce("label", "node").alias("cluster_id"),
-        )
-    )
-    return (labels, rounds) if return_rounds else labels
 
 
 def dedup_clusters(
@@ -762,47 +678,26 @@ def dedup_clusters(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_df: int | None = None,
-    algorithm: str = "minlabel",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Full near-dup resolution: n-gram Jaccard pairs -> connected components
     -> keeper flag (cluster representative = min doc_id). The output one
     would anti-join against the corpus to drop near-duplicates.
 
-    The minlabel backend takes connected_components' size-adaptive local
-    dispatch (same fixpoint, dual-path agreement property-tested); the
-    star backend has no local twin (its value IS the distributed round
-    shape).
+    CC takes connected_components' size-adaptive local dispatch (same
+    fixpoint, dual-path agreement property-tested).
 
     ``max_df`` forwards to the candidate generation: at scale the composed
     path MUST set it, or one corpus-wide shingle turns candidate generation
     into the ~n^2/8 pair bomb the module docstring warns about.
 
     ``shingles`` (r15) forwards a precomputed `doc_shingles`-contract frame
-    to the candidate generation (cross-stage tier-artifact reuse).
-
-    ``algorithm`` picks the CC backend: ``minlabel`` (default -- O(diameter)
-    rounds, right for the shallow clique-ish graphs near-dup thresholds
-    produce) or ``star`` (large-star/small-star, O(log diameter) -- pick it
-    for corpora that CHAIN, e.g. templated spam where A~B~C~... without
-    A~C). Both produce identical (node, cluster_id = component min) labels,
-    so the choice never changes the answer, only the round count."""
-    if algorithm not in ("minlabel", "star"):
-        raise ValueError(f"algorithm must be 'minlabel' or 'star', got {algorithm!r}")
+    to the candidate generation (cross-stage tier-artifact reuse)."""
     pairs = ngram_jaccard_pairs(
         docs, n=n, threshold=threshold, text_col=text_col, id_col=id_col,
         max_df=max_df, shingles=shingles,
     )
-    if algorithm == "minlabel":
-        cc = connected_components(
-            docs,
-            pairs.select("doc_a", "doc_b"),
-            node_col=id_col,
-        )
-    else:
-        cc = connected_components_star(
-            docs, pairs.select("doc_a", "doc_b"), node_col=id_col
-        )
+    cc = connected_components(docs, pairs.select("doc_a", "doc_b"), node_col=id_col)
     return cc.select(
         id_col,
         "cluster_id",
@@ -1466,7 +1361,6 @@ def connected_components_incremental(
     *,
     node_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
-    dispatch_log: dict | None = None,
 ) -> DataFrame:
     """Merge a NEW edge batch into an existing components labeling without
     re-running CC over the standing graph -- the daily-crawl shape of
@@ -1515,12 +1409,7 @@ def connected_components_incremental(
         .unionByName(new_nodes.select(node_col))
         .distinct()
     )
-    merged = connected_components(
-        contracted_nodes,
-        mapped,
-        node_col=node_col,
-        dispatch_log=dispatch_log,
-    )
+    merged = connected_components(contracted_nodes, mapped, node_col=node_col)
     lbl_map = merged.select(
         F.col(node_col).alias("_l"), F.col("cluster_id").alias("_nl")
     )

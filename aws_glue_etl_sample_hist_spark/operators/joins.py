@@ -47,19 +47,3 @@ def left_join_drop_keys(
     for c in drop_cols:
         out = out.drop(c)
     return out
-
-
-def star_denormalize(
-    fact: DataFrame,
-    dims: list[tuple[DataFrame, list[tuple[str, str]] | str]],
-    *,
-    broadcast: bool = True,
-) -> DataFrame:
-    """Chain of left joins building the silver wide table (reference T1,
-    jb_de_enhancement_t1_fulljoin_s2s.py:53-86). Dimensions should already be
-    pre-joined amongst themselves where the reference does so (customer ⟕
-    zipcode first) -- pass the composite as one dim."""
-    out = fact
-    for dim, keys in dims:
-        out = left_join_drop_keys(out, dim, keys, broadcast_right=broadcast)
-    return out

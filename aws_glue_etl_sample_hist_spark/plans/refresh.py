@@ -8,9 +8,8 @@ corpus and its IVF index are artifacts AT REST, and the refresh job pays
 only for the batch --
 
     R0 (parallel) index     IVF index built from the STANDING embeddings
-                            (fold-exact assignment, mode recorded in the
-                            index meta so appends can never mix argmax
-                            conventions -- operators/ann_index.py)
+                            (fold-exact assignment --
+                            operators/ann_index.py)
                   publish   standing corpus committed as manifest v1
                             (io/manifest.py atomic publish)
     R1            dedup     incremental MinHash dedup: the batch's band
@@ -20,8 +19,8 @@ only for the batch --
                             (no standing match at >= 0.5 Jaccard) are the
                             kept tier
     R2            append    survivors' embeddings assigned with the
-                            PERSISTED centroids under the RECORDED assign
-                            mode and appended as new files into the
+                            PERSISTED centroids by the same fold-exact
+                            assignment and appended as new files into the
                             existing cell partitions (centroids never
                             retrain on append: cell ids must stay stable)
     R3            publish   refreshed corpus committed as manifest v2 --
@@ -82,7 +81,7 @@ def run_corpus_refresh(
 
     def r0_index() -> None:
         # fold-exact build: the registered audit carries an EXACT cell
-        # oracle, and the meta record pins appends to the same argmax
+        # oracle, and appends use the same argmax
         build_ivf_index(
             emb.filter(_standing_pred("vec_id")),
             p(out_dir, "ivf"),
@@ -109,8 +108,7 @@ def run_corpus_refresh(
         new_emb = emb.join(
             kept.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
         )
-        # vectorized=None: honor the RECORDED assign mode (fold_exact)
-        append_ivf_index(new_emb, p(out_dir, "ivf"), vectorized=None)
+        append_ivf_index(new_emb, p(out_dir, "ivf"))
 
     def r3_publish() -> None:
         kept = spark.read.parquet(p(out_dir, "kept_new"))

@@ -2092,8 +2092,8 @@ def q_corpus_refresh_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     document/stepfunction.md:187-189, lifted to the LLM-corpus tier):
     standing corpus + IVF index at rest (manifest v1) -> new batch ->
     incremental MinHash dedup (batch x standing candidates only) ->
-    survivors' embeddings appended into the persisted index under its
-    RECORDED assign mode -> atomic manifest v2 publish. Returns the
+    survivors' embeddings appended into the persisted index by the
+    build's fold-exact assignment -> atomic manifest v2 publish. Returns the
     per-document audit frame: refreshed membership and each member's
     PERSISTED index cell (exact oracle: the seeded-centroid argmax
     replay), plus all-true witnesses that incremental maintenance equals
@@ -2615,8 +2615,7 @@ def q_nation_trade_matrix(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: supplier/customer/nation all broadcast (the fact never
     shuffles for them); lineitem⋈orders is the one fact-to-fact exchange,
-    same as the silver build (and deleted by the bucketed layout); the
-    final agg runs on (nation, nation, year) keys -- bounded."""
+    same as the silver build; the final agg runs on (nation, nation, year) keys -- bounded."""
     li = load_table(spark, sf, "lineitem")
     orders = load_table(spark, sf, "orders")
     supplier = load_table(spark, sf, "supplier")

@@ -1,3 +1,3 @@
-from .jobs import stream_events_sessionize, stream_events_windowed, stream_ingest_events
+from .jobs import stream_events_sessionize, stream_events_windowed
 
-__all__ = ["stream_events_windowed", "stream_events_sessionize", "stream_ingest_events"]
+__all__ = ["stream_events_windowed", "stream_events_sessionize"]

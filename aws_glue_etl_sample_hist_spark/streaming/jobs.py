@@ -237,38 +237,6 @@ def _run_to_memory(result: DataFrame, output_mode: str, drain_timeout: float = 6
     return out
 
 
-def stream_ingest_events(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> int:
-    """Incremental bronze ingest as a stream: readStream -> derived partition
-    columns -> partitioned parquet sink, availableNow.
-
-    This is the Spark-first form of the reference's scheduled incremental
-    load (EventBridge cron + date-bounded extract + dynamic partition
-    overwrite): the checkpoint replaces the date bookkeeping -- re-running
-    processes ONLY files that appeared since the last run, exactly once, no
-    month arithmetic. Returns rows written this run (0 on a no-new-data
-    re-run, which is the idempotency test's assertion).
-    """
-    ev = _read_events_stream(spark, sf_dir)
-    enriched = ev.withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("event_date")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progresses = q.recentProgress
-    return sum(int(p["numInputRows"]) for p in progresses) if progresses else 0
-
-
 def stream_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window x event_type over the event stream; watermark
     bounds state at 1 hour of lateness. Complete output mode so the final
@@ -869,9 +837,7 @@ def _local_cluster_merge(
     return frame, {label for _, label in rows}, remap, new_final
 
 
-def stream_dedup_clusters(
-    spark: SparkSession, sf_dir: str, *, timings: dict | None = None
-) -> DataFrame:
+def stream_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup cluster maintenance: documents arrive in three
     deterministic micro-batches (doc_id % 3, one file each), and every
     batch is merged into the standing labeling INCREMENTALLY
@@ -900,26 +866,15 @@ def stream_dedup_clusters(
     pair aggregate (no standing-labels joins per merge; staleness is
     resolved by the driver's chase map -- labels only shrink, so a
     written label composed through every later remap IS the current
-    label).
-
-    ``timings`` (optional dict, filled in place) records the cost split
-    the r8 verdict asked for: setup_sec (source staging), per-batch merge
-    walls (batch_0_sec...), stream_sec (availableNow drain incl. merges)
-    -- drain floor = stream_sec - sum(batch walls). PERF.md carries the
-    measured split."""
-    import time as _time
-
+    label)."""
     from ..operators import _local
     from ..operators.dedup import connected_components_incremental
 
-    _t0 = _time.perf_counter()
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
     src_dir = _mkscratch(prefix="cc_stream_src_")
     from concurrent.futures import ThreadPoolExecutor
 
     _stage_slices(docs, F.col("doc_id") % 3, src_dir)
-    if timings is not None:
-        timings["setup_sec"] = round(_time.perf_counter() - _t0, 3)
     _state_root = _mkscratch(prefix="cc_stream_state_")
     sh_dir = os.path.join(_state_root, "sh")
     labels_root = _mkscratch(prefix="cc_stream_labels_")
@@ -937,19 +892,13 @@ def stream_dedup_clusters(
     # their doc had AT WRITE TIME; chase.get(s, s) is that label's CURRENT
     # value (labels only shrink, so the composition below is exact). Both
     # mirrors die together when a merge exceeds the caps.
-    state = {
-        "labels_path": None,
-        "n_batches": 0,
-        "cluster_ids": set(),
-        "chase": {},
-    }
+    state = {"labels_path": None, "cluster_ids": set(), "chase": {}}
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         # no isEmpty() guard (r15): it cost one Spark job per micro-batch
         # and this file source never delivers empty batches; if one ever
         # arrives, the merge below is a correct (if wasteful) no-op --
         # zero pairs, zero batch nodes, labels rewritten unchanged.
-        _bt0 = _time.perf_counter()
         from ..operators.text import tokens, word_shingles
 
         # (doc_id, shingle, n_sh) with NO extra shuffle: per-doc distinct
@@ -1074,24 +1023,17 @@ def stream_dedup_clusters(
                 F.coalesce("_lbl_b", F.col("doc_b")).alias("src_b"),
             )
         )
-        # persist the candidate pairs in BOTH modes (r14, guide §1.2): the
+        # persist the candidate pairs (r14, guide §1.2): the
         # CC merge consumes them through the two-orientation edge union,
         # whose branches do not share a physical subtree -- unpersisted,
         # the batch-vs-index candidate join ran twice per merge (~3 s/batch
-        # of pure recompute at sf0.1). Profiling mode additionally counts
-        # them here to split pair-gen wall from the CC merge wall.
+        # of pure recompute at sf0.1).
         pairs = pairs.persist()
-        if timings is not None:
-            pairs.count()
-            timings[f"batch_{batch_id}_pairgen_sec"] = round(
-                _time.perf_counter() - _bt0, 3
-            )
         old_labels = (
             spark.read.parquet(state["labels_path"])
             if state["labels_path"] is not None
             else None
         )
-        dlog: dict | None = {} if timings is not None else None
         out = os.path.join(labels_root, f"v{batch_id}")
         # bounded driver-local merge (r15, guide §5/§2.3/§2.6 -- VERDICT
         # r14 item 1): when the driver mirrors are alive and the
@@ -1140,9 +1082,6 @@ def stream_dedup_clusters(
                 "doc_id",
                 "left",
             )
-            if dlog is not None:
-                dlog["cc_path"] = "stream_driver_local"
-                dlog["cc_nodes"] = len(new_clusters)
         else:
             # mirror no longer derivable -- every later merge runs the
             # distributed path, and state rows carry no label (consistent:
@@ -1157,52 +1096,29 @@ def stream_dedup_clusters(
                 old_labels,
                 batch.select("doc_id"),
                 pairs.select("doc_a", "doc_b"),
-                dispatch_log=dlog,
             )
             state_rows = bsh.withColumn("lbl", F.lit(None).cast("long"))
         # the labels write and the shingle-index state write are
         # independent terminal jobs -- overlap them from a 2-thread pool
         # (guide §2.6) so the second write back-fills the first's task
         # tail instead of queueing behind it
-        _ct0 = _time.perf_counter()
-
         def _write_labels() -> None:
             label_frame.write.mode("overwrite").parquet(out)
 
         def _write_state() -> None:
-            _st = _time.perf_counter()
             state_rows.write.mode("overwrite").parquet(
                 os.path.join(sh_dir, f"batch_{batch_id}")
             )
-            if timings is not None:
-                timings[f"batch_{batch_id}_statewrite_sec"] = round(
-                    _time.perf_counter() - _st, 3
-                )
 
         with ThreadPoolExecutor(max_workers=2) as wpool:
             wf = [wpool.submit(_write_labels), wpool.submit(_write_state)]
             for f in wf:
                 f.result()
-        if timings is not None:
-            timings[f"batch_{batch_id}_ccwrite_sec"] = round(
-                _time.perf_counter() - _ct0, 3
-            )
-            # dispatch decision on the record (VERDICT r10 item 5): which
-            # CC path each merge took, and the contracted graph size that
-            # drove the choice
-            for dk, dv in (dlog or {}).items():
-                timings[f"batch_{batch_id}_{dk}"] = dv
         pairs.unpersist()
         arr.unpersist()
         state["labels_path"] = out
-        state["n_batches"] += 1
-        if timings is not None:
-            timings[f"batch_{batch_id}_sec"] = round(
-                _time.perf_counter() - _bt0, 3
-            )
 
     ckpt = os.path.join(_mkscratch(prefix="cc_stream_ckpt_"), "ckpt")
-    _st0 = _time.perf_counter()
     q = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -1213,8 +1129,6 @@ def stream_dedup_clusters(
         .start()
     )
     q.awaitTermination()
-    if timings is not None:
-        timings["stream_sec"] = round(_time.perf_counter() - _st0, 3)
     labels = spark.read.parquet(state["labels_path"])
     return labels.select(
         "doc_id",

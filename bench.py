@@ -559,20 +559,6 @@ def main() -> None:
                 jobs["dedup_clusters_incremental_merge_only"] / n_trials, 1
             )
 
-    # bucketed-bronze variant: the shuffle-free T1 layout (plans.medallion)
-    def _run_medallion_bkt_row():
-        with tempfile.TemporaryDirectory(prefix="medallion_bkt_bench_") as tmp:
-            return run_medallion(spark, sf_dir, tmp, bucketed=True)
-
-    _pipeline_row("medallion_pipeline_bucketed", _run_medallion_bkt_row)
-    from aws_glue_etl_sample_hist_spark.io.bucketing import drop_table
-    from aws_glue_etl_sample_hist_spark.plans.medallion import (
-        FACT_BKT_TABLE,
-        ORDERS_BKT_TABLE,
-    )
-    drop_table(spark, FACT_BKT_TABLE)
-    drop_table(spark, ORDERS_BKT_TABLE)
-
     # per-query ratio to the NEAREST interleaved sentinel, plus that
     # sentinel's own value: a slow row next to an elevated sentinel is
     # machine load on the record, not an engine regression. Computed

@@ -114,65 +114,3 @@ def test_pq_index_roundtrip_equals_inplan_adc(spark, sf_small, tmp_path):
     got = {tuple(r) for r in query_pq_index(spark, idx, _queries(emb, qids), k=5).collect()}
     want = {tuple(r) for r in pq_adc_topk(emb, qids, k=5).collect()}
     assert got == want
-
-
-def test_vectorized_build_matches_fold_exact_assignment(spark, sf_small, tmp_path):
-    """The Arrow/BLAS build path (VERDICT r11 item 7): `build_ivf_index(
-    vectorized=True)` routes assignment through `assign_cells_arrow`
-    (keep_vec=True, map-only). On this corpus its argmax agrees with the
-    fold-exact `ivf_assign` 100% (the `embedding_assign_arrow_agreement`
-    audit measures the rate instead of assuming it), so the two builds
-    must land every vector in the same cell partition -- and the
-    vectorized index must carry the vectors (same ids per cell)."""
-    emb = _emb(spark, sf_small)
-    idx_exact = str(tmp_path / "ivf_exact")
-    idx_arrow = str(tmp_path / "ivf_arrow")
-    build_ivf_index(emb, idx_exact, n_centroids=N_CELLS)
-    build_ivf_index(emb, idx_arrow, n_centroids=N_CELLS, vectorized=True)
-    exact = {
-        (r.vec_id, r.cell)
-        for r in spark.read.parquet(f"{idx_exact}/vectors").collect()
-    }
-    arrow_rows = spark.read.parquet(f"{idx_arrow}/vectors").collect()
-    arrow = {(r.vec_id, r.cell) for r in arrow_rows}
-    assert arrow == exact
-    assert all(r.embedding is not None and len(r.embedding) > 0 for r in arrow_rows)
-
-
-def test_index_records_assign_mode_and_append_defaults_to_it(
-    spark, sf_small, tmp_path
-):
-    """ADVICE r12: the build writes its argmax convention to
-    <index>/meta; append with vectorized=None follows the record, and an
-    explicit contradicting mode warns (mixing conventions can split
-    ulp-tie boundary vectors of ONE index across cells)."""
-    import warnings
-
-    from aws_glue_etl_sample_hist_spark.operators.ann_index import (
-        recorded_assign_mode,
-    )
-
-    emb = _emb(spark, sf_small)
-    half_a = emb.filter(F.col("vec_id") % 2 == 0)
-    half_b = emb.filter(F.col("vec_id") % 2 == 1)
-
-    idx = str(tmp_path / "ivf_arrowmode")
-    build_ivf_index(half_a, idx, n_centroids=N_CELLS, vectorized=True)
-    assert recorded_assign_mode(spark, idx) == "arrow"
-
-    # default append follows the record (no warning)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        append_ivf_index(half_b.filter(F.col("vec_id") < 100), idx)
-
-    # contradicting explicit mode warns but is honored
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        append_ivf_index(
-            half_b.filter(F.col("vec_id") >= 100), idx, vectorized=False
-        )
-    assert any("assign_mode" in str(x.message) for x in w)
-
-    idx2 = str(tmp_path / "ivf_foldmode")
-    build_ivf_index(half_a, idx2, n_centroids=N_CELLS)
-    assert recorded_assign_mode(spark, idx2) == "fold_exact"

@@ -1,5 +1,4 @@
-"""Remaining coverage: writer file-count policies, the CSV source path, and
-the one LSH recall property that is a theorem rather than a probability --
+"""Remaining coverage: writer file-count policies and the one LSH recall property that is a theorem rather than a probability --
 exact duplicates (identical shingle sets => identical MinHash signatures =>
 every band collides) MUST appear as candidate pairs."""
 
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 
 from aws_glue_etl_sample_hist_spark.catalog import load_table
 from aws_glue_etl_sample_hist_spark.io.sinks import WriterPolicy, write_partitioned
-from aws_glue_etl_sample_hist_spark.io.sources import read_csv
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -39,18 +37,6 @@ def test_writer_policy_target_rows_splits_files(spark, sf_small, tmp_path):
     files = _parquet_files(out)
     # one task, maxRecordsPerFile=target -> ceil(n/target) files, no shuffle
     assert len(files) == -(-n // target)
-
-
-def test_read_csv_strings_by_default(spark, tmp_path):
-    """The reference ships dims as header CSVs with all-varchar DDL; the CSV
-    source must not silently infer numerics."""
-    p = str(tmp_path / "dim.csv")
-    with open(p, "w") as f:
-        f.write("customer_id,residence\n00001,101\n00002,\n")
-    df = read_csv(spark, p)
-    assert [f.dataType.simpleString() for f in df.schema.fields] == ["string", "string"]
-    rows = {r.customer_id: r.residence for r in df.collect()}
-    assert rows == {"00001": "101", "00002": None}  # zero-padding survives
 
 
 def test_exact_duplicates_always_lsh_candidates(spark, sf_oracle):

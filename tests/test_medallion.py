@@ -135,81 +135,6 @@ def test_pipeline_retry_and_failure_propagation():
     assert set(t) == {"s.ok"} and t["s.ok"] >= 0
 
 
-def test_bucketed_medallion_matches_and_t1_join_is_shuffle_free(
-    spark, sf_small, pipeline_out, tmp_path_factory
-):
-    """bucketed=True: identical silver output, and the T1 lineitem⋈orders
-    bridge runs with ZERO shuffle exchange (bucket-aligned SMJ, no sort --
-    both sides pre-sorted within buckets)."""
-    from aws_glue_etl_sample_hist_spark.io.bucketing import drop_table
-    from aws_glue_etl_sample_hist_spark.plans.medallion import (
-        FACT_BKT_TABLE,
-        ORDERS_BKT_TABLE,
-    )
-
-    plain_out, _ = pipeline_out
-    out = str(tmp_path_factory.mktemp("medallion_bkt"))
-    try:
-        timings = run_medallion(spark, sf_small, out, bucketed=True)
-        assert set(timings) == {
-            "t0.fact", "t0.orders", "t0.dims", "t1.fulljoin",
-            "t2.brandtype", "t2.supplier", "t2.datetime", "t2.region",
-        }
-        # silver output identical to the unbucketed pipeline's
-        cols = ["l_orderkey", "l_linenumber", "o_custkey", "r_name", "l_extendedprice"]
-        a = sorted(map(tuple, spark.read.parquet(
-            os.path.join(out, "silver", "purchase_all_info")).select(*cols).collect()))
-        b = sorted(map(tuple, spark.read.parquet(
-            os.path.join(plain_out, "silver", "purchase_all_info")).select(*cols).collect()))
-        assert a == b
-        # plan of the bridge join over the bucketed bronze: no exchange at all
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            fact = spark.table(FACT_BKT_TABLE)
-            orders = spark.table(ORDERS_BKT_TABLE)
-            bridge = fact.join(
-                orders.select("o_orderkey", "o_custkey"),
-                fact.l_orderkey == F.col("o_orderkey"),
-                "left",
-            )
-            plan = bridge._sc._jvm.PythonSQLUtils.explainString(
-                bridge._jdf.queryExecution(), "formatted"
-            )
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
-        # per-month slicing: with a file-size target smaller than the
-        # biggest month, the silver write must fan a month out over >1 task
-        # (>1 file in that month's partition directory) -- the 100x-scale
-        # behavior, exercised by shrinking the target instead of the data --
-        # and the silver rows must be byte-identical to the single-slice run
-        import glob
-
-        from aws_glue_etl_sample_hist_spark.plans.medallion import (
-            PARTITION_COLS,
-            silver_join_bucketed,
-        )
-
-        biggest = max(
-            r["count"]
-            for r in spark.table(FACT_BKT_TABLE).groupBy(*PARTITION_COLS).count().collect()
-        )
-        silver_join_bucketed(spark, out, rows_per_slice=max(1, biggest // 3))
-        silver_dir = os.path.join(out, "silver", "purchase_all_info")
-        per_month_files = [
-            len(glob.glob(os.path.join(d, "*.parquet")))
-            for d in glob.glob(os.path.join(silver_dir, "purchase_year=*", "purchase_month=*"))
-        ]
-        assert max(per_month_files) > 1, per_month_files
-        c = sorted(map(tuple, spark.read.parquet(silver_dir).select(*cols).collect()))
-        assert c == b
-    finally:
-        drop_table(spark, FACT_BKT_TABLE)
-        drop_table(spark, ORDERS_BKT_TABLE)
-
-
 def test_upsert_partitioned_touches_only_affected_partitions(spark, sf_small, tmp_path):
     """CDC upsert: update one row + insert one row in a single partition;
     that partition's rows are replaced by key, every other partition's

@@ -66,6 +66,23 @@ def test_change_day_of_week_reference_assertion(spark):
     assert out[1].udf == out[1].builtin == INVALID_DATE_SENTINEL
 
 
+def test_package_import_emits_no_user_warning():
+    """Defining the UDF at import must not trip pyspark's type-hint
+    eval-type inference warning; a fresh interpreter with UserWarning
+    promoted to an error imports the whole query registry."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c",
+         "import aws_glue_etl_sample_hist_spark.queries"],
+        cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+
+
 def test_presto_day_of_week_numbering(spark):
     # 2024-01-01 is a Monday: Presto day_of_week=1, Spark dayofweek=2
     df = spark.createDataFrame([("2024-01-01",)], ["d"])
@@ -132,23 +149,6 @@ def test_multimodal_meta_and_frames(spark):
     assert meta[0].height == ord("a") * 3 % 480 + 1
     frames = sample_frames(wp, frame_bytes=16, stride=4).collect()
     assert [(r.doc_id, r.frame_idx) for r in frames] == [(2, 0)]
-
-
-def test_sort_and_star_denormalize_wrappers(spark):
-    from aws_glue_etl_sample_hist_spark.operators.joins import star_denormalize
-    from aws_glue_etl_sample_hist_spark.operators.sort import multi_sort, topk
-
-    fact = spark.createDataFrame(
-        [("A", 1, 30.0), ("B", 2, 10.0), ("C", 1, 20.0)], ["k", "dim_id", "amt"]
-    )
-    dim = spark.createDataFrame([(1, "x"), (2, "y")], ["dim_id", "label"])
-    wide = star_denormalize(fact, [(dim, [("dim_id", "dim_id")])])
-    assert {(r.k, r.label) for r in wide.collect()} == {("A", "x"), ("B", "y"), ("C", "x")}
-
-    ordered = multi_sort(wide, F.col("label").asc(), F.col("amt").desc()).collect()
-    assert [(r.k) for r in ordered] == ["A", "C", "B"]
-    top1 = topk(wide, 1, F.col("amt").desc(), F.col("k").asc()).collect()
-    assert [(r.k, r.amt) for r in top1] == [("A", 30.0)]
 
 
 def test_salted_left_join_equals_plain_join(spark):
@@ -229,38 +229,38 @@ def test_near_dup_bucketed_subset_of_exact_with_recall(spark, sf_oracle):
     assert len(buck) >= 0.5 * len(exact)
 
 
-def test_star_cc_matches_label_propagation_on_fixture(spark, sf_oracle):
-    """Large-star/small-star CC produces the identical (node, cluster_id)
-    labeling as the min-label propagation path on the real near-dup graph."""
-    from aws_glue_etl_sample_hist_spark.catalog import load_table
-    from aws_glue_etl_sample_hist_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-        ngram_jaccard_pairs,
-    )
-
-    docs = load_table(spark, sf_oracle, "documents")
-    pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.2).select("doc_a", "doc_b")
-    lab = connected_components(docs, pairs)
-    star = connected_components_star(docs, pairs)
-    assert sorted(map(tuple, lab.collect())) == sorted(map(tuple, star.collect()))
-
-
-def test_star_cc_long_chain_converges_in_log_rounds(spark):
-    """A 256-node path graph (diameter 255) is the adversarial case: plain
-    min-label propagation needs ~255 rounds; star contraction must finish in
-    O(log n) -- well under 12 -- with every node labeled by the chain head."""
-    from pyspark.sql import functions as F
-
-    from aws_glue_etl_sample_hist_spark.operators.dedup import connected_components_star
+def test_cc_long_chain_converges_to_chain_head(spark):
+    """A 256-node path graph (diameter 255) is the adversarial case for
+    min-label propagation; under the driver-local cap it goes through the
+    union-find dispatch, and every node is labeled by the chain head."""
+    from aws_glue_etl_sample_hist_spark.operators.dedup import connected_components
 
     n = 256
     nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
-    labels, rounds = connected_components_star(nodes, chain, return_rounds=True)
-    assert rounds <= 12, rounds
-    got = {r.doc_id: r.cluster_id for r in labels.collect()}
+    got = {r.doc_id: r.cluster_id for r in connected_components(nodes, chain).collect()}
     assert got == {i: 0 for i in range(n)}
+
+
+def test_distributed_cc_raises_when_round_bound_is_exhausted(spark, monkeypatch):
+    """The distributed loop never returns unconverged labels: a chain that
+    needs more rounds than CC_MAX_ROUNDS raises a RuntimeError naming the
+    bound, and a chain that fits converges to its head."""
+    from aws_glue_etl_sample_hist_spark.operators import _local, dedup
+
+    monkeypatch.setattr(_local, "LOCAL_CAP", 0)
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 3)
+
+    def chain(n):
+        nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
+        )
+        return dedup.connected_components(nodes, edges)
+
+    with pytest.raises(RuntimeError, match="CC_MAX_ROUNDS=3"):
+        chain(6)
+    assert {r.doc_id: r.cluster_id for r in chain(3).collect()} == {0: 0, 1: 0, 2: 0}
 
 
 def test_trained_ivf_recall_at_least_seeded(spark, sf_oracle):
@@ -379,27 +379,6 @@ def test_cosine_zero_vector_never_nan(spark):
     for exact in (True, False):
         pairs = near_dup_pairs(emb, 0.0, exact=exact).collect()
         assert all(not math.isnan(r.cosine) for r in pairs)
-
-
-def test_dedup_clusters_algorithm_knob_identical_labels(spark, sf_oracle):
-    """The CC backend is a knob, not a semantic choice: minlabel and
-    large-star/small-star must emit identical (doc_id, cluster_id,
-    is_keeper) labels on the real documents table."""
-    from aws_glue_etl_sample_hist_spark.catalog import load_table
-    from aws_glue_etl_sample_hist_spark.operators.dedup import dedup_clusters
-
-    docs = load_table(spark, sf_oracle, "documents")
-    minlabel = {
-        (r.doc_id, r.cluster_id, r.is_keeper)
-        for r in dedup_clusters(docs, max_df=100).collect()
-    }
-    star = {
-        (r.doc_id, r.cluster_id, r.is_keeper)
-        for r in dedup_clusters(docs, max_df=100, algorithm="star").collect()
-    }
-    assert minlabel == star
-    with pytest.raises(ValueError, match="algorithm"):
-        dedup_clusters(docs, algorithm="labelprop")
 
 
 def test_dedup_clusters_local_dispatch_identical_labels(

@@ -15,9 +15,6 @@ def test_refresh_dag_state_equals_from_scratch(spark, sf_small, tmp_path):
         latest_version,
         read_published,
     )
-    from aws_glue_etl_sample_hist_spark.operators.ann_index import (
-        recorded_assign_mode,
-    )
     from aws_glue_etl_sample_hist_spark.plans.refresh import (
         refresh_audit,
         run_corpus_refresh,
@@ -36,9 +33,6 @@ def test_refresh_dag_state_equals_from_scratch(spark, sf_small, tmp_path):
     }
     v1 = read_published(spark, os.path.join(out, "pub"), "corpus", version=1)
     assert {r.doc_id for r in v1.collect()} == standing_ids
-
-    # the append ran under the recorded build mode (fold_exact build)
-    assert recorded_assign_mode(spark, os.path.join(out, "ivf")) == "fold_exact"
 
     # the audit frame: every witness TRUE, membership = standing + kept
     audit = refresh_audit(spark, sf_small, out).collect()

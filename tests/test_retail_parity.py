@@ -127,6 +127,7 @@ def test_mart_salesbyageproducts_golden(retail):
         silver,
         ["affiliate", "purchase_year", "purchase_month", "age_group",
          "division_cd", "main_category_desc", "sub_category_desc"],
+        "amount",
     )
     got = {
         (r.affiliate, r.purchase_month, r.age_group, r.main_category_desc): (

@@ -1,30 +1,9 @@
-"""Streaming-specific behavior not covered by the oracle gate: checkpointed
-exactly-once ingest (re-run processes nothing new) -- the streaming analog of
-the reference's dynamic-partition-overwrite incremental loads."""
+"""Streaming-specific behavior not covered by the oracle gate: output-mode
+semantics, micro-batch staging and the streaming merge's dispatch paths."""
 
 from __future__ import annotations
 
 import os
-
-from aws_glue_etl_sample_hist_spark.streaming import stream_ingest_events
-
-
-def test_stream_ingest_is_exactly_once(spark, sf_small, tmp_path):
-    out = str(tmp_path / "bronze_events")
-    ckpt = str(tmp_path / "ckpt")
-
-    first = stream_ingest_events(spark, sf_small, out, ckpt)
-    n_src = spark.read.parquet(os.path.join(sf_small, "events.parquet")).count()
-    assert first == n_src
-    written = spark.read.parquet(out)
-    assert written.count() == n_src
-    assert "event_date" in written.columns  # partition column materialized
-
-    # re-run with the same checkpoint: no new files -> zero rows processed,
-    # sink unchanged (no duplication)
-    second = stream_ingest_events(spark, sf_small, out, ckpt)
-    assert second == 0
-    assert spark.read.parquet(out).count() == n_src
 
 
 def test_append_mode_emits_only_watermark_closed_windows(spark, sf_small):

@@ -48,16 +48,12 @@ OUT = os.path.abspath(
 def main() -> None:
     name = sys.argv[1]
     spark = get_spark(f"scaling_sf1_{name}")
-    from aws_glue_etl_sample_hist_spark.plans.medallion import run_medallion
     from aws_glue_etl_sample_hist_spark.plans.refresh import run_corpus_refresh
     from aws_glue_etl_sample_hist_spark.plans.retrieval import run_retrieval
 
     runners = {
         "retrieval_pipeline": run_retrieval,
         "corpus_refresh_pipeline": run_corpus_refresh,
-        "medallion_pipeline_bucketed": (
-            lambda s, sf, tmp: run_medallion(s, sf, tmp, bucketed=True)
-        ),
     }
     fn = runners[name]
     # warm codegen/scan paths so the ratio is not JIT-bound
@@ -69,15 +65,6 @@ def main() -> None:
         wall = round(time.perf_counter() - t0, 3)
     release_operator_caches()
     spark.catalog.clearCache()
-    if name == "medallion_pipeline_bucketed":
-        from aws_glue_etl_sample_hist_spark.io.bucketing import drop_table
-        from aws_glue_etl_sample_hist_spark.plans.medallion import (
-            FACT_BKT_TABLE,
-            ORDERS_BKT_TABLE,
-        )
-
-        drop_table(spark, FACT_BKT_TABLE)
-        drop_table(spark, ORDERS_BKT_TABLE)
     s1 = _sentinel_trial(spark, SF1)
     rec = {
         "name": name,

@@ -146,7 +146,6 @@ PROBE = [
 PIPELINES = [
     "medallion_pipeline",
     "curation_pipeline",
-    "medallion_pipeline_bucketed",
     "retrieval_pipeline",
     "corpus_refresh_pipeline",
 ]
@@ -176,23 +175,8 @@ def _time_pipeline(spark, name: str, sf_dir: str) -> float:
     from aws_glue_etl_sample_hist_spark.plans.refresh import run_corpus_refresh
     from aws_glue_etl_sample_hist_spark.plans.retrieval import run_retrieval
 
-    def _medallion_bkt(spark, sf_dir, tmp):
-        from aws_glue_etl_sample_hist_spark.io.bucketing import drop_table
-        from aws_glue_etl_sample_hist_spark.plans.medallion import (
-            FACT_BKT_TABLE,
-            ORDERS_BKT_TABLE,
-        )
-
-        try:
-            return run_medallion(spark, sf_dir, tmp, bucketed=True)
-        finally:
-            # saveAsTable state outlives the tempdir; same hygiene as bench
-            drop_table(spark, FACT_BKT_TABLE)
-            drop_table(spark, ORDERS_BKT_TABLE)
-
     fn = {
         "medallion_pipeline": run_medallion,
-        "medallion_pipeline_bucketed": _medallion_bkt,
         "curation_pipeline": run_curation,
         "retrieval_pipeline": run_retrieval,
         "corpus_refresh_pipeline": run_corpus_refresh,
