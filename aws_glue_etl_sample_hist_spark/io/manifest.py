@@ -36,6 +36,7 @@ import os
 import re
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -86,10 +87,11 @@ def publish_tables(tables: dict[str, DataFrame], root: str) -> int:
             for f in os.listdir(out_dir)
             if f.endswith(".parquet")
         )
-        spark = df.sparkSession
-        n = spark.read.parquet(*files).count() if files else 0
-        # schema travels in the manifest so a 0-file (empty-table) publish
-        # is still readable with its declared columns
+        # row counts from the staged files' footers: no Spark job
+        n = sum(pq.read_metadata(f).num_rows for f in files)
+        # schema travels in the manifest: readers take it from there
+        # instead of inferring it, and a 0-file (empty-table) publish is
+        # still readable with its declared columns
         entries[name] = {"files": files, "n_rows": n, "schema": df.schema.json()}
     mdir = _manifest_dir(root)
     os.makedirs(mdir, exist_ok=True)
@@ -135,16 +137,19 @@ def read_published(
         )
     entry = manifest["tables"][table]
     files = entry["files"]
-    if not files:
-        # empty-table publish (0 part files): reconstruct from the
-        # recorded schema rather than crashing in spark.read.parquet(*[])
-        schema_json = entry.get("schema")
-        if schema_json is None:
+    schema_json = entry.get("schema")
+    if schema_json is None:
+        if not files:
             raise ValueError(
                 f"table {table!r} at version v{v} has no data files and "
                 "the manifest predates schema recording -- cannot "
                 "reconstruct an empty DataFrame"
             )
-        schema = StructType.fromJson(json.loads(schema_json))
+        return spark.read.parquet(*files)
+    schema = StructType.fromJson(json.loads(schema_json))
+    if not files:
+        # empty-table publish (0 part files): reconstruct from the
+        # recorded schema rather than crashing in spark.read.parquet(*[])
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(*files)
+    # the recorded schema: no schema-inference job
+    return spark.read.schema(schema).parquet(*files)

@@ -12,13 +12,66 @@ noted single-connection in document/glue_t0.md:144). Spark-first rebuild:
   - JDBC stays available, but ALWAYS with partitioned-read options
     (partitionColumn/lowerBound/upperBound/numPartitions) -- the reference's
     single-connection read followed by ``repartition(4)`` is exactly the
-    anti-pattern that stops scaling past one DB socket.
+    anti-pattern that stops scaling past one DB socket;
+  - a tier the engine wrote itself is read back with ``read_tier``: the
+    schema comes from one file's footer on the driver (the reference's
+    readers get it from the Glue Data Catalog), so the read starts no
+    schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# the footer key Spark's parquet writer fills with the row schema as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """First data file under ``path`` in sorted order: ``_``/``.`` names
+    (``_SUCCESS``, ``_source.json``, checksums) are skipped and only
+    ``k=v`` partition directories are descended."""
+    for name in sorted(os.listdir(path)):
+        if name.startswith(("_", ".")):
+            continue
+        full = os.path.join(path, name)
+        if os.path.isdir(full):
+            if "=" in name:
+                found = _first_data_file(full)
+                if found is not None:
+                    return found
+        else:
+            return full
+    return None
+
+
+def read_tier(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet tier the engine wrote, with the Spark schema its
+    writer stored in the footer instead of a schema-inference job.
+
+    The schema is read on the driver with pyarrow from the first data file
+    (``_first_data_file``); every file of a tier comes from the same
+    write, so one footer speaks for all. Partition columns are not in the
+    file schema: Spark still infers them from the ``k=v`` directory names,
+    on the driver and without a job. Raises ``FileNotFoundError`` when
+    ``path`` holds no data file and ``ValueError`` when the footer carries
+    no Spark schema (a file some other writer produced)."""
+    first = _first_data_file(path)
+    if first is None:
+        raise FileNotFoundError(f"no parquet data file under {path!r}")
+    meta = pq.read_metadata(first).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(
+            f"{first!r} carries no Spark schema in its footer: read_tier "
+            "only reads tiers written by Spark"
+        )
+    schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_jdbc(

@@ -29,6 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..io.sources import read_tier
 from .similarity import auto_centroids, cosine, ivf_assign, seeded_centroids
 
 
@@ -53,7 +54,7 @@ def build_ivf_index(
         else:
             centroids = seeded_centroids(emb, n_centroids, id_col=id_col, vec_col=vec_col)
     centroids.write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
-    cent = emb.sparkSession.read.parquet(os.path.join(index_dir, "centroids"))
+    cent = read_tier(emb.sparkSession, os.path.join(index_dir, "centroids"))
     assigned = ivf_assign(emb, 0, centroids=cent, id_col=id_col, vec_col=vec_col)
     (
         assigned.write.mode("overwrite")
@@ -74,7 +75,7 @@ def append_ivf_index(
     cell ids must stay stable or every existing inverted list is wrong.
     Same fold-exact assignment as the build, so boundary vectors land in
     the cells the build would have placed them in."""
-    cent = new_emb.sparkSession.read.parquet(os.path.join(index_dir, "centroids"))
+    cent = read_tier(new_emb.sparkSession, os.path.join(index_dir, "centroids"))
     assigned = ivf_assign(new_emb, 0, centroids=cent, id_col=id_col, vec_col=vec_col)
     (
         assigned.write.mode("append")
@@ -99,7 +100,7 @@ def query_ivf_index(
     """
     import math
 
-    cent_rows = spark.read.parquet(os.path.join(index_dir, "centroids")).collect()
+    cent_rows = read_tier(spark, os.path.join(index_dir, "centroids")).collect()
 
     def _cos(a: list[float], b: list[float]) -> float:
         dot = sum(x * y for x, y in zip(a, b))
@@ -116,7 +117,7 @@ def query_ivf_index(
     cells = sorted({c for cs in probes.values() for c in cs})
 
     # cell literals BEFORE the scan => PartitionFilters prune to probed dirs
-    vectors = spark.read.parquet(os.path.join(index_dir, "vectors")).filter(
+    vectors = read_tier(spark, os.path.join(index_dir, "vectors")).filter(
         F.col("cell").isin(cells)
     )
     # one row per (query, probed cell) -> the cell join stays an EQUI join;
@@ -200,7 +201,7 @@ def build_pq_index(
 
 
 def _load_codebook(spark: SparkSession, index_dir: str) -> list[list[list[float]]]:
-    rows = spark.read.parquet(os.path.join(index_dir, "codebook")).collect()
+    rows = read_tier(spark, os.path.join(index_dir, "codebook")).collect()
     by_sub: dict[int, dict[int, list[float]]] = {}
     for r in rows:
         by_sub.setdefault(r.subspace, {})[r.code_id] = [float(x) for x in r.cv]
@@ -224,7 +225,7 @@ def query_pq_index(
     from .similarity import adc_distance
 
     cb = _load_codebook(spark, index_dir)
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
+    codes = read_tier(spark, os.path.join(index_dir, "codes"))
     q_df = F.broadcast(
         arrow_local_frame(spark, queries, "query_id long, qv array<float>")
     )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..io.sinks import write_partitioned
+from ..io.sources import read_tier
 from .pipeline import Pipeline
 
 BENCH_MAX_DOC_ID = 10  # doc_id < 10 stand in for the held-out eval set
@@ -93,10 +94,10 @@ def run_curation(
     def c1_cleaned() -> None:
         from ..operators.dedup import cluster_best_keeper
 
-        stats = spark.read.parquet(p(out_dir, "c0", "doc_stats")).select(
+        stats = read_tier(spark, p(out_dir, "c0", "doc_stats")).select(
             "doc_id", "quality_score", "n_tokens"
         )
-        shingle_index = spark.read.parquet(p(out_dir, "c0", "shingle_index"))
+        shingle_index = read_tier(spark, p(out_dir, "c0", "shingle_index"))
         # RefinedWeb-style canonicalization (r9 VERDICT item 7): each
         # near-dup cluster keeps its LONGEST member (ties to smallest id)
         # -- a content-aware keeper, not dedup_clusters' min-id accident.
@@ -125,8 +126,8 @@ def run_curation(
     def c2_released() -> None:
         from ..operators.dedup import contamination_flags
 
-        cleaned = spark.read.parquet(p(out_dir, "c1", "cleaned"))
-        bench = spark.read.parquet(p(out_dir, "c0", "benchmark"))
+        cleaned = read_tier(spark, p(out_dir, "c1", "cleaned"))
+        bench = read_tier(spark, p(out_dir, "c0", "benchmark"))
         flags = contamination_flags(cleaned, bench, n=5).filter(
             F.col("is_contaminated") == 1
         ).select("doc_id")
@@ -139,7 +140,7 @@ def run_curation(
     def c3_training() -> None:
         from ..operators.sampling import shuffle_shards
 
-        released = spark.read.parquet(p(out_dir, "c2", "released"))
+        released = read_tier(spark, p(out_dir, "c2", "released"))
         write_partitioned(
             shuffle_shards(released, n_shards),
             p(out_dir, "c3", "training"),
@@ -149,7 +150,7 @@ def run_curation(
     def c3_manifest() -> None:
         from ..operators.text import token_count
 
-        released = spark.read.parquet(p(out_dir, "c2", "released"))
+        released = read_tier(spark, p(out_dir, "c2", "released"))
         manifest = released.groupBy("lang", "source").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(token_count(F.col("text"))).alias("n_tokens"),

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..io.manifest import latest_version, publish_tables, read_published
+from ..io.sources import read_tier
 from .pipeline import Pipeline
 
 # doc_id % 10 < 8 is the standing corpus; % 10 >= 8 the incoming batch
@@ -104,14 +105,14 @@ def run_corpus_refresh(
         ).parquet(p(out_dir, "kept_new"))
 
     def r2_append() -> None:
-        kept = spark.read.parquet(p(out_dir, "kept_new"))
+        kept = read_tier(spark, p(out_dir, "kept_new"))
         new_emb = emb.join(
             kept.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
         )
         append_ivf_index(new_emb, p(out_dir, "ivf"))
 
     def r3_publish() -> None:
-        kept = spark.read.parquet(p(out_dir, "kept_new"))
+        kept = read_tier(spark, p(out_dir, "kept_new"))
         refreshed = standing_docs.select("doc_id").unionByName(kept)
         publish_tables({"corpus": refreshed}, p(out_dir, "pub"))
 
@@ -158,10 +159,10 @@ def refresh_audit(
     witnesses, all TRUE when maintenance preserved state."""
     p = os.path.join
     corpus = read_published(spark, p(out_dir, "pub"), "corpus")
-    lists = spark.read.parquet(p(out_dir, "ivf", "vectors")).select(
+    lists = read_tier(spark, p(out_dir, "ivf", "vectors")).select(
         "vec_id", F.col("cell").cast("long").alias("cell")
     )
-    scratch = spark.read.parquet(p(out_dir, "ivf_scratch", "vectors")).select(
+    scratch = read_tier(spark, p(out_dir, "ivf_scratch", "vectors")).select(
         F.col("vec_id").alias("_svid"), F.col("cell").cast("long").alias("_scell")
     )
 

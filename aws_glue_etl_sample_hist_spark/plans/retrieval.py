@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..io.sinks import write_partitioned
+from ..io.sources import read_tier
 from ..operators.ann_index import build_ivf_index, build_pq_index, query_ivf_index
 from ..operators.ranking import BM25_B, BM25_K1
 from ..operators.text import token_count, tokens
@@ -81,11 +82,11 @@ def serve_bm25(
 ) -> DataFrame:
     """BM25 top-k from the PERSISTED index only: posting partitions for the
     query terms (pruned scan), the lengths table, and the 1-row stats."""
-    postings = spark.read.parquet(os.path.join(index_dir, "postings")).filter(
+    postings = read_tier(spark, os.path.join(index_dir, "postings")).filter(
         F.col("term").isin(terms)
     )
-    dl = spark.read.parquet(os.path.join(index_dir, "lengths"))
-    stats = spark.read.parquet(os.path.join(index_dir, "stats"))
+    dl = read_tier(spark, os.path.join(index_dir, "lengths"))
+    stats = read_tier(spark, os.path.join(index_dir, "stats"))
     dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = dfreq.crossJoin(F.broadcast(stats)).select(
         "term",
@@ -172,7 +173,7 @@ def serve_mmr(
     fused = serve_hybrid(spark, index_dir, terms, query_vec, k=20).select(
         "doc_id", F.col("rrf_score").alias("score")
     )
-    vecs = spark.read.parquet(os.path.join(index_dir, "ivf", "vectors")).select(
+    vecs = read_tier(spark, os.path.join(index_dir, "ivf", "vectors")).select(
         "vec_id", "embedding"
     )
     return mmr_rerank(fused, vecs, k=k, lam=0.7)
@@ -186,7 +187,7 @@ def run_retrieval(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, f
         write_partitioned(_cleaned(spark, sf_dir), p(out_dir, "cleaned"))
 
     def _cleaned_from_disk() -> DataFrame:
-        return spark.read.parquet(p(out_dir, "cleaned"))
+        return read_tier(spark, p(out_dir, "cleaned"))
 
     def r1_postings() -> None:
         build_postings(_cleaned_from_disk(), out_dir)

@@ -216,6 +216,46 @@ def test_manifest_empty_table_roundtrip(spark, tmp_path):
     assert [f.name for f in got.schema.fields] == ["k", "tag"]
 
 
+def test_manifest_counts_and_schema_equal_spark_inference(spark, tmp_path):
+    """publish_tables takes n_rows from the staged footers and
+    read_published reads with the recorded schema: both equal what a
+    Spark count and schema inference over the same files give, and the
+    read starts no job."""
+    import json
+
+    from aws_glue_etl_sample_hist_spark.io.manifest import (
+        publish_tables,
+        read_published,
+    )
+
+    root = str(tmp_path / "lake")
+    df = (
+        spark.range(0, 1000, 1, 3)
+        .withColumn("tag", F.when(F.col("id") % 3 == 0, None).otherwise(F.lit("x")))
+        .withColumn("score", F.col("id") / 7)
+        .withColumn("day", F.to_date(F.lit("2024-01-31")))
+        .filter(F.col("id") % 5 != 0)
+    )
+    v = publish_tables({"t": df}, root)
+    with open(os.path.join(root, "_manifests", f"v{v}.json")) as f:
+        entry = json.load(f)["tables"]["t"]
+    inferred = spark.read.parquet(*entry["files"])
+    assert len(entry["files"]) > 1
+    assert entry["n_rows"] == inferred.count() == 800
+
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-read-probe", "job count probe")
+    try:
+        got = read_published(spark, root, "t")
+        jobs = sc.statusTracker().getJobIdsForGroup("manifest-read-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, inferred.collect()))
+
+
 def test_manifest_read_without_commit_names_the_root(spark, tmp_path):
     """A root with no committed manifest raises FileNotFoundError naming
     the root, not an open() error on a v0 manifest that never exists."""

@@ -1,5 +1,8 @@
 """The one bounded driver-local fetch (`operators/_local.py::fetch_bounded`)
-and the rule that no other package module hand-rolls its own probe."""
+and the rule that no other package module hand-rolls its own probe; and
+the rule that the pipelines and the persisted ANN indexes read their tiers
+through `io.sources.read_tier`, never through a schema-inferring
+`.read.parquet(`."""
 
 from __future__ import annotations
 
@@ -74,3 +77,29 @@ def test_no_hand_rolled_limit_topandas_probe_outside_local():
     # the pattern itself must catch the shapes it is meant to forbid
     assert _PROBE.search("pdf = df.limit(cap + 1).toPandas()")
     assert _PROBE.search("x = (\n    df.select('a')\n    .limit(int(n) + 1)\n    .toPandas()\n)")
+
+
+# `.read.parquet(` infers the schema with a Spark job; the plans and the
+# persisted ANN indexes read engine-written tiers, whose footer carries it
+_INFERRING_READ = re.compile(r"\.read\s*\.parquet\(")
+
+
+def test_tier_reads_go_through_read_tier():
+    plans = os.path.join(PKG, "plans")
+    paths = [
+        os.path.join(plans, n) for n in sorted(os.listdir(plans)) if n.endswith(".py")
+    ] + [os.path.join(PKG, "operators", "ann_index.py")]
+    offenders = []
+    for path in paths:
+        with open(path) as f:
+            src = f.read()
+        offenders += [
+            f"{os.path.relpath(path, PKG)}:{src.count(chr(10), 0, m.start()) + 1}"
+            for m in _INFERRING_READ.finditer(src)
+        ]
+    assert offenders == [], (
+        f"{offenders} read a tier with .read.parquet(; use io.sources.read_tier"
+    )
+    assert _INFERRING_READ.search("df = spark.read.parquet(os.path.join(d, 'x'))")
+    assert _INFERRING_READ.search("df = (\n    spark.read\n    .parquet(p)\n)")
+    assert not _INFERRING_READ.search("df = read_tier(spark, os.path.join(d, 'x'))")
