@@ -1,8 +1,15 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from aws_glue_etl_sample_hist_spark.session import get_spark
+from tests import memory_budget
+
+# Size the test JVM heap from the memory budget before any session starts;
+# an operator's own SPARK_GRAFT_DRIVER_MEM wins.
+os.environ.setdefault(memory_budget.DRIVER_MEM_ENV, memory_budget.JVM_HEAP)
 
 
 def pytest_configure(config):

@@ -16,8 +16,12 @@ tests/test_driver_canon.py::test_uncast_hugeint_sum_fails_locally)."""
 
 from __future__ import annotations
 
+import atexit
 import datetime
 import math
+import os
+import shutil
+import tempfile
 from decimal import Decimal
 
 import duckdb
@@ -25,6 +29,7 @@ import numpy as np
 import pandas as pd
 
 from aws_glue_etl_sample_hist_spark.catalog import TABLES, table_path
+from tests.memory_budget import DUCKDB_MEMORY_LIMIT
 
 FLOAT_DECIMALS = 6
 
@@ -87,7 +92,18 @@ def _norm_rows(cols, rows):
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB with a view per catalog table of ``sf_dir``.
+
+    It holds to the test memory budget (``tests/memory_budget.py``) and
+    spills past it to a fresh temporary directory: DuckDB's own default is
+    ``.tmp`` under the working directory, i.e. inside the checkout. DuckDB
+    removes the spill directory it made when the connection closes; its
+    parent goes at interpreter exit."""
     con = duckdb.connect()
+    parent = tempfile.mkdtemp(prefix="duckdb-oracle-")
+    atexit.register(shutil.rmtree, parent, True)
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory = '{os.path.join(parent, 'spill')}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
     return con

@@ -3,9 +3,14 @@ comparison runs at sf0.01, where many groups fit in ONE shuffle partition --
 so an operator whose correctness depends on partitioning (gaps-and-islands
 windows, banded joins, sessionization, iterative contraction) could pass
 there yet break the moment a group spans partitions. This tier re-runs the
-DuckDB comparison for the 22 heavy partitioning-sensitive queries at 10x
-the rows with the engine's full 32-way shuffle parallelism, so per-group
-data genuinely crosses partition boundaries.
+DuckDB comparison for the heavy partitioning-sensitive queries listed in
+``HEAVY`` (41 rows) at 10x the rows, on the test session's ``local[8]`` with
+8 shuffle partitions (``tests/conftest.py``), so per-group data genuinely
+crosses partition boundaries.
+
+The oracles hold to the test memory budget (``tests/memory_budget.py``).
+``part_set_similarity_join``'s oracle is a brute-force token self-join that
+outgrows its DuckDB share at sf0.1 and spills to a temporary directory.
 
 Marked `sf01`: deselect with `-m "not sf01"` for a quick loop; the round
 checklist runs it (`python -m pytest tests/test_oracle_sf01.py -q`).
