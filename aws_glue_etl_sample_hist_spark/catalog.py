@@ -64,10 +64,8 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 # load_table add one round-robin repartition after the scan (deterministic:
 # sort-before-repartition is on by default, SPARK-23207). Tiny
 # broadcast-sized tables (< _SPREAD_MIN_BYTES) are never spread -- fanning
-# 25 nation rows over 32 tasks only adds scheduling overhead.
-#
-# Dial: SPARK_GRAFT_SCAN_SPREAD=off disables; =<int> forces that partition
-# count; unset/auto = min(cores, row-count-derived cap) as described.
+# 25 nation rows over 32 tasks only adds scheduling overhead. The spread is
+# min(cores, rows // 64) partitions.
 #
 # WHY ONLY SOME TABLES (correctness, not performance): a round-robin
 # repartition changes the ORDER doubles are added in downstream sums, and
@@ -109,16 +107,10 @@ def _scan_layout(path: str) -> tuple[int, int, int]:
 
 def _spread_partitions(spark: SparkSession, path: str) -> int:
     """How many partitions load_table should spread this scan over;
-    0 = leave the scan alone (layout already parallel enough, table tiny,
-    or the dial is off)."""
-    dial = os.environ.get("SPARK_GRAFT_SCAN_SPREAD", "auto").strip().lower()
-    if dial in ("off", "0", "false", "no"):
-        return 0
+    0 = leave the scan alone (layout already parallel enough, or table
+    tiny)."""
     row_groups, nbytes, rows = _scan_layout(path)
     cores = spark.sparkContext.defaultParallelism
-    if dial not in ("", "auto"):
-        n = int(dial)
-        return n if row_groups < n else 0
     if nbytes < _SPREAD_MIN_BYTES:
         return 0
     # enough tasks to occupy the cores; capped so a small table still keeps

@@ -44,10 +44,14 @@ def build_ivf_index(
 ) -> None:
     """Materialize centroids + cell-partitioned vectors under index_dir.
 
-    Assignment is the fold-exact `ivf_assign`: the registered index queries
-    keep EXACT brute-force-equality oracles, and a last-ulp argmax flip on
-    a cell boundary would move a vector between cells and change which
-    candidates a probe sees."""
+    Assignment is `ivf_assign`, whose kernel reproduces the Catalyst
+    cosine bit for bit: the registered index queries keep EXACT
+    brute-force-equality oracles, and a last-ulp argmax flip on a cell
+    boundary would move a vector between cells and change which
+    candidates a probe sees. The map-only assignment keeps the input's
+    partitioning, so the vectors are hash-partitioned on the cell before
+    the partitioned write: one file per cell instead of one per (input
+    partition, cell)."""
     if centroids is None:
         if n_centroids == "auto":
             centroids = auto_centroids(emb, id_col=id_col, vec_col=vec_col)
@@ -57,7 +61,8 @@ def build_ivf_index(
     cent = read_tier(emb.sparkSession, os.path.join(index_dir, "centroids"))
     assigned = ivf_assign(emb, 0, centroids=cent, id_col=id_col, vec_col=vec_col)
     (
-        assigned.write.mode("overwrite")
+        assigned.repartition("cell")
+        .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(os.path.join(index_dir, "vectors"))
     )
@@ -73,12 +78,13 @@ def append_ivf_index(
     """Assign a NEW batch with the persisted centroids and append its files
     into the existing cell partitions. Centroids are never retrained here:
     cell ids must stay stable or every existing inverted list is wrong.
-    Same fold-exact assignment as the build, so boundary vectors land in
-    the cells the build would have placed them in."""
+    Same assignment and cell partitioning as the build, so boundary
+    vectors land in the cells the build would have placed them in."""
     cent = read_tier(new_emb.sparkSession, os.path.join(index_dir, "centroids"))
     assigned = ivf_assign(new_emb, 0, centroids=cent, id_col=id_col, vec_col=vec_col)
     (
-        assigned.write.mode("append")
+        assigned.repartition("cell")
+        .write.mode("append")
         .partitionBy("cell")
         .parquet(os.path.join(index_dir, "vectors"))
     )
@@ -217,32 +223,19 @@ def query_pq_index(
     k: int = 5,
 ) -> DataFrame:
     """ADC top-k against the persisted codes: queries stay exact, the
-    corpus side is ONLY the (vec_id, codes) table -- same literal-codebook
-    distance expression as the in-plan search (`similarity.adc_distance`),
-    so persisted and in-plan results are bit-identical for the same
-    codebook."""
-    from ._local import arrow_local_frame
-    from .similarity import adc_distance
+    corpus side is ONLY the (vec_id, codes) table -- same lookup-table
+    scorer as the in-plan search (`similarity.pq_adc_topk`), so persisted
+    and in-plan results are bit-identical for the same codebook. Query
+    vectors are scored at float32 precision, the embedding column's type,
+    so a query vector read from the corpus scores as it does in-plan."""
+    import numpy as np
+
+    from .similarity import _adc_scores, _rank_adc
 
     cb = _load_codebook(spark, index_dir)
     codes = read_tier(spark, os.path.join(index_dir, "codes"))
-    q_df = F.broadcast(
-        arrow_local_frame(spark, queries, "query_id long, qv array<float>")
-    )
-    joined = q_df.join(
-        codes.select(F.col("vec_id").alias("neighbor_id"), "codes"),
-        F.col("query_id") != F.col("neighbor_id"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_raw").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        joined.select(
-            "query_id",
-            "neighbor_id",
-            adc_distance(cb, F.col("qv"), F.col("codes")).alias("adc_raw"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("adc_raw", 6).alias("adc_dist"))
-    )
+    qs = [
+        (qid, np.asarray(qv, dtype=np.float32).astype(np.float64))
+        for qid, qv in queries
+    ]
+    return _rank_adc(_adc_scores(codes, qs, cb), k)

@@ -5,9 +5,10 @@ scale path, and near-duplicate pair mining.
 Scale design notes
 ------------------
 - The dot product runs as zip_with + aggregate over array<float> cast to
-  double -- pure JVM expressions inside codegen; no Python, no UDF. For very
-  wide vectors a pandas_udf with numpy BLAS would win; the column contract is
-  identical, swap behind the same function.
+  double -- pure JVM expressions; no Python, no UDF. The map-only passes
+  (IVF assignment, PQ encoding and ADC, k-means||, the pandas cosine
+  scorer) run the same fold over Arrow batches in numpy (`_fold`), adding
+  in the same order, so both forms produce the same doubles.
 - Brute force is O(|Q| x |N|): correct for reranking and small query sets --
   the query side is broadcast so the corpus never shuffles.
 - The LSH path buckets vectors by the sign pattern of fixed hyperplanes
@@ -21,7 +22,8 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, functions as F
+import numpy as np
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.window import Window
 
 from ._cache import tracked_persist
@@ -54,6 +56,57 @@ def cosine(a: Column, b: Column) -> Column:
     # would silently rank as everyone's best neighbor. The epsilon clamps
     # the denominator so a zero vector scores cosine 0 against everything.
     return dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(1e-12))
+
+
+# The numpy kernel every mapInPandas distance pass uses: it adds in the
+# Catalyst fold's order, so it reproduces `dot`, `norm` and the squared-L2
+# fold bit for bit. That rests on four facts:
+# - float32 -> float64 widening is exact;
+# - each multiply, subtract and add below is one IEEE-754 double op, applied
+#   in the fold's order: acc = 0.0, then acc + t_0, then acc + t_1, ...;
+# - neither side fuses a multiply-add: the JVM is strict IEEE with no FMA
+#   contraction, and separate numpy ufunc calls round every result;
+# - `@`, np.dot, einsum and .sum(axis=) use other (blocked, pairwise, SIMD)
+#   summation orders, so none of them may appear in the kernel.
+
+
+def _rows(cells) -> np.ndarray:
+    """Array cells (an Arrow column or a list of vectors) as an (n, d)
+    float64 matrix; (0, 0) when there are none."""
+    if not len(cells):
+        return np.zeros((0, 0))
+    return np.asarray(list(cells), dtype=np.float64)
+
+
+def _fold(A: np.ndarray, B: np.ndarray, term) -> np.ndarray:
+    """(n, d) x (k, d) -> (n, k): 0.0 + term(a_0, b_0) + term(a_1, b_1) + ...
+    left to right for every row pair. Either side may have no rows."""
+    acc = np.zeros((len(A), len(B)))
+    if acc.size:
+        for j in range(A.shape[1]):
+            acc = acc + term(A[:, j, None], B[None, :, j])
+    return acc
+
+
+def _fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    return _fold(A, B, lambda a, b: a * b)
+
+
+def _fold_sqdist(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    return _fold(A, B, lambda a, b: (a - b) * (a - b))
+
+
+def _fold_norm(A: np.ndarray) -> np.ndarray:
+    acc = np.zeros(len(A))
+    for j in range(A.shape[1]):
+        acc = acc + A[:, j] * A[:, j]
+    return np.sqrt(acc)
+
+
+def _fold_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """`cosine` for every row pair, same zero-vector clamp."""
+    den = _fold_norm(A)[:, None] * _fold_norm(B)[None, :]
+    return _fold_dot(A, B) / np.maximum(den, 1e-12)
 
 
 def cosine_topk(
@@ -251,10 +304,13 @@ def ivf_assign(
     ``centroids`` is any (cent_id, cv) DataFrame -- `seeded_centroids`
     (default; oracle-exact) or `kmeans_centroids` (trained); pass
     ``n_centroids="auto"`` for the `auto_centroids` corpus-scaled trained
-    quantizer. Scale shape: centroids are broadcast; assignment is a
-    map-only pass over the corpus (no shuffle). At rest the corpus would be
-    written partitionBy(cell) so a probe touches only its cells' files.
-    """
+    quantizer. Scale shape: the k x d centroid table is collected once
+    and closed over; assignment is ONE map-only mapInPandas pass over the
+    corpus (no join, no shuffle) whose fold-order kernel reproduces
+    `cosine` bit for bit, so every oracle that replays the Catalyst
+    cosine sees the same argmax: max cosine, ties to the smallest
+    cent_id. Returns (id_col, vec_col, cell) with the input's id and
+    vector types and the centroids' id type."""
     if centroids is None and n_centroids == "auto":
         centroids = auto_centroids(emb, id_col=id_col, vec_col=vec_col)
     cent = (
@@ -262,52 +318,33 @@ def ivf_assign(
         if centroids is not None
         else seeded_centroids(emb, n_centroids, id_col=id_col, vec_col=vec_col)
     )
-    # Exactly the argmax the old row_number window computed, VALUE-identical
-    # (same double cosine, same tie-break: max over (cent_cos, -cent_id)
-    # structs == ORDER BY cent_cos DESC, cent_id ASC), but as max_by so the
-    # n x k candidate rows collapse to n via MAP-SIDE partial aggregation
-    # inside the same task that generated them (the broadcast crossJoin
-    # never repartitions) -- the old window SHUFFLED and sorted all n x k
-    # rows, the dominant cost of every assignment pass at trained-k scale.
-    # Norms are hoisted once per side (k + n fold evaluations instead of
-    # 3 per pair): dot/(greatest(cn * vn, 1e-12)) multiplies the SAME two
-    # doubles cosine() would, so every cosine is bit-identical and the
-    # exact oracles stay green.
-    c = F.broadcast(
-        cent.select(
-            "cent_id", "cv", norm(F.col("cv")).alias("_cn")
-        )
+    cent_rows = sorted(cent.select("cent_id", "cv").collect(), key=lambda r: r[0])
+    cent_ids = np.asarray([r[0] for r in cent_rows], dtype=np.int64)
+    C = _rows([r[1] for r in cent_rows])
+    out_schema = T.StructType(
+        [
+            emb.schema[id_col],
+            emb.schema[vec_col],
+            T.StructField("cell", cent.schema["cent_id"].dataType),
+        ]
     )
-    v = emb.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_vn")
-    )
-    score = dot(F.col("cv"), F.col(vec_col)) / F.greatest(
-        F.col("_cn") * F.col("_vn"), F.lit(1e-12)
-    )
-    return (
-        c.crossJoin(v)
-        .select(
-            id_col,
-            vec_col,
-            "cent_id",
-            score.alias("cent_cos"),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct(F.col(vec_col).alias("v"), F.col("cent_id").alias("c")),
-                F.struct(
-                    F.col("cent_cos").alias("s"),
-                    (-F.col("cent_id")).alias("nc"),
-                ),
-            ).alias("_b")
-        )
-        .select(
-            id_col,
-            F.col("_b.v").alias(vec_col),
-            F.col("_b.c").alias("cell"),
-        )
-    )
+
+    def assign(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0 or len(cent_ids) == 0:
+                continue
+            cos = _fold_cosine(_rows(pdf[vec_col]), C)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    vec_col: pdf[vec_col],
+                    "cell": cent_ids[np.argmax(cos, axis=1)],
+                }
+            )
+
+    return emb.select(id_col, vec_col).mapInPandas(assign, out_schema)
 
 
 def ivf_ann_topk(
@@ -426,34 +463,26 @@ def cosine_scores_pandas(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """All (query, neighbor) cosine scores via an Arrow-batched numpy kernel.
+    """All (query, neighbor) cosine scores via the Arrow-batched numpy kernel.
 
-    The vectorized twin of the JVM fold in `cosine`: query vectors are
-    collected once (tiny), closed over, and each corpus partition scores a
-    whole Arrow batch with one BLAS matmul -- the right shape for wide
-    vectors where per-element fold cost dominates. mapInPandas => map-only,
-    no shuffle; ranking happens downstream on the JVM."""
-    import numpy as np
-
+    The map-only twin of the JVM fold in `cosine`, bit-identical to it:
+    query vectors are collected once (tiny), closed over, and each corpus
+    partition scores a whole Arrow batch with the fold-order kernel.
+    mapInPandas => map-only, no shuffle; ranking happens downstream on the
+    JVM."""
     rows = (
         emb.filter(F.col(id_col).isin(query_ids))
         .select(id_col, vec_col)
         .collect()
     )
     q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
+    Q = _rows([r[1] for r in rows])
 
     def score(batches):
         import pandas as pd
 
         for pdf in batches:
-            n_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            n_norm = np.sqrt((n_mat * n_mat).sum(axis=1))
-            # same zero-vector guard as the JVM `cosine`: clamp the
-            # denominator so an all-zero embedding scores 0.0, not NaN
-            denom = np.maximum(q_norm[:, None] * n_norm[None, :], 1e-12)
-            sims = (q_mat @ n_mat.T) / denom
+            sims = _fold_cosine(Q, _rows(pdf[vec_col]))
             n_ids = pdf[id_col].to_numpy()
             nq, nn = sims.shape
             yield pd.DataFrame(
@@ -464,7 +493,14 @@ def cosine_scores_pandas(
                 }
             )
 
-    out_schema = "query_id long, neighbor_id long, cos_raw double"
+    id_type = emb.schema[id_col].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", id_type),
+            T.StructField("neighbor_id", id_type),
+            T.StructField("cos_raw", T.DoubleType()),
+        ]
+    )
     return emb.select(id_col, vec_col).mapInPandas(score, out_schema).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -479,7 +515,8 @@ def cosine_topk_pandas(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k using the numpy scoring kernel + JVM window ranking --
-    result-identical to `cosine_topk`, different physical plan."""
+    result-identical to `cosine_topk` (the same raw cosines, so the same
+    ranks), different physical plan."""
     scored = cosine_scores_pandas(emb, query_ids, id_col=id_col, vec_col=vec_col)
     w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("neighbor_id").asc())
     return (
@@ -688,7 +725,6 @@ def semantic_dedup_witness(
     centroids: DataFrame | None = None,
     n_centroids: int | str = 8,
     assigned: DataFrame | None = None,
-    vectorized_assign: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -737,25 +773,9 @@ def semantic_dedup_witness(
     over exactly those cells. Returns (vec_id, dup_has_partner_ok,
     keeper_has_none_ok)."""
     if assigned is None:
-        if centroids is None and n_centroids == "auto":
-            centroids = auto_centroids(emb, id_col=id_col, vec_col=vec_col)
-        if vectorized_assign and centroids is not None:
-            # Arrow/BLAS flat assignment (VERDICT r11 item 7): legal here
-            # precisely because the witness contract is conditioned on
-            # the actual cells -- any argmax-level assignment is a valid
-            # quantizer, and the `embedding_assign_arrow_agreement` row
-            # MEASURES the ulp-tie disagreement rate vs the fold-exact
-            # path instead of assuming it. keep_vec carries the vector
-            # through the map-only pass (no corpus re-join). Never the
-            # default: fold-exact stays wherever an oracle replays the
-            # assignment arithmetic.
-            assigned = assign_cells_arrow(
-                emb, centroids, id_col=id_col, vec_col=vec_col, keep_vec=True
-            )
-        else:
-            assigned = ivf_assign(
-                emb, n_centroids, centroids=centroids, id_col=id_col, vec_col=vec_col
-            )
+        assigned = ivf_assign(
+            emb, n_centroids, centroids=centroids, id_col=id_col, vec_col=vec_col
+        )
     # the assignment feeds FOUR consumers now that route B is independent
     # (route A's pair frame, the flagged key set, route B's two pair
     # sides); without a persist the quantizer pass -- the expensive part
@@ -847,20 +867,6 @@ PQ_SUBSPACES = 4
 PQ_CODES = 16
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance between two equal-length array columns, as a
-    left-to-right JVM fold (same association order as the oracle's indexed
-    list_transform + list_sum)."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def pq_codebook(
     emb: DataFrame,
     m: int = PQ_SUBSPACES,
@@ -878,12 +884,13 @@ def pq_codebook(
     behind the same nested-list contract.
 
     The collect is calibration-scale (n_codes rows), mirroring the 5-query
-    collect in `cosine_scores_pandas` -- never corpus-scale."""
+    collect in `cosine_scores_pandas` -- never corpus-scale. An empty
+    corpus gives ``m`` empty codebooks."""
     rows = sorted(
         emb.filter(F.col(id_col) < n_codes).select(id_col, vec_col).collect(),
         key=lambda r: r[0],
     )
-    dim = len(rows[0][1])
+    dim = len(rows[0][1]) if rows else 0
     sub = dim // m
     return [
         [[float(x) for x in r[1][s * sub : (s + 1) * sub]] for r in rows]
@@ -905,111 +912,128 @@ def pq_codes(
     compresses to 4 bytes here, the memory trick that lets billion-vector
     indexes fit in RAM.
 
-    Scale shape: the codebook is a LITERAL nested-array expression
-    (m x n_codes x sub_dim floats), so encoding is map-only whole-stage
-    codegen over the corpus -- no join, no shuffle, nothing data-sized on
-    the driver. Ties in the argmin break to the lowest code id via
-    `array_position`'s first-match rule, matching the oracle's
-    (dist, code_id) sort.
+    Scale shape: the codebook (m x n_codes x sub_dim floats) is closed
+    over by ONE map-only mapInPandas pass whose fold-order kernel
+    reproduces the Catalyst squared-L2 fold bit for bit -- no join, no
+    shuffle, nothing data-sized on the driver. Ties in the argmin break
+    to the lowest code id (np.argmin's first index), matching the
+    oracle's (dist, code_id) sort.
 
     Returns (vec_id, codes array<long>, recon_err, code_md5): recon_err is
     the summed squared quantization error (the fidelity metric PQ papers
-    report); code_md5 pins the exact code assignment."""
+    report), rounded by Spark's HALF_UP `round`; code_md5 pins the exact
+    code assignment."""
     cb = codebook if codebook is not None else pq_codebook(
         emb, m, n_codes, id_col=id_col, vec_col=vec_col
     )
-    sub = len(cb[0][0])
-    vec = F.col(vec_col)
-    code_cols, err_cols = [], []
-    for s in range(m):
-        cb_lit = F.array(
-            *[F.array(*[F.lit(x) for x in code]) for code in cb[s]]
-        )
-        subvec = F.slice(vec, s * sub + 1, sub)
-        dists = F.transform(cb_lit, lambda code: _l2sq(subvec, code))
-        best = F.array_min(dists)
-        code_cols.append((F.array_position(dists, best) - 1).cast("long"))
-        err_cols.append(best)
-    total_err = err_cols[0]
-    for e in err_cols[1:]:
-        total_err = total_err + e
-    return emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.array(*code_cols).alias("codes"),
-        F.round(total_err, 6).alias("recon_err"),
-        F.md5(F.concat_ws(",", *[c.cast("string") for c in code_cols])).alias("code_md5"),
-    )
-
-
-def pq_codes_arrow(
-    emb: DataFrame,
-    m: int = PQ_SUBSPACES,
-    n_codes: int = PQ_CODES,
-    *,
-    codebook: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/numpy twin of `pq_codes` (r15, guide §4.2 -- the
-    `assign_cells_arrow` pattern applied to PQ encoding): one batched
-    ((V_s - C_s)^2).sum matmul-shaped pass per subspace instead of the
-    Catalyst lambda fold per (vector x code x dim), which measured ~1.5 s
-    per corpus pass at sf0.1 against ~0.1 s here. Same argmin-ties-to-
-    lowest-code rule (np.argmin first index == array_position first
-    match); float sums differ from the JVM fold in the last ulp, so ONLY
-    callers whose contract has margin (the recall-flag and
-    err-improvement rows) may use it -- every exact-oracle surface
-    (embedding_pq_codes, embedding_pq_topk, the persisted index builds)
-    stays on the fold-exact `pq_codes`. Returns (vec_id, codes,
-    recon_err) -- no code_md5: the twin is never hashed."""
-    import numpy as np
-    import pandas as pd
-
-    C = [np.asarray(cb_s, dtype=np.float64) for cb_s in codebook]
+    C = [_rows(cb_s) for cb_s in cb]
     sub = C[0].shape[1]
 
     def enc(batches):
+        import pandas as pd
+
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            V = _rows(pdf[vec_col])
+            rows = np.arange(len(V))
             codes = np.empty((len(V), m), dtype=np.int64)
-            err = np.zeros(len(V), dtype=np.float64)
+            err = np.zeros(len(V))
             for s in range(m):
-                Vs = V[:, s * sub : (s + 1) * sub]
-                d = ((Vs[:, None, :] - C[s][None, :, :]) ** 2).sum(axis=2)
+                d = _fold_sqdist(V[:, s * sub : (s + 1) * sub], C[s])
                 codes[:, s] = np.argmin(d, axis=1)
-                err += d[np.arange(len(V)), codes[:, s]]
+                err = err + d[rows, codes[:, s]]
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf[id_col].to_numpy(),
-                    "codes": list(codes),
-                    "recon_err": np.round(err, 6),
-                }
+                {"vec_id": pdf[id_col], "codes": list(codes), "_err": err}
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        enc, "vec_id long, codes array<long>, recon_err double"
+    out_schema = T.StructType(
+        [
+            T.StructField("vec_id", emb.schema[id_col].dataType),
+            T.StructField("codes", T.ArrayType(T.LongType())),
+            T.StructField("_err", T.DoubleType()),
+        ]
+    )
+    return emb.select(id_col, vec_col).mapInPandas(enc, out_schema).select(
+        "vec_id",
+        "codes",
+        F.round("_err", 6).alias("recon_err"),
+        F.md5(F.concat_ws(",", F.col("codes").cast("array<string>"))).alias(
+            "code_md5"
+        ),
     )
 
 
-def adc_distance(cb: list[list[list[float]]], qv: Column, codes: Column) -> Column:
-    """The ADC estimator as one literal-codebook expression: sum over
-    subspaces of L2^2(query sub-vector, codebook[code]). Shared by the
-    in-plan search and the persisted-index query path so both rank with
-    bit-identical math."""
-    m = len(cb)
-    sub = len(cb[0][0])
-    adc = None
-    for s in range(m):
-        cb_lit = F.array(*[F.array(*[F.lit(x) for x in code]) for code in cb[s]])
-        qsub = F.slice(qv, s * sub + 1, sub)
-        code_vec = F.element_at(cb_lit, (F.element_at(codes, s + 1) + 1).cast("int"))
-        d = _l2sq(qsub, code_vec)
-        adc = d if adc is None else adc + d
-    return adc
+def _adc_scores(
+    codes: DataFrame, queries: list, cb: list[list[list[float]]]
+) -> DataFrame:
+    """ADC distances of every (query, encoded vector) pair, the query's
+    own id excluded: per query, an m x n_codes lookup table of squared-L2
+    distances to the codebook entries is built once on the driver with
+    the fold-order kernel (the standard PQ serving shape), and each
+    encoded row pays m table lookups summed from 0.0 -- bit-identical to
+    the Catalyst sum of per-subspace squared-L2 folds. ``queries`` is a
+    |Q|-bounded list of (query_id, float64 vector). One map-only pass over
+    ``codes`` (vec_id, codes); returns (query_id, neighbor_id, adc_raw)."""
+    C = [_rows(cb_s) for cb_s in cb]
+    m = len(C)
+    sub = C[0].shape[1]
+    luts = [
+        (
+            qid,
+            [
+                _fold_sqdist(np.asarray([qv[s * sub : (s + 1) * sub]]), C[s])[0]
+                for s in range(m)
+            ],
+        )
+        for qid, qv in queries
+    ]
+
+    def score(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            codes_mat = np.asarray(list(pdf["codes"]), dtype=np.int64)
+            nid = pdf["vec_id"].to_numpy()
+            for qid, lut in luts:
+                d = np.zeros(len(pdf))
+                for s in range(m):
+                    d = d + lut[s][codes_mat[:, s]]
+                keep = nid != qid
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.full(keep.sum(), qid, dtype=np.int64),
+                        "neighbor_id": nid[keep],
+                        "adc_raw": d[keep],
+                    }
+                )
+
+    id_type = codes.schema["vec_id"].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", id_type),
+            T.StructField("neighbor_id", id_type),
+            T.StructField("adc_raw", T.DoubleType()),
+        ]
+    )
+    return codes.select("vec_id", "codes").mapInPandas(score, out_schema)
+
+
+def _rank_adc(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k per query by ascending ADC distance, ties by neighbor id;
+    distances rounded to 6 dp."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_raw").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", "rank", F.round("adc_raw", 6).alias("adc_dist")
+        )
+    )
 
 
 def pq_adc_topk(
@@ -1019,7 +1043,6 @@ def pq_adc_topk(
     m: int = PQ_SUBSPACES,
     n_codes: int = PQ_CODES,
     *,
-    vectorized: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1030,96 +1053,20 @@ def pq_adc_topk(
 
     Scale shape: the corpus side carries ONLY (vec_id, codes) -- the
     encoded table one would persist at rest; full vectors never re-enter
-    the search. The broadcast query side x encoded corpus is the same
-    bounded nested-loop contract as `cosine_topk` (O(queries) rows), and
-    the per-row distance is a literal-codebook lookup via element_at --
-    no join against a codebook table, no shuffle before the top-k
-    window.
-
-    ``vectorized=True`` (r15, guide §4.2): encode through `pq_codes_arrow`
-    and evaluate ADC as per-query LUT lookups inside one mapInPandas pass
-    -- the classic ADC serving trick (the query's m x n_codes distance
-    table is precomputed once on the driver from the |Q|-bounded query
-    fetch, and each corpus row pays m table lookups). Last-ulp float
-    differences vs the fold make this legal only for margin-contract
-    callers (the recall-flag rows); `embedding_pq_topk`'s exact-oracle
-    surface stays fold-exact."""
+    the search. The query side is a |Q|-bounded driver fetch (the
+    `cosine_topk` broadcast contract) turned into per-query lookup
+    tables, so each encoded row pays m lookups per query in one map-only
+    pass -- no join against a codebook table, no shuffle before the top-k
+    window."""
     cb = pq_codebook(emb, m, n_codes, id_col=id_col, vec_col=vec_col)
-    sub = len(cb[0][0])
-    if vectorized:
-        import numpy as np
-        import pandas as pd
-
-        codes = pq_codes_arrow(
-            emb, m, n_codes, codebook=cb, id_col=id_col, vec_col=vec_col
-        )
-        q_pdf = (
-            emb.filter(F.col(id_col).isin(query_ids))
-            .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-            .toPandas()
-        )  # |Q|-bounded driver fetch, the cosine_topk broadcast contract
-        C = [np.asarray(cb_s, dtype=np.float64) for cb_s in cb]
-        luts = {}
-        for qid, qv in zip(q_pdf["query_id"], q_pdf["qv"]):
-            qv = np.asarray(qv, dtype=np.float64)
-            luts[int(qid)] = np.stack(
-                [
-                    ((qv[s * sub : (s + 1) * sub][None, :] - C[s]) ** 2).sum(
-                        axis=1
-                    )
-                    for s in range(m)
-                ]
-            )  # (m, n_codes)
-
-        def adc_rows(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes_mat = np.asarray(list(pdf["codes"]), dtype=np.int64)
-                nid = pdf["vec_id"].to_numpy()
-                for qid, lut in luts.items():
-                    d = np.zeros(len(pdf), dtype=np.float64)
-                    for s in range(m):
-                        d += lut[s][codes_mat[:, s]]
-                    keep = nid != qid
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.full(keep.sum(), qid, dtype=np.int64),
-                            "neighbor_id": nid[keep],
-                            "adc_raw": d[keep],
-                        }
-                    )
-
-        scored = codes.mapInPandas(
-            adc_rows, "query_id long, neighbor_id long, adc_raw double"
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_raw").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "rank",
-                F.round("adc_raw", 6).alias("adc_dist"),
-            )
-        )
     codes = pq_codes(emb, m, n_codes, codebook=cb, id_col=id_col, vec_col=vec_col)
-    q = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    joined = F.broadcast(q).join(
-        codes.select(F.col("vec_id").alias("neighbor_id"), "codes"),
-        F.col("query_id") != F.col("neighbor_id"),
-    )
-    adc = adc_distance(cb, F.col("qv"), F.col("codes"))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_raw").asc(), F.col("neighbor_id").asc())
-    return (
-        joined.select("query_id", "neighbor_id", adc.alias("adc_raw"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("adc_raw", 6).alias("adc_dist"))
-    )
+    queries = [
+        (r[0], np.asarray(r[1], dtype=np.float64))
+        for r in emb.filter(F.col(id_col).isin(query_ids))
+        .select(id_col, vec_col)
+        .collect()
+    ]
+    return _rank_adc(_adc_scores(codes, queries, cb), k)
 
 
 # ---------------------------------------------------------------- random projection
@@ -1282,8 +1229,6 @@ def pca_moments(emb: DataFrame, *, vec_col: str = "embedding"):
     corpus, and refreshing the PCA for an appended batch costs one pass
     over the NEW rows only, never a refit of the old ones (the same
     append contract as the IVF index). Returns (n, s [d], ss [d x d])."""
-    import numpy as np
-
     probe = emb.select(vec_col).first()
     if probe is None:
         raise ValueError(
@@ -1329,8 +1274,6 @@ def pca_from_moments(n: int, s, ss, k: int = 4):
     triple, numpy.linalg.eigh, top-k by descending eigenvalue,
     sign-canonicalized (largest-|entry| coordinate positive) so the fit is
     deterministic up to float summation order."""
-    import numpy as np
-
     if n <= 1:
         raise ValueError(
             f"pca_from_moments: need n >= 2 vectors for a sample "
@@ -1359,8 +1302,6 @@ def pca_project(
     so like random_projection the whole pass is map-only whole-stage-
     codegen JVM arithmetic over literal component arrays -- nothing
     shuffles, no Python in the row path."""
-    import numpy as np
-
     mu_dots = [float(np.dot(mean, c)) for c in components]
     return emb.select(
         F.col(id_col).alias("vec_id"),
@@ -1497,8 +1438,6 @@ def _kmeans_wkpp_lloyd_frame(
     (r15) so the bounded local dispatch and the distributed path run the
     IDENTICAL reduction -- they may only differ in how the sketch and its
     weights were computed."""
-    import numpy as np
-
     from ._local import arrow_local_frame
 
     X = np.asarray(cands, dtype=np.float64)
@@ -1562,35 +1501,47 @@ def _kmeans_wkpp_lloyd_frame(
     )
 
 
+def _nearest(V: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """For each unit row of V, the index of its nearest unit row of C by
+    the spherical d2 = 2 - 2 * <v, c> (ties to the lowest index) and that
+    d2. Min-of-d2 equals 2 - 2 * max-of-dot bit for bit (x -> 2 - 2x is
+    monotone in IEEE). Row chunks bound the (rows x |C|) temporaries."""
+    best = np.empty(len(V), dtype=np.int64)
+    d2min = np.empty(len(V))
+    step = max(1, 2_000_000 // max(1, len(C)))
+    for lo in range(0, len(V), step):
+        d2 = 2.0 - 2.0 * _fold_dot(V[lo : lo + step], C)
+        b = np.argmin(d2, axis=1)
+        best[lo : lo + step] = b
+        d2min[lo : lo + step] = d2[np.arange(len(b)), b]
+    return best, d2min
+
+
 def _kmeans_parallel_local_frame(
     spark, pdf, k: int, *, rounds: int, l: int, lloyd_iters: int, salt: str
 ) -> DataFrame:
-    """Driver-local twin of the k-means|| init for the bounded dispatch
-    (guide §5, the graph/CC local-dispatch pattern): the ENTIRE sketch
-    pass -- per-round min-distance fold, md5 sampling draws, candidate
-    weights -- runs in numpy over the ONE bounded Arrow fetch the caller
-    already paid, replacing ~4 driver-coordinated Spark jobs per round
-    (the r14 trained-SemDeDup row ran 47 jobs for a 2000-row training
-    frame; its 8-vs-32-core scaling read 0.84 because the wall was pure
-    job floor). The sampling draws replicate the engine's md5 expression
-    EXACTLY (md5(salt:id:round) first 8 hex digits % 1e6 / 1e6), so the
-    draw *rule* is the same; d2 values come from one whole-matrix numpy
-    matmul instead of per-Arrow-batch matmuls, which selects a DIFFERENT
-    equally-valid init than the distributed vectorized path -- exactly
-    the freedom vectorized mode already declares (layout-dependent d2),
-    which is why only vectorized callers may dispatch here."""
+    """Driver-local k-means|| init for the bounded dispatch (guide §5, the
+    graph/CC local-dispatch pattern): the ENTIRE sketch pass -- per-round
+    min-distance fold, md5 sampling draws, candidate weights -- runs in
+    numpy over the ONE bounded Arrow fetch the caller already paid,
+    replacing ~4 driver-coordinated Spark jobs per round (the r14
+    trained-SemDeDup row ran 47 jobs for a 2000-row training frame; its
+    8-vs-32-core scaling read 0.84 because the wall was pure job floor).
+    The sampling draws replicate the engine's md5 expression EXACTLY
+    (md5(salt:id:round) first 8 hex digits % 1e6 / 1e6), the d2 values
+    come from the same fold-order kernel as the distributed passes, and
+    each round's picks are appended in id order on both paths -- so the
+    two differ only in the order phi is summed."""
     import hashlib
 
-    import numpy as np
-
     ids = pdf["_id"].to_numpy()
-    V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["_nv"]])
+    V = _rows(pdf["_nv"])
     order = np.argsort(ids, kind="stable")
     ids, V = ids[order], V[order]
     # first candidate: the min-id vector, like the distributed
     # normed.orderBy("_id").first()
     cands = [V[0].copy()]
-    d2 = 2.0 - 2.0 * (V @ np.asarray([cands[0]]).T).max(axis=1)
+    d2 = _nearest(V, V[:1])[1]
     for r in range(rounds):
         phi = float(d2.sum())
         if phi <= 0:
@@ -1613,10 +1564,8 @@ def _kmeans_parallel_local_frame(
         new = V[u < (float(l) * d2 / phi)]
         cands.extend(row.copy() for row in new)
         if len(new) and r < rounds - 1:
-            d2 = np.minimum(d2, 2.0 - 2.0 * (V @ new.T).max(axis=1))
-    Call = np.asarray(cands)
-    best = np.argmin(2.0 - 2.0 * (V @ Call.T), axis=1)
-    wts = np.bincount(best, minlength=len(cands))
+            d2 = np.minimum(d2, _nearest(V, new)[1])
+    wts = np.bincount(_nearest(V, np.asarray(cands))[0], minlength=len(cands))
     return _kmeans_wkpp_lloyd_frame(spark, cands, wts, k, lloyd_iters)
 
 
@@ -1627,7 +1576,6 @@ def kmeans_parallel_centroids(
     rounds: int = 5,
     oversample: int | None = None,
     lloyd_iters: int = 10,
-    vectorized: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     salt: str = "kmpar",
@@ -1646,30 +1594,22 @@ def kmeans_parallel_centroids(
     (cent_id, cv) contract so ivf_assign / semantic_dedup / the IVF index
     consume it unchanged.
 
-    Scale shape per round: one broadcast-centroid pass over the corpus for
-    min-distances (the ivf_assign shape, no corpus shuffle), one scalar phi
-    fetch, one filtered collect of ~l sampled rows. Total driver state:
-    O(rounds * l * d) floats. The corpus is never assigned to ALL candidate
-    centers at once anywhere -- each pass is max-over-broadcast.
+    Scale shape per round: one map-only mapInPandas pass over the corpus
+    for min-distances against the round's new candidates (the ivf_assign
+    shape, no corpus shuffle), one scalar phi fetch, one filtered collect
+    of ~l sampled rows. Total driver state: O(rounds * l * d) floats. The
+    corpus is never assigned to ALL candidate centers at once anywhere --
+    each pass is min-over-closed-over-candidates.
 
-    ``vectorized=True`` swaps the per-round distance pass and the weights
-    pass for Arrow/BLAS matmuls (mapInPandas, the `assign_cells_arrow`
-    pattern) -- measured ~10x on the trained-SemDeDup trainer, whose
-    distance passes dominated its sf1 wall. The draws stay deterministic
-    (md5) but the ulp-different d2 values select a DIFFERENT valid init,
-    so only quantizer-agnostic callers (witness-oracle rows) may opt in;
-    the default stays fold-exact for the `embedding_kmeans_parallel`
-    contract row.
+    Local dispatch: when the training frame fits ``LOCAL_CAP`` rows --
+    ONE bounded fetch, ~8 B x d per row through Arrow -- the whole sketch
+    pass runs driver-local (_kmeans_parallel_local_frame) instead of ~4
+    Spark jobs per round. Both paths compute d2 with the same fold-order
+    kernel and append each round's picks in id order, so they differ
+    only in the order phi is summed."""
+    import pandas as pd
 
-    Local dispatch (vectorized only): vectorized callers train on a
-    BOUNDED sample by contract, so when the training frame fits
-    ``LOCAL_CAP`` rows -- ONE bounded fetch, ~8 B x d per row through
-    Arrow -- the whole sketch pass runs driver-local
-    (_kmeans_parallel_local_frame) instead of ~4 Spark jobs per round
-    over a sample-sized frame. Over the cap, or in fold-exact mode
-    (whose oracle replays the JVM fold arithmetic the numpy twin cannot
-    reproduce bit-for-bit), the distributed path runs unchanged."""
-    import numpy as np
+    from . import _local
 
     l = oversample or 2 * k
     spark = emb.sparkSession
@@ -1681,103 +1621,40 @@ def kmeans_parallel_centroids(
             / F.greatest(norm(F.col(vec_col)), F.lit(1e-12)),
         ).alias("_nv"),
     )
-    if vectorized:
-        from . import _local
-
-        pdf = _local.fetch_bounded(normed_plan, _local.LOCAL_CAP)
-        if pdf is not None:
-            return _kmeans_parallel_local_frame(
-                spark, pdf, k, rounds=rounds, l=l,
-                lloyd_iters=lloyd_iters, salt=salt,
-            )
+    pdf = _local.fetch_bounded(normed_plan, _local.LOCAL_CAP)
+    if pdf is not None:
+        return _kmeans_parallel_local_frame(
+            spark, pdf, k, rounds=rounds, l=l, lloyd_iters=lloyd_iters, salt=salt
+        )
     normed = tracked_persist(normed_plan)
+    d2_schema = T.StructType(
+        normed.schema.fields + [T.StructField("d2", T.DoubleType())]
+    )
 
-    def dist2_update_exact(
-        prev: DataFrame | None, new_cands: list[list[float]]
-    ) -> DataFrame:
-        """Min distance to the candidate set so far, INCREMENTALLY: dot
-        only against the round's NEW candidates, folded into the carried
-        per-point d2 with least(). Exact: min(prev, 2 - 2*max_new) equals
-        2 - 2*max_all bit-for-bit (x -> 2 - 2x is monotone in IEEE), so
-        every phi and every sampling draw is identical to the
-        recompute-against-all form -- but per-round work is O(n * l)
-        instead of O(n * r * l), and the dots run through the slow
-        higher-order-function path r times fewer."""
-        from ._local import arrow_local_frame
-
-        cent = arrow_local_frame(
-            spark,
-            [(i, c) for i, c in enumerate(new_cands)],
-            "cent_id long, cv array<double>",
-        )
-        base = prev if prev is not None else normed.withColumn(
-            "d2", F.lit(float("inf"))
-        )
-        nd = (
-            F.broadcast(cent)
-            .crossJoin(base)
-            .groupBy("_id")
-            .agg(
-                F.first("_nv").alias("_nv"),
-                F.least(
-                    F.first("d2"),
-                    2.0 - 2.0 * F.max(dot(F.col("cv"), F.col("_nv"))),
-                ).alias("d2"),
-            )
-            .persist()
-        )
-        nd.count()
-        if prev is not None:
-            prev.unpersist()
-        return nd
-
-    def dist2_update_arrow(
-        prev: DataFrame | None, new_cands: list[list[float]]
-    ) -> DataFrame:
-        """Arrow/BLAS twin of the incremental distance pass (the
-        `assign_cells_arrow` trick applied to training): one matmul per
-        Arrow batch against the round's new-candidate matrix. Same
-        min-fold semantics; float sums differ from the JVM fold in the
-        last ulp, so the sampling draws (and therefore the centroids)
-        are a DIFFERENT valid k-means|| init -- deterministic only for a
-        fixed physical layout (partition count, Arrow batch size, BLAS
-        build), since d2 from (V @ Cn.T) depends on batch boundaries and
-        BLAS blocking. Only callers whose downstream contract is
-        quantizer-agnostic (the witness-oracle SemDeDup row) may use
-        vectorized=True."""
-        import pandas as pd
-
-        Cn = np.asarray(new_cands, dtype=np.float64)
+    def dist2_update(prev: DataFrame | None, new_cands: list) -> DataFrame:
+        """Min distance to the candidate set so far, INCREMENTALLY: only
+        against the round's NEW candidates, folded into the carried
+        per-point d2 with np.minimum -- min(prev, min_new) equals the
+        min over all candidates bit for bit, but per-round work is
+        O(n * l) instead of O(n * r * l)."""
+        Cn = _rows(new_cands)
         base = prev if prev is not None else normed.withColumn(
             "d2", F.lit(float("inf"))
         )
 
         def upd(batches):
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue  # empty Arrow batch: matmul on (0,) would raise
-                V = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_nv"]]
+                yield pdf.assign(
+                    d2=np.minimum(
+                        pdf["d2"].to_numpy(), _nearest(_rows(pdf["_nv"]), Cn)[1]
+                    )
                 )
-                d2new = 2.0 - 2.0 * (V @ Cn.T).max(axis=1)
-                out = pd.DataFrame(
-                    {
-                        "_id": pdf["_id"].to_numpy(),
-                        "_nv": pdf["_nv"],
-                        "d2": np.minimum(pdf["d2"].to_numpy(), d2new),
-                    }
-                )
-                yield out
 
-        nd = base.mapInPandas(
-            upd, "_id long, _nv array<double>, d2 double"
-        ).persist()
+        nd = base.mapInPandas(upd, d2_schema).persist()
         nd.count()
         if prev is not None:
             prev.unpersist()
         return nd
-
-    dist2_update = dist2_update_arrow if vectorized else dist2_update_exact
 
     first = normed.orderBy("_id").select("_nv").first()[0]
     cands = [[float(x) for x in first]]
@@ -1802,67 +1679,30 @@ def kmeans_parallel_centroids(
             ).cast("long")
             % 1000000
         ) / 1000000.0
-        picked = d.filter(u_r < F.lit(float(l)) * F.col("d2") / F.lit(float(phi))).select(
-            "_nv"
-        )
-        new_cands = [[float(x) for x in row[0]] for row in picked.collect()]
+        picked = d.filter(u_r < F.lit(float(l)) * F.col("d2") / F.lit(float(phi)))
+        new_cands = [
+            [float(x) for x in row[1]]
+            for row in sorted(picked.select("_id", "_nv").collect(), key=lambda r: r[0])
+        ]
         cands.extend(new_cands)
         if new_cands and r < rounds - 1:
             d = dist2_update(d, new_cands)
 
     d.unpersist()
     # weight candidates by the population of their nearest-candidate cell
-    from ._local import arrow_local_frame
+    # (np.argmin's first index == the lowest-cent_id tie-break)
+    Call = _rows(cands)
 
-    cent = arrow_local_frame(
-        spark, [(i, c) for i, c in enumerate(cands)], "cent_id long, cv array<double>"
+    def w_assign(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"cent_id": _nearest(_rows(pdf["_nv"]), Call)[0]})
+
+    weights_rows = (
+        normed.mapInPandas(w_assign, "cent_id long")
+        .groupBy("cent_id")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .collect()
     )
-    # nearest-candidate per point as min_by (same double d2, same
-    # cent_id tie-break as the old row_number window) so the train x cands
-    # candidate rows collapse map-side instead of shuffling through a sort;
-    # vectorized mode runs the same argmin as one matmul per Arrow batch
-    # (np.argmin first-index == the lowest-cent_id tie-break)
-    if vectorized:
-        import pandas as pd
-
-        Call = np.asarray(cands, dtype=np.float64)
-
-        def w_assign(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue  # empty Arrow batch: matmul on (0,) would raise
-                V = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_nv"]]
-                )
-                best = np.argmin(2.0 - 2.0 * (V @ Call.T), axis=1)
-                yield pd.DataFrame({"cent_id": best.astype("int64")})
-
-        weights_rows = (
-            normed.mapInPandas(w_assign, "cent_id long")
-            .groupBy("cent_id")
-            .agg(F.count(F.lit(1)).alias("w"))
-            .collect()
-        )
-    else:
-        weights_rows = (
-            F.broadcast(cent)
-            .crossJoin(normed)
-            .select(
-                "_id",
-                "cent_id",
-                (2.0 - 2.0 * dot(F.col("cv"), F.col("_nv"))).alias("_d2"),
-            )
-            .groupBy("_id")
-            .agg(
-                F.min_by(
-                    F.col("cent_id"),
-                    F.struct(F.col("_d2").alias("d"), F.col("cent_id").alias("c")),
-                ).alias("cent_id")
-            )
-            .groupBy("cent_id")
-            .agg(F.count(F.lit(1)).alias("w"))
-            .collect()
-        )
     wmap = {r["cent_id"]: r["w"] for r in weights_rows}
     wts = [wmap.get(i, 0) for i in range(len(cands))]
     return _kmeans_wkpp_lloyd_frame(spark, cands, wts, k, lloyd_iters)
@@ -1925,7 +1765,6 @@ def pq_rerank_topk(
     m: int = PQ_SUBSPACES,
     n_codes: int = PQ_CODES,
     *,
-    vectorized: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1939,12 +1778,10 @@ def pq_rerank_topk(
     (nothing corpus-sized; at rest this is a point-lookup join against
     the id-partitioned vector table).
 
-    Returns (query_id, neighbor_id, rank, cosine) like cosine_topk.
-    ``vectorized`` forwards to the ADC shortlist (see pq_adc_topk); the
-    exact rerank math over the shortlist is identical either way."""
+    Returns (query_id, neighbor_id, rank, cosine) like cosine_topk."""
     short = pq_adc_topk(
         emb, query_ids, k=shortlist, m=m, n_codes=n_codes,
-        vectorized=vectorized, id_col=id_col, vec_col=vec_col,
+        id_col=id_col, vec_col=vec_col,
     ).select("query_id", "neighbor_id")
     q = emb.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
@@ -1989,9 +1826,8 @@ def pq_codebook_trained(
     k-means fit driver-side on a deterministic md5-ordered sample --
     the quality upgrade over `pq_codebook`'s first-n_codes seeding
     (Jegou et al. 2011 train their codebooks exactly this way; the
-    seeded twin exists for exact SQL oracles). Same nested-list
-    contract, so pq_codes / adc_distance / pq_rerank_topk consume it
-    unchanged.
+    seeded codebook exists for exact SQL oracles). Same nested-list
+    contract, so pq_codes and the ADC scorers consume it unchanged.
 
     Determinism: the sample is the ``sample`` smallest md5 draws (ties
     by id) -- reproducible and engine-independent; init is the sample's
@@ -1999,8 +1835,6 @@ def pq_codebook_trained(
     in numpy (empty clusters re-seeded deterministically from the
     sample). Driver state: O(sample * dim) floats -- the
     bounded-calibration pattern, never corpus-scale."""
-    import numpy as np
-
     from .sampling import sample_hash
 
     # the sample is selected DISTRIBUTED (TakeOrdered on the md5 draw);
@@ -2326,77 +2160,6 @@ def bitext_margin_pairs(
         F.coalesce(F.col("_back_src") == F.col("src_id"), F.lit(False)).alias(
             "mutual"
         ),
-    )
-
-
-def assign_cells_arrow(
-    emb: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_vec: bool = False,
-) -> DataFrame:
-    """Arrow-vectorized nearest-centroid assignment: the numpy/BLAS twin
-    of `ivf_assign`, for the regime where even the max_by-aggregated JVM
-    fold is the bottleneck (trained quantizers push k toward n/64; the
-    per-element higher-order-function fold costs ~100x a dgemm FLOP).
-    mapInPandas streams Arrow batches through ONE matmul per batch
-    against the broadcast centroid matrix -- map-only, no shuffle, no
-    per-row Python: the documented exception to "UDFs are the slow
-    path" (Arrow batch + BLAS beats codegen once the inner loop is a
-    dense matrix product).
-
-    Semantics match `ivf_assign` exactly at the argmax level: max
-    cosine, ties to the smallest cent_id (np.argmax returns the FIRST
-    max index and columns are ordered by cent_id). Float sums differ
-    from the JVM's sequential fold in the last ulp (pairwise/SIMD
-    summation), which can flip an argmax only when two centroids tie
-    within ~1e-15 relative -- the `embedding_assign_arrow_agreement`
-    row MEASURES that rate against the fold-exact assignment (witness:
-    >= 99.99% agreement) instead of assuming it. Returns
-    (id_col, cell), or (id_col, vec_col, cell) with ``keep_vec=True``
-    (the `ivf_assign` output shape, still map-only -- callers that need
-    the vector downstream should carry it through here rather than pay
-    a corpus-scale re-join on the id)."""
-    import numpy as np
-    import pandas as pd
-
-    cent_rows = sorted(
-        centroids.select("cent_id", "cv").collect(), key=lambda r: r[0]
-    )
-    cent_ids = np.asarray([int(r[0]) for r in cent_rows], dtype=np.int64)
-    C = np.asarray([r[1] for r in cent_rows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-
-    vec_type = emb.schema[vec_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} long, {vec_col} {vec_type}, cell long"
-        if keep_vec
-        else f"{id_col} long, cell long"
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                # empty Arrow batch -> np.asarray of an empty list is a
-                # shape-(0,) 1-D array and the matmul raises; skip it
-                continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            Vn = V / np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-12
-            )
-            best = np.argmax(Vn @ Cn.T, axis=1)
-            out = {id_col: pdf[id_col].to_numpy()}
-            if keep_vec:
-                out[vec_col] = pdf[vec_col]
-            out["cell"] = cent_ids[best]
-            yield pd.DataFrame(out)
-
-    return emb.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        assign, out_schema
     )
 
 

@@ -2316,9 +2316,9 @@ ORACLE_SQL["embedding_semantic_dedup_trained"] = """
 """
 
 
-# Arrow/BLAS assignment agreement: numpy summation order is not
-# SQL-reproducible by design; the oracle pins the key-set cardinality and
-# the measured >= 99.99%-agreement witness (the pagerank-witness form)
+# Assignment agreement (ivf_assign's kernel vs an in-plan Catalyst argmax):
+# the oracle pins the key-set cardinality and the >= 99.99%-agreement
+# witness (the pagerank-witness form)
 ORACLE_SQL["embedding_assign_arrow_agreement"] = """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
            TRUE AS agree_ge_9999bp

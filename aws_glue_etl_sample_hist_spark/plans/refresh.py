@@ -8,7 +8,7 @@ corpus and its IVF index are artifacts AT REST, and the refresh job pays
 only for the batch --
 
     R0 (parallel) index     IVF index built from the STANDING embeddings
-                            (fold-exact assignment --
+                            (exact cosine assignment --
                             operators/ann_index.py)
                   publish   standing corpus committed as manifest v1
                             (io/manifest.py atomic publish)
@@ -19,7 +19,7 @@ only for the batch --
                             (no standing match at >= 0.5 Jaccard) are the
                             kept tier
     R2            append    survivors' embeddings assigned with the
-                            PERSISTED centroids by the same fold-exact
+                            PERSISTED centroids by the same exact
                             assignment and appended as new files into the
                             existing cell partitions (centroids never
                             retrain on append: cell ids must stay stable)
@@ -81,7 +81,7 @@ def run_corpus_refresh(
     batch_docs = docs.filter(~_standing_pred("doc_id"))
 
     def r0_index() -> None:
-        # fold-exact build: the registered audit carries an EXACT cell
+        # exact build: the registered audit carries an EXACT cell
         # oracle, and appends use the same argmax
         build_ivf_index(
             emb.filter(_standing_pred("vec_id")),

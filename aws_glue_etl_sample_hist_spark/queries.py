@@ -1002,7 +1002,8 @@ def q_embedding_ivf_ann_trained(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_embedding_cosine_topk_pandas(spark: SparkSession, sf: str) -> DataFrame:
     """Brute-force cosine top-10 via the Arrow/numpy kernel -- result-identical
-    to embedding_cosine_topk (same oracle), vectorized physical plan."""
+    to embedding_cosine_topk (same oracle, the same raw cosines), map-only
+    physical plan."""
     from .operators.similarity import cosine_topk_pandas
 
     return cosine_topk_pandas(load_table(spark, sf, "embeddings"), [0, 1, 2, 3, 4], k=10)
@@ -1677,11 +1678,7 @@ def q_embedding_semantic_dedup_trained(spark: SparkSession, sf: str) -> DataFram
         if n > n_train
         else emb
     )
-    # vectorized trainer: the witness contract is quantizer-agnostic, so
-    # this row may take the Arrow/BLAS distance passes (~10x on the
-    # trainer, which dominated the sf1 wall); the embedding_kmeans_parallel
-    # contract row keeps the fold-exact default.
-    cents = kmeans_parallel_centroids(train, k, vectorized=True)
+    cents = kmeans_parallel_centroids(train, k)
     if k > 256:
         import math
 
@@ -1690,11 +1687,7 @@ def q_embedding_semantic_dedup_trained(spark: SparkSession, sf: str) -> DataFram
             two_level_assign(emb, cents, n_coarse=kc, nprobe=2), "vec_id"
         )
         return semantic_dedup_witness(emb, assigned=assigned)
-    # flat regime (k <= 256): the Arrow/BLAS assignment (VERDICT r11
-    # item 7) -- eligible because this row's oracle is the witness
-    # contract (assignment-agnostic), and the argmax agreement vs the
-    # fold-exact path is MEASURED by embedding_assign_arrow_agreement
-    return semantic_dedup_witness(emb, centroids=cents, vectorized_assign=True)
+    return semantic_dedup_witness(emb, centroids=cents)
 
 
 def q_embedding_two_level_agreement(spark: SparkSession, sf: str) -> DataFrame:
@@ -2009,37 +2002,44 @@ def q_embedding_bitext_recall(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_embedding_assign_arrow_agreement(spark: SparkSession, sf: str) -> DataFrame:
-    """Arrow/BLAS assignment agreement audit (operators.similarity.
-    assign_cells_arrow): the numpy-matmul nearest-centroid assignment --
-    the scale path once trained quantizers push k toward n/64, where
-    even the max_by-aggregated JVM cosine fold is the bottleneck --
-    measured against the fold-exact `ivf_assign` over the SAME 32
-    seeded centroids. The two differ only where pairwise/SIMD float
-    summation flips an argmax within the last ulp, so the witness pins
-    >= 99.99% agreement (measured: 100% on this corpus) rather than
-    assuming exactness -- the same measure-don't-assume discipline as
-    the two-level and recall audits. Oracle: key-set + witness
-    (numpy summation order is not SQL-reproducible by design)."""
-    from .operators.similarity import (
-        assign_cells_arrow,
-        ivf_assign,
-        seeded_centroids,
-    )
+    """Assignment agreement audit (operators.similarity.ivf_assign): the
+    map-only numpy nearest-centroid assignment -- the scale path once
+    trained quantizers push k toward n/64 -- measured against an in-plan
+    Catalyst argmax over `cosine` (max_by over (cosine, -cent_id)) for
+    the SAME 32 seeded centroids. The kernel adds in the Catalyst fold's
+    order, so the two agree exactly (measured: 100%); the witness pins
+    >= 99.99% agreement, the same measure-don't-assume discipline as the
+    two-level and recall audits. Oracle: key-set + witness."""
+    from .operators.similarity import dot, ivf_assign, norm, seeded_centroids
 
     emb = load_table(spark, sf, "embeddings")
     fine = seeded_centroids(emb, 32)
-    exact = ivf_assign(emb, 32, centroids=fine).select(
-        "vec_id", F.col("cell").alias("cell_fold")
+    kernel = ivf_assign(emb, 32, centroids=fine).select(
+        "vec_id", F.col("cell").alias("cell_kernel")
     )
-    arrow = assign_cells_arrow(emb, fine).select(
-        "vec_id", F.col("cell").alias("cell_arrow")
+    # `cosine` with each side's norm hoisted into a column: the same
+    # doubles, one norm fold per vector instead of two per pair
+    c = F.broadcast(fine.select("cent_id", "cv", norm(F.col("cv")).alias("_cn")))
+    v = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("_vn"))
+    cos = dot(F.col("cv"), F.col("embedding")) / F.greatest(
+        F.col("_cn") * F.col("_vn"), F.lit(1e-12)
+    )
+    catalyst = (
+        c.crossJoin(v)
+        .groupBy("vec_id")
+        .agg(
+            F.max_by(
+                F.col("cent_id"),
+                F.struct(cos.alias("s"), (-F.col("cent_id")).alias("nc")),
+            ).alias("cell_catalyst")
+        )
     )
     return (
-        exact.join(arrow, "vec_id")
+        kernel.join(catalyst, "vec_id")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.sum(
-                (F.col("cell_arrow") == F.col("cell_fold")).cast("long")
+                (F.col("cell_kernel") == F.col("cell_catalyst")).cast("long")
             ).alias("_agree"),
         )
         .select(
@@ -2093,7 +2093,7 @@ def q_corpus_refresh_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     standing corpus + IVF index at rest (manifest v1) -> new batch ->
     incremental MinHash dedup (batch x standing candidates only) ->
     survivors' embeddings appended into the persisted index by the
-    build's fold-exact assignment -> atomic manifest v2 publish. Returns the
+    build's exact assignment -> atomic manifest v2 publish. Returns the
     per-document audit frame: refreshed membership and each member's
     PERSISTED index cell (exact oracle: the seeded-centroid argmax
     replay), plus all-true witnesses that incremental maintenance equals
@@ -5625,25 +5625,16 @@ def q_embedding_pq_trained(spark: SparkSession, sf: str) -> DataFrame:
     init, fixed Lloyd rounds), so the flags are stable facts."""
     import math as _math
 
-    from .operators.similarity import (
-        pq_codebook,
-        pq_codebook_trained,
-        pq_codes_arrow,
-    )
+    from .operators.similarity import pq_codebook, pq_codebook_trained, pq_codes
 
     emb = load_table(spark, sf, "embeddings")
-    # Arrow-encoded error sums (r15, guide §4.2): this row's contract is
-    # trained_err < seeded_err (real margin -- training genuinely cuts
-    # reconstruction error) + finiteness, not the err VALUES, so the
-    # numpy encoding pass replaces two Catalyst-lambda corpus passes;
-    # the exact-oracle embedding_pq_codes row keeps fold-exact pq_codes
     seeded_err = (
-        pq_codes_arrow(emb, codebook=pq_codebook(emb))
+        pq_codes(emb, codebook=pq_codebook(emb))
         .agg(F.sum("recon_err")).collect()[0][0]
     )
     cb = pq_codebook_trained(emb)
     trained_err = (
-        pq_codes_arrow(emb, codebook=cb).agg(F.sum("recon_err")).collect()[0][0]
+        pq_codes(emb, codebook=cb).agg(F.sum("recon_err")).collect()[0][0]
     )
     return _arrow_local_frame(spark, 
         [
@@ -5892,13 +5883,7 @@ def q_embedding_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
     # subtree -- one scan + cache reads replaces 12 scans (A/B 7.2->6.0 s)
     emb = tracked_persist(load_table(spark, sf, "embeddings"))
     qids = [0, 1, 2, 3, 4]
-    # vectorized ADC shortlist (r15, guide §4.2): this row's oracle is the
-    # recall-floor contract (flags with 0.1+ margin, keys quantizer-
-    # independent), so it may take the numpy LUT path -- the Catalyst
-    # lambda ADC measured ~2.8 s warm of this row's 4.4 s. The fold-exact
-    # path stays on embedding_pq_topk, whose oracle replays the ADC
-    # values; both paths' rank agreement is covered by the unit test.
-    approx = pq_rerank_topk(emb, qids, k=10, shortlist=50, vectorized=True)
+    approx = pq_rerank_topk(emb, qids, k=10, shortlist=50)
     exact = cosine_topk(emb, qids, k=10)
     return topk_recall(approx, exact, k=10, floor=0.2).drop("recall")
 

@@ -92,30 +92,22 @@ _ROCKSDB_PROVIDER = (
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
-def _stream_shuffle_override(spark: SparkSession) -> str | None:
-    """SPARK_GRAFT_STREAM_STATE_PARTITIONS dial (r14, guide §2.2/§6).
+def _stream_state_partitions(spark: SparkSession) -> str:
+    """Shuffle/state partitions for one streaming drain.
 
     A stateful streaming query pins its state-partition count to
     ``spark.sql.shuffle.partitions`` at FIRST start, and the HDFS-backed
     provider then writes (and fsyncs) one delta file PER STATE PARTITION
     PER STATEFUL OPERATOR PER MICRO-BATCH -- a fixed I/O cost that has
     nothing to do with data volume. The engine's batch-oriented session
-    default (2x cores = 64 here) makes every availableNow drain pay ~64
+    default (2x cores: 64 on a 32-core session) makes every availableNow drain pay ~64
     tiny fsyncs per operator per batch while each partition holds a few
     thousand state rows; the measured r12 split put ~50% of
-    stream_events_dedup's wall in exactly this I/O. 'auto' (default)
-    sizes the drain's shuffle/state partitions at max(8, cores // 4) --
-    still parallel enough to saturate the box's state I/O, 8x fewer
-    per-batch file creations; a cluster with real state volume sets the
-    dial explicitly (state partitions ~ total state / ~64 MB per store,
-    the same sizing rule as any shuffle, §2.2). 'session'/'off' keeps the
-    session conf (the pre-r14 behavior); an integer pins it."""
-    v = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "auto").strip().lower()
-    if v in ("", "off", "session"):
-        return None
-    if v == "auto":
-        return str(max(8, spark.sparkContext.defaultParallelism // 4))
-    return str(int(v))
+    stream_events_dedup's wall in exactly this I/O. Drains therefore size
+    their shuffle/state partitions at max(8, cores // 4) -- still
+    parallel enough to saturate the box's state I/O, 8x fewer per-batch
+    file creations."""
+    return str(max(8, spark.sparkContext.defaultParallelism // 4))
 
 
 def _state_provider_override() -> str | None:
@@ -186,12 +178,8 @@ def _run_to_memory(result: DataFrame, output_mode: str, drain_timeout: float = 6
     # provider dial: a streaming query snapshots the session confs at
     # .start(), so the running drain keeps the override while the session
     # conf is restored immediately (no leak into batch plans)
-    shuffle_override = _stream_shuffle_override(spark_sess)
-    prev_shuffle = (
-        spark_sess.conf.get(_SHUFFLE_KEY, None) if shuffle_override else None
-    )
-    if shuffle_override:
-        spark_sess.conf.set(_SHUFFLE_KEY, shuffle_override)
+    prev_shuffle = spark_sess.conf.get(_SHUFFLE_KEY, None)
+    spark_sess.conf.set(_SHUFFLE_KEY, _stream_state_partitions(spark_sess))
     try:
         q = (
             result.writeStream.format("memory")
@@ -207,11 +195,10 @@ def _run_to_memory(result: DataFrame, output_mode: str, drain_timeout: float = 6
                 spark_sess.conf.unset(_PROVIDER_KEY)
             else:
                 spark_sess.conf.set(_PROVIDER_KEY, prev_provider)
-        if shuffle_override:
-            if prev_shuffle is None:
-                spark_sess.conf.unset(_SHUFFLE_KEY)
-            else:
-                spark_sess.conf.set(_SHUFFLE_KEY, prev_shuffle)
+        if prev_shuffle is None:
+            spark_sess.conf.unset(_SHUFFLE_KEY)
+        else:
+            spark_sess.conf.set(_SHUFFLE_KEY, prev_shuffle)
     deadline = time.monotonic() + drain_timeout
     while time.monotonic() < deadline:
         # sub-second poll: the drained condition shows up ~2 micro-batches in,

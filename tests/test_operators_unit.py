@@ -339,7 +339,9 @@ def test_cosine_zero_vector_never_nan(spark):
     cosine consumer (top-k, sign-bucket ANN, IVF ANN, near-dup, numpy
     kernel). Spark sorts NaN ABOVE every number in a window ORDER BY, so an
     unguarded zero vector would rank as everyone's best neighbor and
-    silently diverge from any other engine's ordering."""
+    silently diverge from any other engine's ordering. The degenerate
+    inputs -- no query id in the corpus, an empty corpus -- give zero rows
+    on every top-k path, never an exception."""
     import math
     import random
 
@@ -349,6 +351,7 @@ def test_cosine_zero_vector_never_nan(spark):
         ivf_ann_topk,
         lsh_ann_topk,
         near_dup_pairs,
+        pq_adc_topk,
     )
 
     rng = random.Random(7)
@@ -379,6 +382,12 @@ def test_cosine_zero_vector_never_nan(spark):
     for exact in (True, False):
         pairs = near_dup_pairs(emb, 0.0, exact=exact).collect()
         assert all(not math.isnan(r.cosine) for r in pairs)
+
+    empty = emb.filter(F.col("vec_id") < 0)
+    for frame, qids in ((emb, [10**9]), (empty, [0, 6])):
+        assert cosine_topk(frame, qids, k=6).collect() == []
+        assert cosine_topk_pandas(frame, qids, k=6).collect() == []
+        assert pq_adc_topk(frame, qids, k=6).collect() == []
 
 
 def test_dedup_clusters_local_dispatch_identical_labels(
@@ -2190,6 +2199,20 @@ def test_audio_activity_segments_finds_loud_runs(spark):
     assert got == [(0, 1, 2, 2)]
 
 
+def _planted_direction_embeddings(spark):
+    """160 vectors around four orthogonal planted directions (the first
+    four axes of R^8, scaled by 5, plus 0.1 Gaussian noise)."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    dirs = np.eye(8)[:4]
+    rows = []
+    for i in range(160):
+        v = dirs[i % 4] * 5.0 + 0.1 * rng.normal(size=8)
+        rows.append((i, [float(x) for x in v]))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
 def test_kmeans_parallel_recovers_planted_clusters(spark):
     """k-means|| on four well-separated direction clusters must return
     unit-norm centroids that each align (cosine > 0.95) with a planted
@@ -2201,14 +2224,8 @@ def test_kmeans_parallel_recovers_planted_clusters(spark):
         kmeans_parallel_centroids,
     )
 
-    rng = np.random.default_rng(3)
-    dirs = np.eye(8)[:4]  # four orthogonal planted directions
-    rows = []
-    for i in range(160):
-        d = dirs[i % 4]
-        v = d * 5.0 + 0.1 * rng.normal(size=8)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    dirs = np.eye(8)[:4]  # the four planted directions
+    emb = _planted_direction_embeddings(spark)
 
     def centroids():
         got = kmeans_parallel_centroids(emb, 4, rounds=3).collect()
@@ -2226,6 +2243,36 @@ def test_kmeans_parallel_recovers_planted_clusters(spark):
         covered.add(j)
     assert covered == {0, 1, 2, 3}
     assert c1 == centroids()
+
+
+def test_kmeans_parallel_local_equals_distributed(spark, sf_small, monkeypatch):
+    """The driver-local k-means|| sketch (default LOCAL_CAP) and the
+    distributed one (LOCAL_CAP = 0) compute d2 with the same fold-order
+    kernel and append each round's picks in id order, so they return the
+    same centroids -- ids and every double -- on a real corpus and on the
+    planted-direction fixture."""
+    from aws_glue_etl_sample_hist_spark.catalog import load_table
+    from aws_glue_etl_sample_hist_spark.operators import _local
+    from aws_glue_etl_sample_hist_spark.operators.similarity import (
+        kmeans_parallel_centroids,
+    )
+
+    cases = (
+        (load_table(spark, sf_small, "embeddings"), 8, 5),
+        (_planted_direction_embeddings(spark), 4, 3),
+    )
+    for emb, k, rounds in cases:
+
+        def centroids():
+            got = kmeans_parallel_centroids(emb, k, rounds=rounds).collect()
+            return sorted((r["cent_id"], tuple(r["cv"])) for r in got)
+
+        local = centroids()
+        with monkeypatch.context() as mp:
+            mp.setattr(_local, "LOCAL_CAP", 0)
+            distributed = centroids()
+        assert len(local) == k
+        assert local == distributed
 
 
 def test_image_dhash_collides_only_on_same_gradient(spark):
@@ -3609,36 +3656,223 @@ def test_round_half_up_matches_spark_round(spark):
         assert got == want, (scale, list(zip(vals, got, want)))
 
 
-def test_pq_arrow_twin_agrees_with_fold_exact(spark, sf_small):
-    """The r15 Arrow/numpy PQ twin (pq_codes_arrow + vectorized
-    pq_adc_topk) must agree with the fold-exact path: identical code
-    assignments (argmin ties break to the lowest code in both), and the
-    identical ADC shortlist membership + order on this corpus (no ulp
-    tie sits on a rank boundary at sf0.01)."""
+def _catalyst_l2sq(a, b):
+    """Squared L2 distance as the left-to-right Catalyst fold -- the
+    in-plan reference the numpy kernel must reproduce."""
+    return F.aggregate(
+        F.zip_with(
+            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double"))
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _catalyst_pq_codes(emb, cb):
+    """PQ encoding as literal-codebook Catalyst folds: per subspace the
+    argmin squared-L2 code (first match on ties), recon_err the summed
+    minimum distances, code_md5 over the comma-joined codes."""
+    sub = len(cb[0][0])
+    code_cols, err_cols = [], []
+    for s, cb_s in enumerate(cb):
+        cb_lit = F.array(*[F.array(*[F.lit(x) for x in code]) for code in cb_s])
+        subvec = F.slice(F.col("embedding"), s * sub + 1, sub)
+        dists = F.transform(cb_lit, lambda code: _catalyst_l2sq(subvec, code))
+        best = F.array_min(dists)
+        code_cols.append((F.array_position(dists, best) - 1).cast("long"))
+        err_cols.append(best)
+    total_err = err_cols[0]
+    for e in err_cols[1:]:
+        total_err = total_err + e
+    return emb.select(
+        "vec_id",
+        F.array(*code_cols).alias("codes"),
+        F.round(total_err, 6).alias("recon_err"),
+        F.md5(F.concat_ws(",", *[c.cast("string") for c in code_cols])).alias(
+            "code_md5"
+        ),
+    )
+
+
+def _catalyst_adc(cb, qv, codes):
+    """The ADC estimator as one literal-codebook Catalyst expression: the
+    sum over subspaces of squared-L2(query sub-vector, codebook[code])."""
+    sub = len(cb[0][0])
+    adc = None
+    for s, cb_s in enumerate(cb):
+        cb_lit = F.array(*[F.array(*[F.lit(x) for x in code]) for code in cb_s])
+        code_vec = F.element_at(cb_lit, (F.element_at(codes, s + 1) + 1).cast("int"))
+        d = _catalyst_l2sq(F.slice(qv, s * sub + 1, sub), code_vec)
+        adc = d if adc is None else adc + d
+    return adc
+
+
+def _adversarial_kernel_fixture(spark):
+    """(emb, centroids) that stress summation order: 256-d vectors whose
+    components run from 1e-8 to 1e8, half of them with two 1e8 terms that
+    cancel around small ones, an all-zero vector, a vector equal to a
+    centroid, and two centroids (c and 2c) whose cosines tie exactly with
+    every vector (scaling by 2 is exact in IEEE). At this width numpy's
+    matmul sums in another order than the fold on this fixture."""
+    import random
+
+    rng = random.Random(11)
+    d = 256
+    rows = []
+    for i in range(24):
+        if i % 2 == 0:
+            v = [rng.uniform(-1, 1) for _ in range(d)]
+            v[0], v[2] = 1e8 + i, -(1e8 + i)
+        else:
+            v = [
+                rng.choice((-1.0, 1.0)) * 10.0 ** rng.randint(-8, 8) * rng.uniform(1, 2)
+                for _ in range(d)
+            ]
+        rows.append((i, v))
+    c0 = [rng.uniform(-1, 1) for _ in range(d)]
+    c0[0] = c0[2] = 1e8
+    c1 = [rng.uniform(-1, 1) for _ in range(d)]
+    cents = [(0, c0), (1, c1), (2, [2.0 * x for x in c1]), (3, rows[5][1])]
+    rows.append((24, [0.0] * d))
+    rows.append((25, list(c0)))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cent = spark.createDataFrame(cents, "cent_id long, cv array<double>")
+    return emb, cent
+
+
+def test_kernel_is_bit_identical_to_the_catalyst_fold(spark, sf_small):
+    """The numpy kernel reproduces the Catalyst folds exactly (==, not
+    approx) on sf_small and on an adversarial fixture: dot, norm,
+    squared-L2 and cosine for every (vector, centroid) pair; ivf_assign's
+    cell == the Catalyst argmax (max cosine, ties to the lowest cent_id);
+    PQ codes, recon_err and code_md5 == the literal-codebook folds; raw
+    ADC distances == the Catalyst ADC expression; and pq_adc_topk's ranks
+    and distances == the Catalyst ADC top-k window."""
+    from pyspark.sql.window import Window
+
     from aws_glue_etl_sample_hist_spark.catalog import load_table
     from aws_glue_etl_sample_hist_spark.operators.similarity import (
+        _adc_scores,
+        _fold_cosine,
+        _fold_dot,
+        _fold_sqdist,
+        _fold_norm,
+        _rows,
+        cosine,
+        dot,
+        ivf_assign,
+        norm,
         pq_adc_topk,
         pq_codebook,
         pq_codes,
-        pq_codes_arrow,
+        seeded_centroids,
     )
 
-    emb = load_table(spark, sf_small, "embeddings")
-    cb = pq_codebook(emb)
-    exact = {
-        r.vec_id: tuple(r.codes) for r in pq_codes(emb, codebook=cb).collect()
-    }
-    arrow = {
-        r.vec_id: tuple(r.codes)
-        for r in pq_codes_arrow(emb, codebook=cb).collect()
-    }
-    assert exact == arrow
-    fold_rank = [
-        (r.query_id, r.rank, r.neighbor_id)
-        for r in pq_adc_topk(emb, [0, 1, 2], k=10).collect()
-    ]
-    vec_rank = [
-        (r.query_id, r.rank, r.neighbor_id)
-        for r in pq_adc_topk(emb, [0, 1, 2], k=10, vectorized=True).collect()
-    ]
-    assert sorted(fold_rank) == sorted(vec_rank)
+    real = load_table(spark, sf_small, "embeddings")
+    cases = [(real, seeded_centroids(real, 32), 4, 16)]
+    cases.append(_adversarial_kernel_fixture(spark) + (4, 4))
+    for emb, cent, m, n_codes in cases:
+        vecs = sorted(
+            (r.vec_id, list(r.embedding))
+            for r in emb.select("vec_id", "embedding").collect()
+        )
+        cents = sorted((r.cent_id, list(r.cv)) for r in cent.collect())
+        V = _rows([v for _, v in vecs])
+        C = _rows([c for _, c in cents])
+        vi = {vid: i for i, (vid, _) in enumerate(vecs)}
+        ci = {cid: j for j, (cid, _) in enumerate(cents)}
+        kdot, kl2, kcos = _fold_dot(V, C), _fold_sqdist(V, C), _fold_cosine(V, C)
+        knorm = _fold_norm(V)
+
+        pairs = (
+            emb.crossJoin(cent)
+            .select(
+                "vec_id",
+                "cent_id",
+                dot(F.col("embedding"), F.col("cv")).alias("dot"),
+                norm(F.col("embedding")).alias("norm"),
+                _catalyst_l2sq(F.col("embedding"), F.col("cv")).alias("l2"),
+                cosine(F.col("embedding"), F.col("cv")).alias("cos"),
+            )
+            .collect()
+        )
+        assert len(pairs) == len(V) * len(C)
+        bad = [
+            r
+            for r in pairs
+            if (r.dot, r.norm, r.l2, r.cos)
+            != (
+                kdot[vi[r.vec_id], ci[r.cent_id]],
+                knorm[vi[r.vec_id]],
+                kl2[vi[r.vec_id], ci[r.cent_id]],
+                kcos[vi[r.vec_id], ci[r.cent_id]],
+            )
+        ]
+        assert not bad, bad[:3]
+
+        catalyst_cell = {
+            r.vec_id: r.cell
+            for r in emb.crossJoin(F.broadcast(cent))
+            .groupBy("vec_id")
+            .agg(
+                F.max_by(
+                    "cent_id",
+                    F.struct(
+                        cosine(F.col("cv"), F.col("embedding")).alias("s"),
+                        (-F.col("cent_id")).alias("nc"),
+                    ),
+                ).alias("cell")
+            )
+            .collect()
+        }
+        kernel_cell = {
+            r.vec_id: r.cell for r in ivf_assign(emb, 0, centroids=cent).collect()
+        }
+        assert kernel_cell == catalyst_cell
+
+        cb = pq_codebook(emb, m, n_codes)
+        want = sorted(
+            (r.vec_id, tuple(r.codes), r.recon_err, r.code_md5)
+            for r in _catalyst_pq_codes(emb, cb).collect()
+        )
+        got = sorted(
+            (r.vec_id, tuple(r.codes), r.recon_err, r.code_md5)
+            for r in pq_codes(emb, m, n_codes, codebook=cb).collect()
+        )
+        assert got == want
+
+        qids = [vecs[0][0], vecs[1][0], vecs[-1][0]]
+        codes = pq_codes(emb, m, n_codes, codebook=cb)
+        q = emb.filter(F.col("vec_id").isin(qids)).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+        )
+        catalyst_adc = (
+            q.crossJoin(codes.select(F.col("vec_id").alias("neighbor_id"), "codes"))
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .select(
+                "query_id",
+                "neighbor_id",
+                _catalyst_adc(cb, F.col("qv"), F.col("codes")).alias("adc_raw"),
+            )
+        )
+        kernel_adc = _adc_scores(codes, [(qid, V[vi[qid]]) for qid in qids], cb)
+        assert sorted(kernel_adc.collect()) == sorted(catalyst_adc.collect())
+
+        w = Window.partitionBy("query_id").orderBy("adc_raw", "neighbor_id")
+        want_rank = sorted(
+            (r.query_id, r.rank, r.neighbor_id, r.adc_dist)
+            for r in catalyst_adc.select(
+                "query_id",
+                "neighbor_id",
+                F.row_number().over(w).alias("rank"),
+                F.round("adc_raw", 6).alias("adc_dist"),
+            ).collect()
+        )
+        got_rank = sorted(
+            (r.query_id, r.rank, r.neighbor_id, r.adc_dist)
+            for r in pq_adc_topk(
+                emb, qids, k=len(vecs), m=m, n_codes=n_codes
+            ).collect()
+        )
+        assert got_rank == want_rank

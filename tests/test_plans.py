@@ -132,41 +132,35 @@ def test_topk_uses_takeordered_not_global_sort(spark, sf_oracle):
 # count) or the query IS the documented all-pairs exact twin
 NESTED_LOOP_WHITELIST = {
     "embedding_cosine_topk",       # broadcast 5 query vectors x corpus (exact baseline)
-    "embedding_cosine_topk_pandas",  # same contract, numpy kernel
-    "embedding_ivf_ann",           # crossJoin(broadcast(<=8 centroids)): assignment pass
+    "embedding_ivf_ann",           # broadcast queries x broadcast(<=8 centroids): probe pass
     "embedding_ivf_ann_trained",   # same with trained centroids
-    "embedding_cell_stats",        # same assignment pass + 1-row corpus-count scalar join
+    "embedding_cell_stats",        # crossJoin(broadcast(<=8 centroids)) scoring
+                                   # + 1-row corpus-count scalar join
     "embedding_near_dup",          # the documented all-pairs small-n exact twin
     "text_tfidf_top_terms",        # |vocab| x 1-row corpus count (scalar join)
-    "embedding_semantic_dedup",    # crossJoin(broadcast(<=8 centroids)): assignment pass
-    "embedding_two_level_agreement",  # coarse routing + flat-exact contrast:
-                                   # every stage crossJoins a BROADCAST
+    "embedding_two_level_agreement",  # coarse routing: every two-level
+                                   # stage crossJoins a BROADCAST
                                    # <=32-centroid frame (bounded)
     "embedding_bitext_recall",     # exact-truth audit: the truth side is a
                                    # broadcast src-shard x tgt-shard cross
                                    # join BY DEFINITION (measurement harness;
                                    # sample_frac^2 dial + the banded miner
                                    # are the production paths)
-    "embedding_assign_arrow_agreement",  # contrast row: the fold-exact side
-                                   # is ivf_assign's broadcast-centroid
-                                   # crossJoin (bounded); the Arrow side is
-                                   # map-only mapInPandas
-    "embedding_two_level_pair_recall",  # handoff dup-pair audit: flat +
+    "embedding_assign_arrow_agreement",  # contrast row: the Catalyst
+                                   # reference argmax is a broadcast-
+                                   # centroid crossJoin (bounded); the
+                                   # ivf_assign side is map-only mapInPandas
+    "embedding_two_level_pair_recall",  # handoff dup-pair audit: the
                                    # two-level assignment of the md5-capped
-                                   # fixture, each a crossJoin of a
-                                   # BROADCAST <=32-centroid frame; the
+                                   # fixture crossJoins a BROADCAST
+                                   # <=32-centroid frame; the
                                    # pair joins themselves are cell
                                    # equi-joins (never nested-loop)
     "embedding_two_level_nprobe_curve",  # same audit swept at nprobe 2/3/4
                                    # over ONE shared coarse level: the only
                                    # crossJoins are the same bounded
-                                   # broadcast-centroid assignment passes,
+                                   # broadcast-centroid routing passes,
                                    # once per curve point
-    "embedding_semantic_dedup_trained",  # k-means|| sketch + assignment:
-                                   # crossJoin(broadcast(k x d centroids))
-                                   # over the corpus -- candidate set is
-                                   # broadcast-bounded by construction
-    "embedding_pq_topk",           # broadcast 5 query vectors x encoded corpus (ADC)
     "customer_rfm",                # 1-row as-of date + 1-row quartile cuts (scalar joins)
     "rich_idle_customers",         # 1-row global-average balance (scalar join)
     "corpus_zipf",                 # 1-row corpus token total x top-50 terms
@@ -178,16 +172,14 @@ NESTED_LOOP_WHITELIST = {
     "events_heavy_hitters",        # 1-row corpus count x candidate-count frame
     "orders_price_histogram",      # 1-row min/max bounds x fact scan (binning)
     "hybrid_retrieval_rrf",        # composes bm25 (1-row stats) + cosine_topk
-    "embedding_pq_index_search",   # broadcast 5 queries x persisted codes (ADC)
     "corpus_dataset_card",         # 1-row base stats x 1-row lang stats
     "orders_market_basket",        # 1-row order count x pair-support frame
     "orders_benford_audit",        # 1-row total x 9-digit frame
-    "embedding_ivf_index_search",  # probe-cell equi-join, but the build's
-                                   # assignment pass crossJoins broadcast centroids
     "embedding_ivf_recall",        # composes the exact twin (broadcast 5 queries
-                                   # x corpus) + the IVF assignment crossJoin
-    "embedding_pq_recall",         # composes the exact twin + broadcast 5
-                                   # queries x encoded corpus (ADC shortlist)
+                                   # x corpus) + the IVF probe crossJoin
+    "embedding_pq_recall",         # composes the exact twin (broadcast 5
+                                   # queries x corpus); the ADC shortlist
+                                   # is map-only
     "corpus_psi_drift",            # sources-cardinality grid x broadcast
                                    # 16-bucket range (densify for smoothing)
     "corpus_token_cms",            # 1-row token total x 20-key estimate frame
