@@ -16,7 +16,11 @@ noted single-connection in document/glue_t0.md:144). Spark-first rebuild:
   - a tier the engine wrote itself is read back with ``read_tier``: the
     schema comes from one file's footer on the driver (the reference's
     readers get it from the Glue Data Catalog), so the read starts no
-    schema-inference job.
+    schema-inference job;
+  - a small tier (centroids, 1-row stats, a codebook) is read onto the
+    driver with ``read_small_tier``, and a partition's row count is the
+    sum of its footers' ``num_rows`` (``footer_rows``): a query's constants
+    start no Spark job.
 """
 
 from __future__ import annotations
@@ -24,17 +28,20 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from ..operators._local import LOCAL_CAP
 
 # the footer key Spark's parquet writer fills with the row schema as JSON
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _first_data_file(path: str) -> str | None:
-    """First data file under ``path`` in sorted order: ``_``/``.`` names
-    (``_SUCCESS``, ``_source.json``, checksums) are skipped and only
+def _data_files(path: str):
+    """Data files under ``path`` in sorted order, lazily: ``_``/``.``
+    names (``_SUCCESS``, ``_source.json``, checksums) are skipped and only
     ``k=v`` partition directories are descended."""
     for name in sorted(os.listdir(path)):
         if name.startswith(("_", ".")):
@@ -42,12 +49,37 @@ def _first_data_file(path: str) -> str | None:
         full = os.path.join(path, name)
         if os.path.isdir(full):
             if "=" in name:
-                found = _first_data_file(full)
-                if found is not None:
-                    return found
+                yield from _data_files(full)
         else:
-            return full
-    return None
+            yield full
+
+
+def footer_rows(path: str) -> int:
+    """Rows in every data file under ``path``, summed from the parquet
+    footers on the driver: no Spark job, no data page read. 0 when
+    ``path`` does not exist (a partition no row landed in)."""
+    if not os.path.isdir(path):
+        return 0
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
+
+
+def read_small_tier(path: str) -> pa.Table:
+    """A small unpartitioned tier the engine wrote (centroids, 1-row
+    stats, a PQ codebook), read onto the driver with pyarrow: no Spark
+    job. The footers' row total is checked against ``LOCAL_CAP`` before
+    any data page is read, so a tier that is not small raises
+    ``ValueError`` naming ``path`` instead of filling driver memory;
+    ``FileNotFoundError`` when ``path`` holds no data file."""
+    files = [pq.ParquetFile(f) for f in _data_files(path)]
+    if not files:
+        raise FileNotFoundError(f"no parquet data file under {path!r}")
+    n = sum(f.metadata.num_rows for f in files)
+    if n > LOCAL_CAP:
+        raise ValueError(
+            f"{path!r} holds {n} rows, more than the driver-local cap "
+            f"LOCAL_CAP={LOCAL_CAP}: read it with read_tier"
+        )
+    return pa.concat_tables(f.read() for f in files)
 
 
 def read_tier(spark: SparkSession, path: str) -> DataFrame:
@@ -55,13 +87,13 @@ def read_tier(spark: SparkSession, path: str) -> DataFrame:
     writer stored in the footer instead of a schema-inference job.
 
     The schema is read on the driver with pyarrow from the first data file
-    (``_first_data_file``); every file of a tier comes from the same
+    (``_data_files`` order); every file of a tier comes from the same
     write, so one footer speaks for all. Partition columns are not in the
     file schema: Spark still infers them from the ``k=v`` directory names,
     on the driver and without a job. Raises ``FileNotFoundError`` when
     ``path`` holds no data file and ``ValueError`` when the footer carries
     no Spark schema (a file some other writer produced)."""
-    first = _first_data_file(path)
+    first = next(_data_files(path), None)
     if first is None:
         raise FileNotFoundError(f"no parquet data file under {path!r}")
     meta = pq.read_metadata(first).metadata or {}

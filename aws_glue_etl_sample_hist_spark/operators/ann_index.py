@@ -17,9 +17,12 @@ a crawl batch assigns it with the PERSISTED centroids (never retrain on
 append -- cell ids must stay stable) and writes new files into the same
 partition dirs.
 
-Probe selection runs driver-side over the collected centroid table (k x dim
-floats -- bounded by the centroid count, not the corpus): the
-serving path needs cell literals BEFORE the scan so the planner can prune.
+Probe selection runs driver-side over the centroid table read straight from
+its parquet footers and pages with pyarrow (`io.sources.read_small_tier`,
+k x dim floats -- bounded by the centroid count, not the corpus), so it
+starts no Spark job: the serving path needs cell literals BEFORE the scan so
+the planner can prune. The PQ codebook is read the same way, so a PQ query's
+only job is its ADC scan.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..io.sources import read_tier
+from ..io.sources import read_small_tier, read_tier
 from .similarity import auto_centroids, cosine, ivf_assign, seeded_centroids
 
 
@@ -106,7 +109,10 @@ def query_ivf_index(
     """
     import math
 
-    cent_rows = read_tier(spark, os.path.join(index_dir, "centroids")).collect()
+    cent = read_small_tier(os.path.join(index_dir, "centroids"))
+    cent_rows = list(
+        zip(cent.column("cent_id").to_pylist(), cent.column("cv").to_pylist())
+    )
 
     def _cos(a: list[float], b: list[float]) -> float:
         dot = sum(x * y for x, y in zip(a, b))
@@ -117,7 +123,7 @@ def query_ivf_index(
     probes: dict[int, list[int]] = {}
     for qid, qv in queries:
         ranked = sorted(
-            ((_cos(qv, r.cv), -r.cent_id) for r in cent_rows), reverse=True
+            ((_cos(qv, cv), -cid) for cid, cv in cent_rows), reverse=True
         )
         probes[qid] = [-c for _, c in ranked[:nprobe]]
     cells = sorted({c for cs in probes.values() for c in cs})
@@ -206,11 +212,12 @@ def build_pq_index(
     )
 
 
-def _load_codebook(spark: SparkSession, index_dir: str) -> list[list[list[float]]]:
-    rows = read_tier(spark, os.path.join(index_dir, "codebook")).collect()
+def _load_codebook(index_dir: str) -> list[list[list[float]]]:
+    cb = read_small_tier(os.path.join(index_dir, "codebook"))
     by_sub: dict[int, dict[int, list[float]]] = {}
-    for r in rows:
-        by_sub.setdefault(r.subspace, {})[r.code_id] = [float(x) for x in r.cv]
+    cols = (cb.column(n).to_pylist() for n in ("subspace", "code_id", "cv"))
+    for s, c, cv in zip(*cols):
+        by_sub.setdefault(s, {})[c] = [float(x) for x in cv]
     return [
         [by_sub[s][c] for c in sorted(by_sub[s])] for s in sorted(by_sub)
     ]
@@ -232,7 +239,7 @@ def query_pq_index(
 
     from .similarity import _adc_scores, _rank_adc
 
-    cb = _load_codebook(spark, index_dir)
+    cb = _load_codebook(index_dir)
     codes = read_tier(spark, os.path.join(index_dir, "codes"))
     qs = [
         (qid, np.asarray(qv, dtype=np.float32).astype(np.float64))

@@ -318,15 +318,25 @@ def ivf_assign(
         if centroids is not None
         else seeded_centroids(emb, n_centroids, id_col=id_col, vec_col=vec_col)
     )
+    return _assign_pass(emb, cent, id_col, vec_col, best_cos=False)
+
+
+def _assign_pass(
+    emb: DataFrame, cent: DataFrame, id_col: str, vec_col: str, *, best_cos: bool
+) -> DataFrame:
+    """The one map-only assignment pass: the k x d centroid table is
+    collected once and closed over, and each Arrow batch is scored by
+    `_fold_cosine`. Returns (id_col, vec_col, cell), or with ``best_cos``
+    (id_col, cell, cent_cos) -- the winning cosine in place of the
+    vector, which then never crosses back from Python."""
     cent_rows = sorted(cent.select("cent_id", "cv").collect(), key=lambda r: r[0])
     cent_ids = np.asarray([r[0] for r in cent_rows], dtype=np.int64)
     C = _rows([r[1] for r in cent_rows])
+    cell = T.StructField("cell", cent.schema["cent_id"].dataType)
     out_schema = T.StructType(
-        [
-            emb.schema[id_col],
-            emb.schema[vec_col],
-            T.StructField("cell", cent.schema["cent_id"].dataType),
-        ]
+        [emb.schema[id_col], cell, T.StructField("cent_cos", T.DoubleType())]
+        if best_cos
+        else [emb.schema[id_col], emb.schema[vec_col], cell]
     )
 
     def assign(batches):
@@ -336,13 +346,15 @@ def ivf_assign(
             if len(pdf) == 0 or len(cent_ids) == 0:
                 continue
             cos = _fold_cosine(_rows(pdf[vec_col]), C)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": cent_ids[np.argmax(cos, axis=1)],
-                }
-            )
+            best = np.argmax(cos, axis=1)
+            cols = {id_col: pdf[id_col]}
+            if best_cos:
+                cols["cell"] = cent_ids[best]
+                cols["cent_cos"] = cos[np.arange(len(best)), best]
+            else:
+                cols[vec_col] = pdf[vec_col]
+                cols["cell"] = cent_ids[best]
+            yield pd.DataFrame(cols)
 
     return emb.select(id_col, vec_col).mapInPandas(assign, out_schema)
 
@@ -417,24 +429,17 @@ def cell_stats(
     over-represented topics (dedup/downsample candidates), near-empty cells
     are coverage gaps, low mean-cosine cells are incoherent catch-alls.
 
-    Shape: `ivf_assign`'s broadcast map-only pass keeps the per-vector
-    cosine, then ONE groupBy(cell) -- at 10^9 vectors this is a scan plus
-    an 8-to-4096-row aggregate. Seeded centroids keep it oracle-exact;
-    a trained quantizer drops in via ``centroids``."""
+    Shape: `ivf_assign`'s map-only kernel pass, emitting each vector's
+    best cosine in place of the vector, then ONE groupBy(cell) -- at 10^9
+    vectors this is a scan plus an 8-to-4096-row aggregate. Seeded
+    centroids keep it oracle-exact; a trained quantizer drops in via
+    ``centroids``."""
     cent = (
         centroids
         if centroids is not None
         else seeded_centroids(emb, n_centroids, id_col=id_col, vec_col=vec_col)
     )
-    scored = F.broadcast(cent).crossJoin(emb.select(F.col(id_col), F.col(vec_col))).select(
-        id_col, "cent_id", cosine(F.col("cv"), F.col(vec_col)).alias("cent_cos")
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("cent_cos").desc(), F.col("cent_id").asc())
-    assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, F.col("cent_id").alias("cell"), "cent_cos")
-    )
+    assigned = _assign_pass(emb, cent, id_col, vec_col, best_cos=True)
     n_total = emb.agg(F.count(F.lit(1)).alias("n_total"))
     return (
         assigned.groupBy("cell")

@@ -20,6 +20,15 @@ The serving claims this layout buys at 100 TB:
   - both index builds are one corpus pass each, restartable independently
     (stage barrier), and serving never touches raw documents.
 
+A query decides everything it can reach before any distributed work starts:
+the 1-row stats, each query term's df (the footer row count of its posting
+partition) and the IVF centroids are read on the driver with pyarrow and
+enter the plans as literals -- no stats cross join, no df shuffle, no idf
+broadcast, no centroid collect. The lexical and vector branches are
+independent, so their top-20 lists are collected concurrently from two
+driver threads, and RRF fusion of the two <= 20-row lists runs on the
+driver.
+
 BM25 math matches operators.ranking.bm25_topk term for term, so the serve
 answer over the persisted postings equals the in-plan operator over the
 cleaned corpus -- which is what the pipeline test asserts.
@@ -28,19 +37,22 @@ cleaned corpus -- which is what the pipeline test asserts.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..io.sinks import write_partitioned
-from ..io.sources import read_tier
+from ..io.sources import footer_rows, read_small_tier, read_tier
+from ..operators._local import arrow_local_frame
 from ..operators.ann_index import build_ivf_index, build_pq_index, query_ivf_index
 from ..operators.ranking import BM25_B, BM25_K1
 from ..operators.text import token_count, tokens
 from .pipeline import Pipeline
 
 QUERY_TERMS = ["spark", "window", "merge"]
+RRF_K = 60.0
 QUALITY_MIN_CHARS = 40
 
 
@@ -77,36 +89,56 @@ def build_lengths(cleaned: DataFrame, out_dir: str) -> None:
     write_partitioned(stats, os.path.join(out_dir, "stats"))
 
 
+# the characters Spark's partition writer escapes as %XX in a ``k=v``
+# directory name (ExternalCatalogUtils.escapePathName): ASCII controls,
+# DEL and "#%'*/:={[]^?\ -- tokens are whitespace-split, so a term can
+# hold any of the printable ones
+_PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+
+
+def _term_dir(index_dir: str, term: str) -> str:
+    """The postings partition directory Spark wrote for ``term``."""
+    name = "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in term)
+    return os.path.join(index_dir, "postings", f"term={name}")
+
+
 def serve_bm25(
     spark: SparkSession, index_dir: str, terms: list[str], k: int = 20
 ) -> DataFrame:
     """BM25 top-k from the PERSISTED index only: posting partitions for the
-    query terms (pruned scan), the lengths table, and the 1-row stats."""
+    query terms (pruned scan) and the lengths table.
+
+    The constants are read on the driver and start no Spark job: (n_docs,
+    avgdl) from the 1-row stats tier, and each term's df as the footer row
+    count of its posting partition -- posting rows are unique per (term,
+    doc_id) by construction, so that count IS the df. They enter the plan
+    as literals, and idf stays a Spark ``log`` over them (Python's
+    ``math.log`` may differ in the last ulp), so scores equal
+    ``bm25_topk``'s bit for bit. A term absent from the index has df 0 and
+    no postings: it contributes nothing."""
+    stats = read_small_tier(os.path.join(index_dir, "stats")).to_pylist()[0]
+    n_docs, avgdl = F.lit(stats["n_docs"]), F.lit(stats["avgdl"])
+    idf = F.lit(None).cast("double")
+    for term in terms:
+        df = F.lit(footer_rows(_term_dir(index_dir, term)))
+        idf = F.when(
+            F.col("term") == term,
+            F.log(F.lit(1.0) + (n_docs - df + F.lit(0.5)) / (df + F.lit(0.5))),
+        ).otherwise(idf)
     postings = read_tier(spark, os.path.join(index_dir, "postings")).filter(
         F.col("term").isin(terms)
     )
     dl = read_tier(spark, os.path.join(index_dir, "lengths"))
-    stats = read_tier(spark, os.path.join(index_dir, "stats"))
-    dfreq = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = dfreq.crossJoin(F.broadcast(stats)).select(
-        "term",
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        ).alias("idf"),
-        "avgdl",
-    )
     scored = (
-        postings.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
+        postings.join(dl, "doc_id")
         .withColumn(
             "contrib",
-            F.col("idf")
+            idf
             * F.col("tf")
             * (BM25_K1 + 1.0)
             / (
                 F.col("tf")
-                + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+                + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / avgdl)
             ),
         )
         .groupBy("doc_id")
@@ -122,6 +154,33 @@ def serve_bm25(
     )
 
 
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on its shortest
+    decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
+def rrf_score(lex_rank: int | None, sem_rank: int | None) -> float:
+    """Reciprocal-rank fusion score of one id from its rank in each list
+    (None where it is missing): the Catalyst
+    ``round(coalesce(1/(60+l), 0) + coalesce(1/(60+s), 0), 6)`` to the bit
+    -- the same IEEE ops in the same order, then ``_round6``."""
+
+    def part(rank: int | None) -> float:
+        return 0.0 if rank is None else 1.0 / (RRF_K + rank)
+
+    return _round6(part(lex_rank) + part(sem_rank))
+
+
+def rrf_fuse(lex_ids: list[int], sem_ids: list[int]) -> list[tuple[int, float]]:
+    """Fuse two ranked id lists (best first): (id, ``rrf_score``) for
+    every id in either, by score desc, id asc."""
+    lex = {d: r for r, d in enumerate(lex_ids, 1)}
+    sem = {d: r for r, d in enumerate(sem_ids, 1)}
+    fused = {d: rrf_score(lex.get(d), sem.get(d)) for d in lex.keys() | sem.keys()}
+    return sorted(fused.items(), key=lambda t: (-t[1], t[0]))
+
+
 def serve_hybrid(
     spark: SparkSession,
     index_dir: str,
@@ -130,29 +189,28 @@ def serve_hybrid(
     k: int = 10,
 ) -> DataFrame:
     """RRF fusion of persisted-postings BM25 and persisted-IVF cosine --
-    the r2 serving path; every byte read is an index artifact."""
-    lex = serve_bm25(spark, index_dir, terms, k=20)
-    w_lex = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    lex_r = lex.select(
-        "doc_id", F.row_number().over(w_lex).cast("long").alias("lex_rank")
-    )
-    sem_r = query_ivf_index(
-        spark, os.path.join(index_dir, "ivf"), [query_vec], k=20, nprobe=8
-    ).select(F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("sem_rank"))
-    fused = lex_r.join(sem_r, "doc_id", "full_outer").select(
-        "doc_id",
-        F.round(
-            F.coalesce(1.0 / (60.0 + F.col("lex_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (60.0 + F.col("sem_rank")), F.lit(0.0)),
-            6,
-        ).alias("rrf_score"),
-    )
-    w = Window.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-    return (
-        fused.orderBy(F.col("rrf_score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .select("rank", "doc_id", "rrf_score")
+    the r2 serving path; every byte read is an index artifact.
+
+    Each branch reads its constants on the driver, with no job, before
+    its first job starts (stats and dfs; centroids). The two branches are
+    independent, so their top-20 lists are collected at once from two
+    driver threads; ``rrf_fuse`` then ranks the union on the driver, and
+    the top-k comes back as a local frame (rank, doc_id, rrf_score): the
+    query has run when this returns."""
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        lex = pool.submit(lambda: serve_bm25(spark, index_dir, terms, k=20).collect())
+        sem = pool.submit(
+            lambda: query_ivf_index(
+                spark, os.path.join(index_dir, "ivf"), [query_vec], k=20, nprobe=8
+            ).collect()
+        )
+        lex_ids = [r.doc_id for r in lex.result()]
+        sem_ids = [r.neighbor_id for r in sorted(sem.result(), key=lambda r: r.rank)]
+    top = rrf_fuse(lex_ids, sem_ids)[:k]
+    return arrow_local_frame(
+        spark,
+        [(rank, d, score) for rank, (d, score) in enumerate(top, 1)],
+        "rank long, doc_id long, rrf_score double",
     )
 
 

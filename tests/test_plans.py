@@ -134,8 +134,8 @@ NESTED_LOOP_WHITELIST = {
     "embedding_cosine_topk",       # broadcast 5 query vectors x corpus (exact baseline)
     "embedding_ivf_ann",           # broadcast queries x broadcast(<=8 centroids): probe pass
     "embedding_ivf_ann_trained",   # same with trained centroids
-    "embedding_cell_stats",        # crossJoin(broadcast(<=8 centroids)) scoring
-                                   # + 1-row corpus-count scalar join
+    "embedding_cell_stats",        # 1-row corpus-count scalar join only; the
+                                   # assignment is the map-only kernel pass
     "embedding_near_dup",          # the documented all-pairs small-n exact twin
     "text_tfidf_top_terms",        # |vocab| x 1-row corpus count (scalar join)
     "embedding_two_level_agreement",  # coarse routing: every two-level

@@ -10,7 +10,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from aws_glue_etl_sample_hist_spark.io.sources import read_tier
+from aws_glue_etl_sample_hist_spark.io.sources import read_small_tier, read_tier
+from aws_glue_etl_sample_hist_spark.operators._local import LOCAL_CAP
 from aws_glue_etl_sample_hist_spark.plans.curation import run_curation
 from aws_glue_etl_sample_hist_spark.plans.medallion import run_medallion
 from aws_glue_etl_sample_hist_spark.plans.retrieval import run_retrieval
@@ -86,3 +87,22 @@ def test_read_tier_refuses_a_file_spark_did_not_write(spark, tmp_path):
     pq.write_table(pa.table({"a": [1, 2]}), str(foreign / "part-0.parquet"))
     with pytest.raises(ValueError, match="no Spark schema"):
         read_tier(spark, str(foreign))
+
+
+def test_read_small_tier_reads_up_to_the_cap_and_names_an_over_cap_tier(tmp_path):
+    """The driver-local reader sums the footers' row counts over every file
+    before it reads a page: a tier of exactly LOCAL_CAP rows reads whole,
+    one more row raises ValueError naming the path."""
+    tier = tmp_path / "small"
+    tier.mkdir()
+    half = LOCAL_CAP // 2
+    pq.write_table(pa.table({"a": list(range(half))}), str(tier / "part-0.parquet"))
+    pq.write_table(
+        pa.table({"a": list(range(half, LOCAL_CAP))}), str(tier / "part-1.parquet")
+    )
+    (tier / "_SUCCESS").write_text("")
+    assert read_small_tier(str(tier)).column("a").to_pylist() == list(range(LOCAL_CAP))
+    pq.write_table(pa.table({"a": [LOCAL_CAP]}), str(tier / "part-2.parquet"))
+    with pytest.raises(ValueError, match="LOCAL_CAP") as exc:
+        read_small_tier(str(tier))
+    assert str(tier) in str(exc.value)

@@ -4,20 +4,41 @@ in-plan operator over the same cleaned corpus."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
+from aws_glue_etl_sample_hist_spark.io.sources import footer_rows
+from aws_glue_etl_sample_hist_spark.operators.ann_index import query_ivf_index
 from aws_glue_etl_sample_hist_spark.plans.retrieval import (
     QUERY_TERMS,
     _cleaned,
+    _term_dir,
+    build_postings,
+    rrf_fuse,
+    rrf_score,
     run_retrieval,
     serve_bm25,
     serve_hybrid,
 )
 
 
-def test_retrieval_pipeline_end_to_end(spark, sf_small, tmp_path):
-    out = str(tmp_path / "retr")
-    walls = run_retrieval(spark, sf_small, out)
+@pytest.fixture(scope="module")
+def retrieval_run(spark, sf_small, tmp_path_factory):
+    """One retrieval DAG run over sf_small: (index dir, per-task walls)."""
+    out = str(tmp_path_factory.mktemp("retr") / "retr")
+    return out, run_retrieval(spark, sf_small, out)
+
+
+def _query_vec(spark, sf_small, vec_id=0):
+    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
+    row = emb.filter(F.col("vec_id") == vec_id).first()
+    return (vec_id, [float(x) for x in row.embedding])
+
+
+def test_retrieval_pipeline_end_to_end(spark, sf_small, retrieval_run):
+    out, walls = retrieval_run
     assert {k.split(".")[0] for k in walls} == {"r0", "r1", "r2"}
 
     # persisted-postings BM25 == the in-plan operator over the SAME corpus
@@ -37,9 +58,7 @@ def test_retrieval_pipeline_end_to_end(spark, sf_small, tmp_path):
     # artifacts alone reproduces it (restartability of r2)
     served = spark.read.parquet(f"{out}/serve")
     assert served.count() == 10
-    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    qvec = (0, [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding])
-    again = serve_hybrid(spark, out, QUERY_TERMS, qvec)
+    again = serve_hybrid(spark, out, QUERY_TERMS, _query_vec(spark, sf_small))
     assert {tuple(r) for r in again.collect()} == {tuple(r) for r in served.collect()}
 
     # lexical pruning contract: a 1-term query's postings scan reads only
@@ -54,29 +73,138 @@ def test_retrieval_pipeline_end_to_end(spark, sf_small, tmp_path):
     assert one and all("/term=spark/" in r.f for r in one)
 
 
-def test_serve_mmr_from_artifacts(spark, sf_small, tmp_path):
+def test_serve_mmr_from_artifacts(spark, sf_small, retrieval_run):
     """The diversified serving stage: valid top-10 over the hybrid
     top-20, candidate vectors read from the persisted IVF artifact, and
     re-serving from the same artifacts is deterministic."""
-    from pyspark.sql import functions as F
+    from aws_glue_etl_sample_hist_spark.plans.retrieval import serve_mmr
 
-    from aws_glue_etl_sample_hist_spark.catalog import load_table
-    from aws_glue_etl_sample_hist_spark.plans.retrieval import (
-        QUERY_TERMS,
-        run_retrieval,
-        serve_mmr,
-    )
-
-    out = str(tmp_path / "ret")
-    run_retrieval(spark, sf_small, out)
+    out, _ = retrieval_run
     served = spark.read.parquet(f"{out}/serve_mmr")
     rows = sorted(served.collect(), key=lambda r: r.mmr_rank)
     assert [r.mmr_rank for r in rows] == list(range(1, len(rows) + 1))
     assert len(rows) == min(10, served.count())
-    emb = load_table(spark, sf_small, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    again = serve_mmr(spark, out, QUERY_TERMS, (0, [float(x) for x in qrow.embedding]))
+    again = serve_mmr(spark, out, QUERY_TERMS, _query_vec(spark, sf_small))
     assert {tuple(r) for r in again.collect()} == {tuple(r) for r in served.collect()}
+
+
+def _jobs(spark) -> int:
+    """Spark jobs submitted so far (DAGScheduler.numTotalJobs, as bench.py
+    reads it): jobs started from any driver thread are counted."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def test_serve_hybrid_job_budget(spark, sf_small, retrieval_run):
+    """A hybrid query starts at most 7 Spark jobs, the two branches' scans,
+    exchanges and broadcasts and the local result: the stats, the
+    centroids and the per-term df are read from the index on the driver
+    and must never come back as per-query jobs."""
+    out, _ = retrieval_run
+    qvec = _query_vec(spark, sf_small)
+    j0 = _jobs(spark)
+    rows = serve_hybrid(spark, out, QUERY_TERMS, qvec).collect()
+    assert _jobs(spark) - j0 <= 7
+    assert [r["rank"] for r in rows] == list(range(1, 11))
+
+
+def test_rrf_score_equals_catalyst_for_every_rank_pair(spark):
+    """Ranks run 1..20 or are absent: every one of the 21 x 21 (lex_rank,
+    sem_rank) pairs fuses to exactly the Catalyst expression the driver
+    fusion replaced (HALF_UP round included)."""
+    ranks = [None, *range(1, 21)]
+    pairs = [(l, s) for l in ranks for s in ranks]
+    df = spark.createDataFrame(pairs, "l long, s long")
+    want = {
+        (r.l, r.s): r.rrf
+        for r in df.select(
+            "l",
+            "s",
+            F.round(
+                F.coalesce(1.0 / (60.0 + F.col("l")), F.lit(0.0))
+                + F.coalesce(1.0 / (60.0 + F.col("s")), F.lit(0.0)),
+                6,
+            ).alias("rrf"),
+        ).collect()
+    }
+    assert len(want) == 441
+    for (l, s), rrf in want.items():
+        assert rrf_score(l, s) == rrf, (l, s)
+
+
+def test_rrf_fuse_orders_by_score_then_id(spark):
+    """Equal fused scores tie-break by doc id ascending -- the order of the
+    Catalyst full-outer-join + window it replaced, checked on lists whose
+    ids swap ranks (equal sums) and sit in one list only."""
+    lex = [5, 7, 30, 2, 11, 40]
+    sem = [7, 5, 2, 31, 41, 11]
+    got = rrf_fuse(lex, sem)
+    # 5 and 7 swap ranks 1/2: equal scores, 5 first
+    assert [d for d, _ in got[:2]] == [5, 7] and got[0][1] == got[1][1]
+
+    def ranked(ids, name):
+        return spark.createDataFrame(
+            [(d, r) for r, d in enumerate(ids, 1)], f"doc_id long, {name} long"
+        )
+
+    fused = ranked(lex, "l").join(ranked(sem, "s"), "doc_id", "full_outer").select(
+        "doc_id",
+        F.round(
+            F.coalesce(1.0 / (60.0 + F.col("l")), F.lit(0.0))
+            + F.coalesce(1.0 / (60.0 + F.col("s")), F.lit(0.0)),
+            6,
+        ).alias("rrf"),
+    )
+    want = [
+        (r.doc_id, r.rrf)
+        for r in fused.orderBy(F.col("rrf").desc(), F.col("doc_id").asc()).collect()
+    ]
+    assert got == want
+
+
+def test_footer_df_equals_posting_counts(spark, tmp_path):
+    """The df read from a term partition's footers equals groupBy(term)
+    .count() for every term, including terms Spark escapes in the
+    directory name."""
+    docs = spark.createDataFrame(
+        [
+            (1, "a/b=c% spark spark merge"),
+            (2, "a/b=c% x?y #tag spark"),
+            (3, "100% {q}:[r]^ 'quoted' back\\slash spark"),
+            (4, "window merge merge"),
+        ],
+        "doc_id long, text string",
+    )
+    out = str(tmp_path / "idx")
+    build_postings(docs, out)
+    # the fixture really exercises the escaping: the raw name is not a dir
+    assert os.path.isdir(os.path.join(out, "postings", "term=a%2Fb%3Dc%25"))
+    want = {
+        r.term: r["count"]
+        for r in spark.read.parquet(os.path.join(out, "postings"))
+        .groupBy("term")
+        .count()
+        .collect()
+    }
+    assert {"a/b=c%", "x?y", "#tag", "100%", "back\\slash"} <= set(want)
+    assert {t: footer_rows(_term_dir(out, t)) for t in want} == want
+    assert footer_rows(_term_dir(out, "absent")) == 0
+
+
+def test_serve_hybrid_with_no_indexed_term_is_vector_only(spark, sf_small, retrieval_run):
+    """A query whose terms are all absent from the index (df 0) returns the
+    vector branch's ranking alone, with no exception."""
+    out, _ = retrieval_run
+    qvec = _query_vec(spark, sf_small)
+    got = [
+        tuple(r)
+        for r in serve_hybrid(spark, out, ["no-such-term", "a/b=c%"], qvec).collect()
+    ]
+    sem = query_ivf_index(spark, os.path.join(out, "ivf"), [qvec], k=20, nprobe=8)
+    want = [
+        (r["rank"], r.neighbor_id, rrf_score(None, r["rank"]))
+        for r in sem.orderBy("rank").limit(10).collect()
+    ]
+    assert got == want
 
 
 def test_semantic_dedup_trained_prune_contract(spark, sf_small):
